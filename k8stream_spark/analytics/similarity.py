@@ -2844,6 +2844,7 @@ def _pca_cov_means(
     d(d+1)/2 moment-cell frame, so callers that need cov AND means
     (the r16 projections) pay exactly one corpus scan."""
     g = _pca_moment_cells(embeddings, dim, vec_col, id_col)
+    # With _cache.EAGER off, g is lazy and the two collects scan the corpus twice.
     cov: dict = {}
     for r in _pca_cells_from_moments(g).collect():
         i, j, c = int(r["i"]), int(r["j"]), int(r["c_micro"])

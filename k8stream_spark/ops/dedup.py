@@ -60,6 +60,10 @@ def dedup_streaming(
 
     Event-time watermarks require TIMESTAMP (not NTZ) — cast through the
     pinned-UTC session first.
+
+    The state store keeps one instance per shuffle partition, each opened
+    and committed every trigger; the count is the session's at the
+    query's first start and the checkpoint keeps it on restart.
     """
     df = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     return df.withWatermark(ts_col, f"{ttl_seconds} seconds").dropDuplicates(

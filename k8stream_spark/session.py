@@ -1,15 +1,20 @@
 """SparkSession factory with the engine's standard configuration.
 
-Local test/bench runs use ``local[$SPARK_GRAFT_CPUS]``; on a real cluster the
+Local test/bench runs use ``local[cpu_count()]``; on a real cluster the
 same builder options apply unchanged (the master is injected by spark-submit).
 Every knob here is chosen for the 100 TB posture:
 
   * AQE on — runtime coalescing, skew-join splitting, dynamic join-strategy
     demotion are essential once partition statistics are only known at run
     time on big inputs.
-  * ``spark.sql.shuffle.partitions`` defaults to the constant 32 (matching
-    the local[32] test harness); at cluster scale AQE's coalescing makes the
-    initial number a ceiling rather than a tuning knob.
+  * ``spark.sql.shuffle.partitions`` defaults to ``cpu_count()``, one
+    partition per core the session runs on; an explicit
+    ``shuffle_partitions=`` wins.  For batch plans AQE's coalescing makes
+    the number a ceiling rather than a tuning knob.  Stateful streaming
+    operators are outside AQE: a query's first start freezes the count
+    into its checkpoint (one state-store instance per partition per
+    trigger), and every restart from that checkpoint keeps it whatever
+    the session says.
   * Arrow enabled — every pandas_udf / mapInPandas boundary is Arrow-batched.
   * Session timezone pinned UTC so event-time semantics are stable and the
     DuckDB oracle (UTC-naive timestamps) compares cleanly.
@@ -21,11 +26,13 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = 32
-
 
 def cpu_count() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Cores for ``local[N]`` and the shuffle-partition default:
+    ``$SPARK_GRAFT_CPUS`` when set, else the cores this process may run
+    on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
 
 
 def get_spark(
@@ -36,8 +43,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    ``master=None`` → ``local[$SPARK_GRAFT_CPUS]`` for local runs; pass an
+    ``master=None`` → ``local[cpu_count()]`` for local runs; pass an
     explicit master (or let spark-submit inject one) on a cluster.
+    ``shuffle_partitions=None`` → ``cpu_count()``.
     """
     n = cpu_count()
     builder = (
@@ -45,7 +53,7 @@ def get_spark(
         .master(master or f"local[{n}]")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or n),
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -248,6 +248,10 @@ def sink_foreach_batch(
     flush units (the count half of W1) and hand each to the Flusher as
     NDJSON — one artifact per chunk, named by a nanosecond ident (W2).
 
+    ``toLocalIterator`` runs one Spark job per partition of the batch, one
+    after another, so the fetch costs a job per shuffle partition
+    (``session.get_spark``) on top of the rows it carries.
+
     NOTE on scale: this driver-side path exists for reference-parity
     sinks (one named object per batch).  The throughput path at 100 TB is
     ``batch_df.write.json(path)`` — fully distributed — which callers get

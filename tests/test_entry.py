@@ -101,6 +101,24 @@ def test_all_queries_run_at_sf0001(spark):
         assert n >= 0, name
 
 
+def test_j5_count_equals_reverse_index_set_size(spark):
+    """_q_j5 counts J4 pairs per pod; that equals the size of the pod's
+    service set only while J4 emits each (service, pod) pair once."""
+    from k8stream_spark.ops import joins
+
+    got = {
+        r.pod_uid: (r.n_services, r.first_service)
+        for r in entrymod._q_j5(spark, SF_DIR).collect()
+    }
+    index = joins.pod_service_reverse_index(entrymod._j4_pairs(spark, SF_DIR))
+    want = {
+        int(r.pod_uid): (len(r.service_uids), r.service_uids[0])
+        for r in index.collect()
+    }
+    assert got == want
+    assert sum(n > 1 for n, _ in got.values()) > 0  # multi-service pods
+
+
 # Every driver hash-red row ever recorded except one traced back to an
 # oracle output column whose DuckDB type has no Spark twin: a bare
 # SUM(BIGINT) is HUGEINT (int128), and DECIMAL survives ROUND/means —

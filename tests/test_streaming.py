@@ -97,6 +97,83 @@ def test_streaming_distributed_sink(spark, objects_df, nodes_df, tmp_path):
     assert {r["id"] for r in rows} == {"e1", "e3"}
 
 
+def _event(uid: str, second: int) -> dict:
+    return dict(uid=uid, creation_ts=f"2024-01-01T00:00:{second:02d}",
+                namespace="default", reason="Scheduled", message=uid,
+                source_component="sched", source_host="node-a", ref_uid="o1",
+                ref_name="pod-1", ref_namespace="default", ref_kind="Pod",
+                ref_api_version="v1")
+
+
+def test_dedup_state_keeps_checkpointed_partition_count(spark, tmp_path):
+    """A restart under a different session partition count keeps the
+    count stored in the checkpoint, and with it the dedup state."""
+    from k8stream_spark.ops.dedup import dedup_streaming
+    from k8stream_spark.schemas import K8S_EVENT_SCHEMA
+
+    src = tmp_path / "src"
+    src.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+
+    def write(name: str, events: list[dict]) -> None:
+        (src / name).write_text("".join(json.dumps(e) + "\n" for e in events))
+
+    def run(partitions: int) -> tuple[list[str], set[int]]:
+        seen: list[str] = []
+        spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
+        stream = spark.readStream.schema(K8S_EVENT_SCHEMA).json(str(src))
+        q = (
+            dedup_streaming(stream, key="uid", ts_col="creation_ts")
+            .writeStream.outputMode("append")
+            .foreachBatch(lambda df, _bid: seen.extend(r.uid for r in df.collect()))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120)
+        stored = {
+            op["numShufflePartitions"]
+            for p in q.recentProgress
+            for op in p["stateOperators"]
+        }
+        return seen, stored
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        write("a.json", [_event("e1", 0), _event("e2", 1)])
+        first, first_parts = run(8)
+        write("b.json", [_event("e1", 0), _event("e3", 2)])  # e1 re-delivered
+        second, second_parts = run(4)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+
+    assert sorted(first) == ["e1", "e2"]
+    assert second == ["e3"]
+    assert first_parts == second_parts == {8}
+
+
+def test_sink_foreach_batch_rechunks_in_partition_order(spark):
+    """Flushes carry batch_size records each, the last one the rest, and
+    concatenate to the batch's rows in partition order."""
+    from k8stream_spark.io.ndjson import ndjson_bytes
+
+    rows = [(i, f"n{i}", {"k": str(i)}) for i in range(10)]
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 4),
+        "id bigint, name string, labels map<string,string>",
+    )
+    assert df.rdd.getNumPartitions() == 4
+    flushes: list[bytes] = []
+    sink = MemorySink(on_fetch=lambda _ident, data: flushes.append(data))
+
+    sink_foreach_batch(sink, uid="chunks", batch_size=3)(df, 0)
+
+    assert [len(f.splitlines()) for f in flushes] == [3, 3, 3, 1]
+    assert b"".join(flushes) == ndjson_bytes(
+        dict(id=i, name=n, labels=m) for i, n, m in rows
+    )
+
+
 def _write_services(path: str) -> None:
     services = [
         dict(uid="s1", name="web", namespace="default", resource_version="10",
