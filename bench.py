@@ -3,27 +3,27 @@
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
-Three tiers (r8 restructure — VERDICT r7 items 6 and 8):
+Three tiers:
 
 * HEADLINE (``BENCH_QUERIES``): the scale-path queries the engine would
   actually run at 100 TB — reference-parity E2E, heavy OLAP joins/aggs,
   windows, and the LLM-pipeline operators in their bucketed/LSH forms.
   min-of-$SPARK_GRAFT_BENCH_REPS (default 3); the headline ``value`` is
-  this tier's total, so round-over-round movement tracks the queries
-  that matter at scale.
+  this tier's total, so run-over-run movement tracks the queries that
+  matter at scale.
 * BASELINE (``BASELINE_QUERIES``): the declared exact O(n²) oracle
   anchors (brute-force top-k, the exact mutual-kNN graph and its CC
   composition).  Timed the same way but totaled SEPARATELY — their
   quadratic cost is a correctness fixture, not an engine property, and
-  folding them into the headline hid scale-path movement behind ~7 s of
-  deliberate quadratic work (r7).
+  folding them into the headline hides scale-path movement behind ~7 s
+  of deliberate quadratic work.
 * TIER 2: every other registered query, 1 rep each, so NO query ships
   performance-unmeasured.  Full per-query timings for all tiers go to
   stderr and to ``BENCH_FULL_latest.json`` next to this file; the
   stdout line carries only the tier totals plus a compact regression
-  list (tier-2 queries >2x their newest committed BENCH_r*.json time) —
-  the r5 incident showed an oversized stdout line loses the round its
-  official number.
+  list (tier-2 queries >2x their committed BENCH_FULL_latest.json
+  time) — an oversized stdout line is cut by a consumer that keeps
+  only the output's tail.
 
 Noise control: headline/baseline reps report the MIN — warm repeats
 converge tightly while single-shot timings at sf0.1 swing +-30% on
@@ -31,35 +31,30 @@ JIT/footer-cache luck.  The cache is cleared between repeats so
 persisted intermediates (LSH signatures, IVF centroids) are re-earned
 every run, never carried into the min.
 
-Drift control (r9 verdict item 1): a fixed CPU-bound calibration
-canary (codegen hash+xor over ``spark.range``, min-of-3 at session
-start AND end) ships in every BENCH json; the tier-2 regression flag
-divides out canary_now/canary_prev so a slower/faster BOX no longer
-masquerades as a code regression — r6/r8/r9 each burned a round of
-adjudication proving exactly that with worktree side-by-side reruns.
+Drift control: a fixed CPU-bound calibration canary (codegen
+hash+xor over ``spark.range``, min-of-3 at session start AND end)
+ships in every BENCH json; the tier-2 regression flag divides out
+canary_now/canary_prev so a slower/faster BOX does not masquerade as a
+code regression.
 
-Confirm-before-flag (r10 task 2, proven necessary by the r10/r11
-same-code 2.7x false positive on ``mm_blob_meta_pandas``): canary
-normalization fixes box-level drift but not per-query 1-rep noise —
-sub-second Python-worker queries swing +-2-3x on scheduler luck.  So
+Confirm-before-flag: canary normalization fixes box-level drift but
+not per-query 1-rep noise — sub-second Python-worker queries swing
++-2-3x on scheduler luck (same-code 2.7x on ``mm_blob_meta_pandas``).  So
 any tier-2 query whose first-pass time would flag is RE-TIMED min-of-3
 in the same session; it ships in ``tier2_flagged_vs_prev`` only if the
 confirmed min still exceeds the threshold, and the re-time mins ship
 in ``tier2_flag_confirm`` either way so the adjudication trail is in
 the artifact, not a human's scrollback.
 
-Re-baseline rule (r15, after three straight rounds of stale-reference
-drift bisects): when the session canary drifts >10% from the committed
-reference's ``canary_sec`` (``canary_ratio_vs_prev`` outside
+Re-baseline rule: when the session canary drifts >10% from the
+committed reference's ``canary_sec`` (``canary_ratio_vs_prev`` outside
 [0.9, 1.1]), re-run the full bench and COMMIT the fresh
-``BENCH_FULL_latest.json`` that round — a reference older than the
-box's drift budget costs more judge time than it saves.  The r15
-reference: headline 90.759 s / canary 0.691 (BENCH_NOISE.md).
+``BENCH_FULL_latest.json`` — a reference older than the box's drift
+budget costs more bisecting than it saves (BENCH_NOISE.md).
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import re
@@ -101,7 +96,7 @@ BENCH_QUERIES = (
     "docs_dedup_minhash_lsh",
     "emb_cosine_near_dup_lsh",
     "mm_blob_meta",
-    # r3 surface
+    # events / documents / embeddings surface
     "events_funnel",
     "events_asof_last_purchase",
     "docs_dedup_clusters",
@@ -109,10 +104,10 @@ BENCH_QUERIES = (
     "docs_pack_chunks",
     "emb_class_centroids",
     "emb_cosine_topk_ivf",
-    # r6 surface
+    # boilerplate removal and semantic dedup
     "docs_remove_boilerplate",
     "docs_semantic_dedup",
-    # full TPC-H layer (r5/r6: the 9 late-graded + the last-5 shapes)
+    # full TPC-H layer
     "q4_order_priority_check",
     "q10_returned_items",
     "q12_priority_by_flag",
@@ -130,9 +125,9 @@ BENCH_QUERIES = (
     "q7_volume_shipping",
     "q8_market_share",
     "q9_product_type_profit",
-    # r7 surface (the row-multiplying / multi-shuffle new ops; the pure
-    # single-scan ones — gopher filters, length histogram — track q6-like
-    # shapes already in the set)
+    # row-multiplying / multi-shuffle ops (the pure single-scan ones —
+    # gopher filters, length histogram — track q6-like shapes already in
+    # the set)
     "docs_chunk_overlap",
     "docs_dsir_importance",
     "events_retention_cohorts",
@@ -144,7 +139,7 @@ BENCH_QUERIES = (
     "docs_hybrid_rrf",
     # continuous-ingestion dedup (new-batch × reference-corpus LSH)
     "docs_dedup_incremental",
-    # late-r7 surface: binned range join, salted distinct, CUBE report
+    # binned range join, salted distinct, CUBE report
     "events_window_range_counts",
     "events_salted_distinct_counts",
     "docs_source_lang_cube",
@@ -155,7 +150,7 @@ BENCH_QUERIES = (
     "docs_remove_duplicate_spans",
     # the composed end-to-end curation decision (CC pass + flag joins)
     "docs_curation_pipeline",
-    # r8 surface: the LSH graph + its CC composition (the 100 TB cluster
+    # the LSH graph + its CC composition (the 100 TB cluster
     # pipeline, replacing the exact twins that moved to the baseline
     # tier), and the containment inverted-index join
     "emb_knn_graph_mutual_lsh",
@@ -176,12 +171,12 @@ def spread_flags(
     medians: dict[str, float], maxes: dict[str, float], factor: float = 2.0
 ) -> list[str]:
     """Queries whose within-run max/MEDIAN rep spread exceeds
-    ``factor`` — the bimodal-slow-mode detector (VERDICT r15 item 3).
+    ``factor`` — the bimodal-slow-mode detector.
     max/median rather than max/min: the first rep legitimately carries
     codegen compile (healthy max/min reaches 3x on sub-second queries)
     but the median of 3+ reps is past JIT, so a max far above it is a
-    real slow mode.  Calibration on the r15 artifacts: every healthy
-    headline query measured <= 1.80, the two pathologies 2.49 and 8.37.
+    real slow mode.  Calibration at sf0.1: every healthy headline
+    query measured <= 1.80, the two known pathologies 2.49 and 8.37.
     Pure so the seeded unit test can drive it without a Spark
     session."""
     return sorted(
@@ -210,11 +205,10 @@ def _newest_committed_times() -> tuple[dict[str, float], float]:
 
     Primary source: the COMMITTED ``BENCH_FULL_latest.json`` via
     ``git show HEAD:`` — bench.py overwrites the working-tree copy at
-    the end of every run, so a second run in the same round would
-    otherwise compare against the immediately-preceding run of the
-    same code instead of the previous committed round (r9 advice).
-    Falls back to the on-disk file (fresh clone / no git), then to the
-    newest BENCH_r*.json stdout map (headline-only, pre-r8 rounds).
+    the end of every run, so a second run would otherwise compare
+    against the immediately-preceding run of the same code instead of
+    the previous committed run.  Falls back to the on-disk file (fresh
+    clone / no git); with neither, there is no reference.
 
     Returns ``(times, canary_sec)``; canary_sec is 0.0 when the
     reference predates the canary (flag logic then skips
@@ -256,29 +250,7 @@ def _newest_committed_times() -> tuple[dict[str, float], float]:
             except (ValueError, TypeError):
                 pass
             return ref, canary
-    best: tuple[int, dict[str, float]] = (0, {})
-    for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path, encoding="utf-8") as fh:
-                data = json.load(fh)
-            # The driver wraps the bench stdout line: {"tail": "...",
-            # "parsed": {...}} — unwrap before looking for "queries".
-            queries = data.get("queries")
-            if not queries and isinstance(data.get("parsed"), dict):
-                queries = data["parsed"].get("queries")
-            if not queries and isinstance(data.get("tail"), str):
-                line = data["tail"].strip().rsplit("\n", 1)[-1]
-                queries = json.loads(line).get("queries")
-        except (OSError, ValueError, AttributeError):
-            continue
-        if rnd > best[0] and isinstance(queries, dict) and queries:
-            best = (rnd, {k: float(v) for k, v in queries.items()})
-    return best[1], 0.0
-
+    return {}, 0.0
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -314,10 +286,9 @@ def main() -> None:
         # the ContextCleaner only reaps those after a driver GC
         # notices the references died.  Forcing one here keeps each
         # rep from inheriting the previous reps'/queries'
-        # executor-side litter (the r5 late-session tail: same query
-        # 6s isolated, 30-60s reps late in the 41-query session; the
-        # iterative CC query alone leaves ~45 dead localCheckpoint
-        # RDDs per rep).
+        # executor-side litter (observed: the same query 6 s isolated,
+        # 30-60 s late in a long session; the iterative CC query alone
+        # leaves ~45 dead localCheckpoint RDDs per rep).
         spark.sparkContext._jvm.System.gc()
         return dt
 
@@ -332,7 +303,7 @@ def main() -> None:
         for name in names:
             reps_here = 3 if name in min3 else n_reps
             samples = [run_once(name) for _ in range(reps_here)]
-            # Tier-2 de-noising (r8 verdict item 2): a single-shot
+            # Tier-2 de-noising: a single-shot
             # timing over ~2 s is dominated by first-touch costs
             # (codegen, footer cache, broadcast build) — e.g.
             # a1_service_pod_map read 7.31 s single-shot while its
@@ -344,7 +315,7 @@ def main() -> None:
             timings[name] = round(samples[0], 3)
             # Spread disclosed alongside the min so a regression that
             # only widens the tail (or a min hiding a flaky rep) stays
-            # visible in round-over-round diffs.
+            # visible in run-over-run diffs.
             medians[name] = round(samples[len(samples) // 2], 3)
             maxes[name] = round(samples[-1], 3)
             reps_used[name] = len(samples)
@@ -363,8 +334,8 @@ def main() -> None:
     # Known high-variance tier-2 set (BENCH_NOISE.md): sub-second
     # Python-worker (Arrow batch) queries swing up to 2.7x same-code on
     # worker spin-up luck — a 1-rep min is not a measurement there.
-    # Promote them to min-of-3 so round-over-round trend reading stops
-    # flapping (r12 verdict task 6); tier2_reps in the artifact shows it.
+    # Promote them to min-of-3 so run-over-run trend reading does not
+    # flap; tier2_reps in the artifact shows it.
     high_variance = {n for n in tier2_names if n.startswith("mm_")}
     t2_timings, _, t2_maxes, t2_reps, t2_total = run_tier(
         tier2_names, 1, heavy_extra_rep=True, min3=high_variance
@@ -373,23 +344,20 @@ def main() -> None:
     canary_end = _canary(spark)
     canary = round((canary_start + canary_end) / 2.0, 3)
 
-    # Within-run spread flag (r16, VERDICT r15 item 3): both r15
-    # pathologies (emb_semantic_clusters_lsh med 8.15 / max 20.28,
-    # docs_containment_pairs med 2.54 / max 21.27) were bimodal WITHIN
-    # one run — the min looked healthy and only a hand-diff of
-    # headline_max found them.  Any headline/baseline query whose
-    # max/median exceeds 2x ships in ``headline_flagged_spread`` so
-    # the artifact itself raises the flag.
+    # Within-run spread flag: slow modes can be bimodal WITHIN one run
+    # (emb_semantic_clusters_lsh med 8.15 / max 20.28,
+    # docs_containment_pairs med 2.54 / max 21.27) — the min looks
+    # healthy and only headline_max shows them.  Any headline/baseline
+    # query whose max/median exceeds 2x ships in
+    # ``headline_flagged_spread`` so the artifact itself raises the flag.
     flagged_spread = spread_flags(
         {**medians, **b_medians}, {**maxes, **b_maxes}
     )
 
-    # Tier-2 regressions vs the newest committed round, NORMALIZED by
-    # the calibration-canary ratio: three straight rounds (r6 wobble,
-    # r8 "+24%", r9's five phantom ~2x flags) the raw comparison fired
-    # on environmental drift — a worktree checkout of old code
-    # reproduced the "regressed" times — and a human had to adjudicate
-    # with side-by-side reruns.  The canary measures THIS box's CPU
+    # Tier-2 regressions vs the committed reference, NORMALIZED by the
+    # calibration-canary ratio: the raw comparison fires on
+    # environmental drift (a checkout of old code reproduces the
+    # "regressed" times).  The canary measures THIS box's CPU
     # throughput at run time; dividing out canary_now/canary_prev
     # makes the 2x threshold compare code against code, not box
     # against box.  Ratio clamped to [1/3, 3] so a broken canary
@@ -405,7 +373,7 @@ def main() -> None:
         if n in prev and prev[n] > 0.2 and t > 2.0 * prev[n] * ratio
     )
     # Confirm-before-flag: a 1-rep sub-second timing cannot support a
-    # 2x verdict (r10/r11 proved it with a same-code 2.7x swing).
+    # 2x verdict (same-code 2.7x swings are observed).
     # Re-time each candidate min-of-3 NOW, same session; only a
     # reproducible slowdown ships as a flag.  The re-time also
     # replaces the query's reported time (min aggregation — more
@@ -418,8 +386,8 @@ def main() -> None:
         worst = round(max(confirm_times), 3)
         flag_confirm[n] = best
         # Always record the extra reps (and refresh the max) — the 3
-        # confirm runs are real samples whether or not the min improved
-        # (ADVICE r12).  Note: confirm re-times run AFTER canary_end,
+        # confirm runs are real samples whether or not the min
+        # improved.  Note: confirm re-times run AFTER canary_end,
         # outside the window the canary ratio normalizes (see "agg").
         t2_reps[n] = t2_reps.get(n, 1) + 3
         t2_maxes[n] = max(t2_maxes.get(n, worst), worst)
@@ -462,14 +430,12 @@ def main() -> None:
     ) as fh:
         json.dump(full, fh, indent=1, sort_keys=True)
     # Full detail also to STDERR; the driver-facing headline JSON must
-    # be the LAST stdout line and stay compact — the driver keeps only
-    # the last ~2000 stdout chars, and r8's line (full 61-entry
-    # headline map + baseline map) overflowed it: the tail was cut
-    # mid-JSON and the round's official number parsed as null (the r5
-    # incident, repeated).  The stdout "queries" map is therefore
-    # BOUNDED to the 12 slowest headline entries (~400 bytes); complete
-    # per-query maps for every tier live in BENCH_FULL_latest.json
-    # (committed each round) and on stderr.
+    # be the LAST stdout line and stay compact — a consumer that keeps
+    # only the last ~2000 stdout chars cuts a full 61-entry headline
+    # map mid-JSON, and the headline number parses as null.  The
+    # stdout "queries" map is therefore BOUNDED to the 12 slowest
+    # headline entries (~400 bytes); complete per-query maps for every
+    # tier live in BENCH_FULL_latest.json and on stderr.
     print(json.dumps(full), file=sys.stderr)
     payload = {
         "metric": "headline_queries_total",
@@ -489,9 +455,9 @@ def main() -> None:
         "tier2_n": len(tier2_names),
         "tier2_flagged_vs_prev": flagged[:8],
     }
-    # Shrink to fit the driver's ~2000-char stdout tail instead of
-    # asserting after the whole run (r9 advice: an assert here loses
-    # the round's number over a long query name, and -O strips it).
+    # Shrink to fit a ~2000-char stdout tail instead of asserting after
+    # the whole run (an assert here would lose the run's number over a
+    # long query name, and -O strips it).
     # Drop order: flagged list first, then the slowest-queries map.
     line = json.dumps(payload)
     while len(line) >= 1500 and payload["tier2_flagged_vs_prev"]:

@@ -49,15 +49,13 @@ def _dot_fixed(a: Column, b: Column, dim: int) -> Column:
     wider embeddings pass, reads past the array end yield NULL exactly
     like the old unrolled ``element_at`` chain).
 
-    r15 opt (guide §1 measure first): the 64-term unrolled
-    element_at-product chain this used to build falls out of
+    A 64-term unrolled element_at-product chain falls out of
     whole-stage codegen on Spark 4 (hugeMethodLimit) and evaluates
     INTERPRETED — measured 2.10 s vs 0.32 s for this higher-order
     ``aggregate`` over 600 k pairs × 64 dims on local[32]; on the
     ~600 k-candidate LSH scoring scans the unrolled form was ~17 µs
-    per pair.  The docstring that used to live here claimed the
-    opposite ratio, measured on an older Spark — re-measure before
-    reverting.  The fold below performs the IDENTICAL IEEE op sequence
+    per pair.  Older Sparks measured the opposite ratio — re-measure
+    before unrolling.  The fold below performs the IDENTICAL IEEE op sequence
     left to right (0.0 + a₁b₁ + a₂b₂ + …; +0.0 as init is exact), so
     results are bit-for-bit unchanged — verified raw-value-identical
     over sampled pairs and by the full DuckDB oracle sweep."""
@@ -138,7 +136,7 @@ def _lsh_tables_needed(
     """UNCAPPED table count for ``min_recall`` — the closed form before
     ``max_tables`` clamps it, split out so ``suggest_lsh_params`` can
     detect when the cap binds (and by how much) without re-deriving the
-    formula (r14 task 2)."""
+    formula."""
     p = 1.0 - math.acos(target_cosine) / math.pi
     p_table = p**bits
     if p_table >= 1.0:
@@ -155,7 +153,7 @@ def suggest_lsh_params(
 ) -> tuple[int, int]:
     """(bits, tables) for hyperplane LSH that hold per-bucket occupancy
     and recall as the corpus grows — the 100 TB tuning law the sf1
-    measurement pinned (SCALE.md r12: fixed bits=6/tables=24 gave
+    measurement pinned (SCALE.md: fixed bits=6/tables=24 gave
     candidate pairs ~n²·tables/2^bits on isotropic vectors, 68× cost
     for 10× data on the mutual-kNN path).
 
@@ -169,10 +167,10 @@ def suggest_lsh_params(
       capped at ``max_tables`` (cost grows linearly with tables; when
       the cap binds a ``RuntimeWarning`` names the achievable recall
       and the escape hatches — raise ``target_bucket`` or fall back to
-      the IVF family, r14 task 2).
+      the IVF family).
 
-    Pure driver-side arithmetic.  Since r13 this IS the LSH operators'
-    default path: ``cosine_near_dup_lsh`` / ``cosine_topk_lsh`` /
+    Pure driver-side arithmetic.  This IS the LSH operators' default
+    path: ``cosine_near_dup_lsh`` / ``cosine_topk_lsh`` /
     ``knn_graph_mutual_lsh`` / ``semantic_clusters_knn_lsh`` auto-tune
     from a corpus count when the caller doesn't pass ``(tables=,
     bits=)`` (see ``_auto_lsh_params``), and the DuckDB oracle replays
@@ -191,8 +189,7 @@ def suggest_lsh_params(
     )
     needed = _lsh_tables_needed(bits, target_cosine, min_recall)
     if needed > max_tables:
-        # r14 task 2 (VERDICT r13): past the cap, recall silently fell
-        # below min_recall with only a docstring to say so.  Warn with
+        # Past the cap, recall falls below min_recall.  Warn with
         # the ACHIEVABLE number so the caller can decide: at
         # target_bucket=32 the cap first binds near n ≈ 66k (bits 12,
         # needs 290 tables) where achievable recall is ~0.76.
@@ -212,17 +209,17 @@ def suggest_lsh_params(
     return bits, tables
 
 
-#: Auto-tune defaults for the LSH operators (r13, VERDICT r12 task 1).
+#: Auto-tune defaults for the LSH operators.
 #: ``target_bucket=32`` is the measured sweet spot on the fixtures: at
 #: sf0.1 (n=2000) it reproduces the old hand-fixed regime almost exactly
 #: (bits=6, tables=21 vs the old 6/24), while at sf1 (n=20000) it yields
 #: (bits=10, tables=122) — ~3× fewer candidate pairs than the fixed
-#: params that measured 25–68× cost for 10× data (SCALE.md r12).
+#: params that measured 25–68× cost for 10× data (SCALE.md).
 #: Candidate work scales ~n^(1+ρ) with ρ = ln(1/p)/ln2 ≈ 0.625 at
 #: cosine 0.45 — the hyperplane-LSH exponent; sub-that needs IVF.
 #: At very large n the 256-table cap binds and recall degrades below
 #: ``min_recall`` — suggest_lsh_params emits a RuntimeWarning naming
-#: the achievable recall (r14); raise target_bucket or use the IVF
+#: the achievable recall; raise target_bucket or use the IVF
 #: family.
 _AUTO_TARGET_BUCKET = 32
 _AUTO_TARGET_COSINE = 0.45
@@ -245,14 +242,14 @@ def _maybe_broadcast(df: DataFrame, n_rows: int) -> DataFrame:
     return F.broadcast(df) if n_rows <= _BCAST_VEC_ROWS else df
 
 
-#: Auto-tune defaults for the IVF probe count (r14, VERDICT r13 task 1
-#: — the nprobe analogue of the r13 LSH bits/tables law).  With the
-#: sample quantizer's ``nlist ~ sqrt(n)/2`` default, a FIXED nprobe is
-#: a shrinking probed fraction, and on the isotropic fixture recall
-#: tracks that fraction almost exactly (measured, scripts/
-#: ivf_nprobe_sweep.py: frac 0.36 → 0.74 mean recall@10 at n=2,000;
-#: frac 0.114 → 0.40 at n=20,000 — the r13 sf1 defect; frac 0.4 → 0.80
-#: at BOTH scales).  Isotropic data has no cluster structure a probe
+#: Auto-tune defaults for the IVF probe count — the nprobe analogue
+#: of the LSH bits/tables law.  With the sample quantizer's
+#: ``nlist ~ sqrt(n)/2`` default, a FIXED nprobe is a shrinking probed
+#: fraction, and on the isotropic fixture recall tracks that fraction
+#: almost exactly (measured, scripts/ivf_nprobe_sweep.py: frac 0.36 →
+#: 0.74 mean recall@10 at n=2,000; frac 0.114 → 0.40 at n=20,000 — a
+#: fixed nprobe fails at sf1; frac 0.4 → 0.80 at BOTH scales).
+#: Isotropic data has no cluster structure a probe
 #: can exploit, so the closed form is a constant FRACTION of nlist:
 #: nprobe = ceil(nlist/2), floored at the old default 8 and capped at
 #: nlist.  Measured at 1/2: mean recall@10 = 0.84 (n=2,000, nprobe 11)
@@ -265,10 +262,10 @@ def _maybe_broadcast(df: DataFrame, n_rows: int) -> DataFrame:
 _AUTO_NPROBE_FLOOR = 8
 _AUTO_PROBE_NUM = 1
 _AUTO_PROBE_DEN = 2
-#: Structure-aware nprobe (r15, VERDICT r14 task 3): the mean top1−top2
+#: Structure-aware nprobe: the mean top1−top2
 #: quantizer-cosine margin of the training sample, point-norm
 #: normalized and micro-quantized, separates the regimes cleanly —
-#: measured (scripts/ivf_nprobe_sweep.py --margins, SCALE.md r15):
+#: measured (scripts/ivf_nprobe_sweep.py --margins, SCALE.md):
 #:   isotropic   n=500/2k/20k  -> margin 0.149 / 0.103 / 0.064
 #:                                (shrinks with nlist: extreme order
 #:                                statistics of random cosines cluster,
@@ -297,11 +294,10 @@ def suggest_ivf_nprobe(
     """Probe count for an IVF search at ``nlist`` cells — all exact
     integer arithmetic so the DuckDB oracle replays the same rule
     (``__spark_entry__._ivf_training_sql`` embeds these module
-    constants at SQL-build time).  Since r14 this IS the IVF operators'
-    default (``cosine_topk_ivf`` / ``ivf_pq_topk`` with
-    ``nprobe=None``).
+    constants at SQL-build time).  This IS the IVF operators' default
+    (``cosine_topk_ivf`` / ``ivf_pq_topk`` with ``nprobe=None``).
 
-    ``margin_micro`` (r15) is the measured quantizer-structure
+    ``margin_micro`` is the measured quantizer-structure
     statistic (``_ivf_sample_margin_micro``): when the training sample
     sits near its centers with clear second-best separation, neighbors
     concentrate in few cells and probing half the index is waste — the
@@ -354,8 +350,8 @@ def _ivf_sample_margin_micro(X: np.ndarray, C: np.ndarray) -> int:
 
 def _auto_nprobe(nlist: int, n_rows: int, margin_micro: int | None = None) -> int:
     """``suggest_ivf_nprobe`` + an INFO log naming the probed fraction
-    and the structure regime (ADVICE r14: default-path callers couldn't
-    see the chosen regime)."""
+    and the structure regime, so default-path callers can see the
+    chosen regime."""
     nprobe = suggest_ivf_nprobe(nlist, margin_micro=margin_micro)
     regime = (
         "no structure statistic (isotropic worst-case law)"
@@ -372,10 +368,10 @@ def _auto_nprobe(nlist: int, n_rows: int, margin_micro: int | None = None) -> in
 
 
 def _check_lsh_params(tables: int | None, bits: int | None) -> None:
-    """Reject a half-pinned LSH regime (ADVICE r13) BEFORE any DataFrame
-    is built: ADVICE r14 — raising after ``.persist()``+``.count()``
-    made a pure argument error cost a full corpus pass and leaked the
-    persisted frame on the error path."""
+    """Reject a half-pinned LSH regime BEFORE any DataFrame is built:
+    raising after ``.persist()``+``.count()`` would make a pure argument
+    error cost a full corpus pass and leak the persisted frame on the
+    error path."""
     if (tables is None) != (bits is None):
         raise ValueError(
             "pass both tables= and bits= to pin the LSH regime, or "
@@ -414,7 +410,7 @@ def _spread(df: DataFrame, *cols: Column | str) -> DataFrame:
     The partition-count probe (``.rdd.getNumPartitions()``) forces
     physical planning of the input, so its result is memoized on the
     DataFrame object — repeated ``_spread`` calls over the same frame
-    (multi-stage operators, retries) plan it once (ADVICE r12).
+    (multi-stage operators, retries) plan it once.
     """
     n_parts = df.sparkSession.sparkContext.defaultParallelism
     cached = getattr(df, "_k8s_spread_parts", None)
@@ -566,7 +562,7 @@ def bucket_keys(
             keys_mat[:, t] = k
         return pd.Series(list(keys_mat))
 
-    # NOT marked asNondeterministic (guide §4.4 audited, r15): every
+    # NOT marked asNondeterministic (audited): every
     # caller explodes the key array inline in a single select, and that
     # shape evaluates the UDF once — verified by executing the bucketed
     # plan pre/post fence (1 ArrowEvalPython both ways; the duplication
@@ -595,7 +591,7 @@ def cosine_topk_lsh(
     count of the persisted base): bits ≈ log2(n/32) holds per-bucket
     occupancy as the corpus grows, tables restores ~0.8 recall at
     cosine 0.45 — the 100 TB tuning law the sf1 measurement pinned
-    (SCALE.md r12: fixed params went 25–68× for 10× data).  Pass both
+    (SCALE.md: fixed params went 25–68× for 10× data).  Pass both
     explicitly to pin a regime (the DuckDB oracle replays the same
     auto-tune rule, so the defaults stay hash-checkable at any SF).
     """
@@ -804,7 +800,7 @@ def _pair_cos(a: Column, b: Column) -> Column:
     dedup.  (A factory, not a module-level @pandas_udf: decoration needs
     an active SparkSession, which doesn't exist at import time.)
 
-    Marked ``asNondeterministic`` (guide §4.4, r15): the consumers all
+    Marked ``asNondeterministic``: the consumers all
     follow the ``withColumn("__cos", …).where(__cos >= t)`` shape, and
     the optimizer pushes that filter below the projection by DUPLICATING
     the deterministic UDF — the before-plan for emb_cosine_near_dup_lsh
@@ -848,7 +844,7 @@ _IVF_MAX_TRAIN = 20000
 #: bounds the collect to what the CALLER asked for; this bounds what a
 #: caller may ask for: 200k rows × 64 dims × 8 B ≈ 100 MB of sample is
 #: the documented driver budget, and a max_train above it raises
-#: instead of OOMing a shared driver.  Runtime-enforced (r10 task 6).
+#: instead of OOMing a shared driver.  Runtime-enforced.
 _MAX_TRAIN_CEILING = 200_000
 
 #: Documented applicability bound of the per-label PCA family: the
@@ -856,7 +852,7 @@ _MAX_TRAIN_CEILING = 200_000
 #: LOW-cardinality (classes, buckets, shards — not ids).  256 labels
 #: × 64² = 1,048,576 cells ≈ 8 MB is the budget; beyond it the right
 #: tool is the global ``pca_top_component`` over a filtered frame.
-#: Runtime-enforced with one cheap label-column pre-scan (r10 task 6).
+#: Runtime-enforced with one cheap label-column pre-scan.
 _MAX_PCA_LABELS = 256
 
 
@@ -876,8 +872,7 @@ def _check_label_cardinality(
     per-label PCA driver bound BEFORE the d²-cell aggregation runs.
     Exact, not approx_count_distinct: the HLL's ~2% error could admit a
     label column slightly over the bound (or spuriously reject one just
-    under it), and the scan is a single narrow column either way
-    (ADVICE r12)."""
+    under it), and the scan is a single narrow column either way."""
     n_labels = int(
         embeddings.agg(
             F.countDistinct(F.col(label_col)).alias("n")
@@ -1123,14 +1118,12 @@ def ann_recall_report(
     production LSH path under test; the intersection join carries
     (query, neighbor-id) pairs, ≤ q·k rows.
     """
-    # r16 (VERDICT r15 item 5): the exact side used to feed TWO
-    # consumers (the per-query n_exact aggregate and the hits join) —
-    # when shuffle-exchange reuse did not fire, the whole brute-force
-    # scan+window ran once per consumer (at 100 TB that is an extra
-    # full corpus pass per report).  An eager localCheckpoint of the
-    # tiny exact result fixed the recompute but measured +0.3-1.0 s of
-    # fixed blocking-job overhead per report at sf0.1 (interleaved
-    # A/B, reps 2+).  Cheaper exact rewrite: n_exact is DERIVABLE
+    # ``exact`` has ONE consumer (the hits join): a second one (the
+    # per-query n_exact aggregate) re-runs the whole brute-force
+    # scan+window when shuffle-exchange reuse does not fire (at 100 TB
+    # an extra full corpus pass per report), and an eager
+    # localCheckpoint of the tiny exact result costs +0.3-1.0 s of
+    # fixed blocking-job overhead per report at sf0.1.  n_exact is DERIVABLE
     # without consuming ``exact`` at all — cosine_topk emits, for each
     # query id q present in the corpus, min(k, N − c_q) rows (N corpus
     # rows, c_q rows carrying id q; self-pairs excluded, row_number
@@ -1138,7 +1131,7 @@ def ann_recall_report(
     # the query ids plus one column-pruned count-star, and ``exact``
     # has a SINGLE consumer: the O(n·q) scan runs exactly once per
     # report with no materialization and no extra action.  The
-    # n_exact > 0 guard reproduces the old omit-when-empty behavior
+    # n_exact > 0 guard keeps the omit-when-empty behavior
     # for the degenerate single-row corpus.
     exact = cosine_topk(embeddings, query_ids, k, vec_col, id_col)
     if method == "ivf":
@@ -1216,12 +1209,12 @@ def cosine_topk_ivf(
     on clustered real-world embeddings IVF prunes harder because cells
     follow the data distribution instead of random hyperplanes.
 
-    ``nprobe=None`` (the default since r14) auto-tunes via
-    ``suggest_ivf_nprobe``: r14 pinned the isotropic worst case
-    (ceil(nlist/2) — a fixed probe count at growing nlist is a
-    shrinking probed fraction and recall decays, measured sf1 recall@10
-    as low as 0.0 at the old fixed 8); r15 made it STRUCTURE-AWARE —
-    the training sample's top1−top2 cell-cosine margin
+    ``nprobe=None`` (the default) auto-tunes via
+    ``suggest_ivf_nprobe``: the isotropic worst case is ceil(nlist/2)
+    (a fixed probe count at growing nlist is a shrinking probed
+    fraction and recall decays, measured sf1 recall@10 as low as 0.0
+    at a fixed 8), and the law is STRUCTURE-AWARE — the training
+    sample's top1−top2 cell-cosine margin
     (``_ivf_sample_margin_micro``) moves the fraction down to the floor
     on clustered data (measured n=20k: isotropic 35/70 recall 0.88,
     clustered σ=.06 8/70 recall 1.0, σ=.12 28/70 recall 1.0 —
@@ -1270,7 +1263,7 @@ def cosine_topk_ivf(
             base, nlist, n_rows, return_sample=True
         )
         if nprobe is None:
-            # r15: structure-aware default — the training sample's
+            # Structure-aware default — the training sample's
             # top1−top2 margin decides the probed fraction (oracle
             # replays the identical integer statistic + law).
             nprobe = _auto_nprobe(
@@ -2073,9 +2066,9 @@ def ivf_pq_topk(
 ) -> DataFrame:
     """The composed FAISS search path — IVF-PQ: the integer-exact IVF
     coarse quantizer prunes the table to each query's ``nprobe`` nearest
-    cells (``nprobe=None`` auto-tunes via ``suggest_ivf_nprobe`` since
-    r14, structure-aware via the sample margin since r15, replayed by
-    the oracle — see ``cosine_topk_ivf``), and PQ
+    cells (``nprobe=None`` auto-tunes via ``suggest_ivf_nprobe``,
+    structure-aware via the sample margin, replayed by the oracle — see
+    ``cosine_topk_ivf``), and PQ
     asymmetric-distance tables score ONLY those candidates
     through their codes (the ``pq_adc_topk`` reconstruction-cosine).
     Both index halves train on the same bounded hash-selected sample;
@@ -2101,7 +2094,7 @@ def ivf_pq_topk(
         base, nlist, n_rows, max_train, return_sample=True
     )
     if nprobe is None:
-        # r15: same structure-aware default as cosine_topk_ivf (and the
+        # Same structure-aware default as cosine_topk_ivf (and the
         # same oracle-replayed integer statistic).
         nprobe = _auto_nprobe(
             nlist, n_rows, _ivf_sample_margin_micro(Xs, centers)
@@ -2255,8 +2248,8 @@ def random_projection(
         out = VQ @ S.T  # (n, out_dim)
         return pd.Series(list(out))
 
-    # asNondeterministic (guide §4.4, r15): the two-select posexplode
-    # shape made the optimizer push Generate's implicit size/isnotnull
+    # asNondeterministic: the two-select posexplode shape
+    # makes the optimizer push Generate's implicit size/isnotnull
     # filter below the projection and evaluate the (pure) matmul UDF
     # twice per row — 2 ArrowEvalPython nodes in the executed plan
     # (plans/r15/emb_random_projection_{before,after}.txt).  The fence
@@ -2659,7 +2652,7 @@ def _pca_moment_cells(
     __n) — optionally keyed by ``label_col`` (as ``__lbl``) for the
     per-class variants.  d(d+1)/2 (× |labels|) rows at any corpus
     size; eagerly checkpointed so every consumer branch (cells, means,
-    and the r16 projection reuse) reads the materialized cells instead
+    and the projection reuse) reads the materialized cells instead
     of re-running the n·d² generation.
 
     The d²-fold generation parallelism is the input's partition count
@@ -2669,12 +2662,12 @@ def _pca_moment_cells(
     rows only in that starved case; a cluster-scale input that
     already arrives partitioned passes through with no exchange.
 
-    r15 opt (guide §1.2 "the distributed algorithm"), three exact
-    rewrites of the n·d² generation pass, together ~2.8×:
-     * the checked+cast array is projected ONCE into ``__a`` — the
-       old plan re-evaluated the 64-element transform up to 4× per
-       row (posexplode's implicit non-empty filter duplicated it into
-       the pushed-down Filter and both Generates);
+    Three exact shapes of the n·d² generation pass, together ~2.8×
+    over the naive plan:
+     * the checked+cast array is projected ONCE into ``__a`` —
+       otherwise the 64-element transform runs up to 4× per row
+       (posexplode's implicit non-empty filter duplicates it into the
+       pushed-down Filter and both Generates);
      * only the upper triangle (j ≥ i) is generated — IEEE multiply
        is commutative and decimal sums are order-proof, so the (j, i)
        cell is a bit-exact mirror of (i, j);
@@ -2685,7 +2678,7 @@ def _pca_moment_cells(
        ``_vec_checked``-validated fixtures and the 64-wide oracle
        provide): every vector then contributes to every cell, so the
        per-cell mean of x_i IS the global mean of x_i.
-    r16 (ADVICE r15): slice to exactly ``dim`` before the explode.
+    Slice to exactly ``dim`` before the explode.
     ``_vec_checked`` admits WIDER vectors (prefix use is legitimate),
     but the diagonal-cell means derivation assumes every vector
     contributes to every cell — a mixed-width corpus would silently
@@ -2745,8 +2738,8 @@ def _pca_moment_cells(
 def _pca_means_rows(g: DataFrame, by_label: bool = False) -> list:
     """Collected per-dimension means off the checkpointed moment cells
     — the ``mean_center`` 6-dp recipe (round6(Σx / n) off the diagonal
-    cells), bit-identical to the groupBy-means subtree the r15
-    projections recomputed with a second corpus pass."""
+    cells), bit-identical to a groupBy-means subtree over a second
+    corpus pass."""
     keys = ["__lbl"] if by_label else []
     return (
         g.where(F.col("j") == F.col("i"))
@@ -2842,7 +2835,7 @@ def _pca_cov_means(
     """One covariance pass → (full cov dict incl. the (j, i) mirror,
     per-dimension means list).  Both collects read the checkpointed
     d(d+1)/2 moment-cell frame, so callers that need cov AND means
-    (the r16 projections) pay exactly one corpus scan."""
+    (the projections) pay exactly one corpus scan."""
     g = _pca_moment_cells(embeddings, dim, vec_col, id_col)
     # With _cache.EAGER off, g is lazy and the two collects scan the corpus twice.
     cov: dict = {}
@@ -2860,8 +2853,8 @@ def _pca_fold_score(
 ) -> Column:
     """Per-row projection score as a zero-exchange array fold:
     round(1e6 · Σ_d (x_d − m_d)·v_d) with the cross-dimension sum in
-    DECIMAL(28,12) — the identical addend multiset the r15
-    posexplode → broadcast-join → groupBy shape summed, and decimal
+    DECIMAL(28,12) — the identical addend multiset a posexplode →
+    broadcast-join → groupBy shape sums, and decimal
     addition is exact and associative at these magnitudes, so the fold
     order cannot change a bit.  Replaces a corpus-sized generate plus
     a per-vector exchange with per-row codegen (guide §2.4)."""
@@ -2966,13 +2959,14 @@ def pca_project(
     """Projection of every vector onto the corpus's top principal
     component: (vec_id, score_micro) with score = Σ_d (x_d − m_d)·v_d —
     the 1-D PCA embedding used for curriculum ordering, outlier
-    trimming, and stratified sampling over semantic spread.
+    trimming, and stratified sampling over semantic spread.  One output
+    row per input row: rows sharing a ``vec_id`` are scored separately,
+    never summed.
 
-    Scale (r16 restructure, guide §1.2/§2.4): the component AND the
-    means come from ONE covariance pass (``_pca_cov_means`` — the r15
-    shape re-derived the means with a second corpus posexplode +
-    groupBy); the projection itself is a per-row array fold against
-    the 64-element mean/component literals — no generate, no joins, no
+    Scale: the component AND the means come from ONE covariance pass
+    (``_pca_cov_means`` — no second corpus posexplode + groupBy for the
+    means); the projection itself is a per-row array fold against the
+    64-element mean/component literals — no generate, no joins, no
     per-vector exchange, zero shuffles in the scoring pass.
 
     Exactness: means via the ``mean_center`` 6-dp recipe (identical
@@ -3123,13 +3117,13 @@ def pca_project2d(
     pc1_micro, pc2_micro) — the 2-D corpus map used for visualization,
     stratified sampling over semantic spread, and outlier trimming.
 
-    Scale (r16 restructure — the ``pca_project`` fold, twice): both
-    components and the means come from ONE covariance pass; each score
-    is a per-row DECIMAL(28,12) array fold against 64-element literals
-    — no generate, no joins, no per-vector exchange.  The conditional
-    per-component sums of the r15 grouped pass summed exactly these
-    addend multisets; decimal addition is exact and associative here,
-    so the fold replays them bit-for-bit.
+    Scale (the ``pca_project`` fold, twice): both components and the
+    means come from ONE covariance pass; each score is a per-row
+    DECIMAL(28,12) array fold against 64-element literals — no
+    generate, no joins, no per-vector exchange.  Conditional
+    per-component sums in a grouped pass sum exactly these addend
+    multisets; decimal addition is exact and associative here, so the
+    fold matches them bit-for-bit.
     """
     cov, means = _pca_cov_means(embeddings, dim, vec_col, id_col)
     v1, lam1 = _pca_power_iterate(cov, dim, steps)
@@ -3274,13 +3268,13 @@ def _pca_label_spectra(
     ``({label: (v_micro[dim], lambda_micro)}, {(label, d): mean})``.
     One corpus scan (``_pca_moment_cells``); the means collect reads
     the checkpointed |labels|·d(d+1)/2 cell frame, NOT the corpus — so
-    ``pca_project_by_label`` no longer re-derives class means with a
-    second corpus pass (r16, guide §1.2 "don't compute things twice")."""
+    ``pca_project_by_label`` does not re-derive class means with a
+    second corpus pass."""
     _check_label_cardinality(embeddings, label_col, dim)
-    # r15 opt — the grouped twin of the global ``pca_covariance``
-    # rewrite; r16: the shared ``_pca_moment_cells`` helper (one corpus
-    # pass, upper triangle, means on the diagonal, checkpointed cells —
-    # see its docstring), keyed by label.
+    # The grouped twin of the global ``pca_covariance``: the shared
+    # ``_pca_moment_cells`` helper (one corpus pass, upper triangle,
+    # means on the diagonal, checkpointed cells — see its docstring),
+    # keyed by label.
     g = _pca_moment_cells(embeddings, dim, vec_col, id_col, label_col)
     means = g.where(F.col("j") == F.col("i")).select(
         "__lbl",
@@ -3350,10 +3344,10 @@ def pca_project_by_label(
     curriculum/outlier coordinate (a vector extreme for its class is
     interesting even when globally unremarkable).
 
-    Composition of the audited parts (r16 restructure): ONE per-label
-    covariance pass (``_pca_label_spectra``) yields both the class
-    components and the class means — the r15 shape re-derived the
-    means with a second corpus posexplode + groupBy — and the
+    Composition of the audited parts: ONE per-label covariance pass
+    (``_pca_label_spectra``) yields both the class components and the
+    class means — no second corpus posexplode + groupBy for the
+    means — and the
     projection is one corpus scan with a single broadcast join on
     ``label`` attaching the class's 64-element mean/component arrays,
     scored by the ``pca_project`` decimal fold (bit-identical addend

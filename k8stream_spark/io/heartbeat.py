@@ -4,11 +4,8 @@ Every ``interval`` seconds, GET ``{hook}?uid=...&version=...`` with a
 short timeout; an HTTP 426 Upgrade-Required response triggers the
 remote-restart path — the reference SIGQUITs itself (heartbeat.go:52-55,
 main.go:99-112), our engine calls an injected ``on_upgrade`` (typically
-``query.stop()`` on the streaming query).
-
-``HeartbeatListener`` is the Spark-native binding: a
-StreamingQueryListener that heartbeats on every query-progress event, so
-liveness follows actual micro-batch progress instead of wall clock.
+``query.stop()`` on the streaming query).  ``Heartbeat`` is the one
+binding: a wall-clock background thread, like the reference goroutine.
 """
 
 from __future__ import annotations
@@ -17,11 +14,6 @@ import threading
 import urllib.parse
 import urllib.request
 from collections.abc import Callable
-
-try:  # streaming listener is optional at import time (pure-batch users)
-    from pyspark.sql.streaming import StreamingQueryListener
-except ImportError:  # pragma: no cover
-    StreamingQueryListener = object  # type: ignore[assignment]
 
 DEFAULT_INTERVAL_S = 30.0  # reference io/heartbeat.go:12-13
 DEFAULT_TIMEOUT_S = 0.3  # reference io/heartbeat.go:14-15 (300 ms)
@@ -87,39 +79,3 @@ class Heartbeat:
         self._stop.set()
         if self._thread is not None:
             self._thread.join(timeout=self.interval + 1)
-
-
-class HeartbeatListener(StreamingQueryListener):
-    """Spark-native heartbeat: beat on every micro-batch progress event.
-    Register with ``spark.streams.addListener(...)``."""
-
-    def __init__(
-        self,
-        hook: str,
-        uid: str,
-        version: str,
-        timeout: float = DEFAULT_TIMEOUT_S,
-        on_upgrade: Callable[[], None] | None = None,
-    ) -> None:
-        self.hook = hook
-        self.uid = uid
-        self.version = version
-        self.timeout = timeout
-        self.on_upgrade = on_upgrade
-
-    def onQueryStarted(self, event) -> None:  # noqa: N802
-        pass
-
-    def onQueryProgress(self, event) -> None:  # noqa: N802
-        try:
-            status = ping(self.hook, self.uid, self.version, self.timeout)
-        except Exception:
-            return
-        if status == UPGRADE_REQUIRED and self.on_upgrade is not None:
-            self.on_upgrade()
-
-    def onQueryIdle(self, event) -> None:  # noqa: N802
-        pass
-
-    def onQueryTerminated(self, event) -> None:  # noqa: N802
-        pass

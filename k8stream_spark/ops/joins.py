@@ -261,15 +261,15 @@ def label_selector_join(
             first_entry["key"].alias("__k"),
             first_entry["value"].alias("__v"),
         )
-    # r15 opt (guide §1.2 step 2, per-candidate work): the anchor entry
-    # is ALREADY verified by the (__k, __v) equi-join below, so the
-    # inline check only needs the REMAINING selector entries.  Project
-    # them once on the (tiny, broadcast) selector side — one map lookup
-    # per candidate saved always, and single-entry selectors (an empty
-    # remainder) verify for free.  Exact same pairs: a map cannot carry
-    # the anchor key twice (verified: identical 1,501,495 matched pairs
-    # at sf0.1).  A/B min-of-3 at sf0.1: matched branch 3.36 → 2.07 s,
-    # full join 3.20 → 1.90 s.
+    # The anchor entry is ALREADY verified by the (__k, __v) equi-join
+    # below, so the inline check only needs the REMAINING selector
+    # entries.  Project them once on the (tiny, broadcast) selector
+    # side — one map lookup per candidate saved always, and
+    # single-entry selectors (an empty remainder) verify for free.
+    # Exact same pairs: a map cannot carry the anchor key twice
+    # (verified: identical 1,501,495 matched pairs at sf0.1).  A/B
+    # min-of-3 at sf0.1: matched branch 3.36 → 2.07 s, full join
+    # 3.20 → 1.90 s.
     sel = sel.select(
         "service_uid",
         F.filter(
@@ -326,7 +326,7 @@ def service_pod_map(
     (reference event_service.go:88-96).  ``map_from_entries(collect_list)``
     is a single shuffle on service_uid with partial aggregation map-side.
 
-    Cost is OUTPUT-bound, not plan-bound (r9 measurement): the shuffle
+    Cost is OUTPUT-bound, not plan-bound (measured): the shuffle
     carries one JSON string per (service, pod) pair because the map
     values ARE those strings — on the fixture, empty-selector services
     match all pods (150k-entry maps, ~3M pairs total), and the 2.5 s
@@ -365,8 +365,8 @@ def service_pod_map(
 #: mega-service's sort spreads over ``_POD_MAP_PRESHARDS`` tasks
 #: instead of streaming through one.  The DuckDB oracle embeds the same
 #: constant and sha256-prefix hash, so shard boundaries stay
-#: hash-checked (r14 task 4; the hash recipe is the oracle-replayable
-#: 60-bit sha256 prefix the IVF/LSH samplers already use).
+#: hash-checked (the hash recipe is the oracle-replayable 60-bit sha256
+#: prefix the IVF/LSH samplers already use).
 _POD_MAP_PRESHARDS = 32
 
 
@@ -384,20 +384,17 @@ def _ranked_pod_shards(
     locally ranked, offset-recovered, ``shard_id`` assigned — see
     ``service_pod_map_sharded`` for the order/shard contract.
 
-    r15 opt (guide §2.3 "project before the exchange"): the rank
-    window used to run over pair rows already carrying the built
-    pod-JSON payload.  Now the window ranks NARROW (ids + name) rows
-    and the JSON is attached broadcast-side after ranking, so the
+    Project before the exchange: the window ranks NARROW (ids + name)
+    rows and the JSON is attached broadcast-side after ranking, so the
     wide payload crosses only the final map-aggregation exchange
-    instead of two.  The offsets branch still re-derives the narrow
-    pair join (column pruning keeps the two branches' exchanges
-    non-identical, so ReusedExchange cannot fire; persisting the
-    data-sized pair frame remains off the table — the A1 OOM lesson),
-    but its recompute is now the same narrow projection the window
-    uses.  Same-session interleaved A/B at sf0.1: min 8.59 → 8.27 s.
+    instead of two.  The offsets branch re-derives the narrow pair join
+    (column pruning keeps the two branches' exchanges non-identical,
+    so ReusedExchange cannot fire; persisting the data-sized pair
+    frame is off the table — it runs out of memory), but its
+    recompute is the same narrow projection the window uses.
     """
     if preshards < 1:
-        # ADVICE r14: preshards <= 0 would make the modulo yield
+        # preshards <= 0 would make the modulo yield
         # null/invalid __ps and silently corrupt ranks and shard ids —
         # fail fast, mirroring suggest_ivf_nprobe's nlist validation.
         raise ValueError("preshards must be >= 1")
@@ -444,15 +441,14 @@ def service_pod_stats(
     name_col: str = "name",
 ) -> DataFrame:
     """A1's declared panel — (service_uid, n_pods, first_pod) — without
-    materializing the pod map (r16, VERDICT r15 item 6 / guide §1.2
-    "don't compute things you throw away").
+    materializing the pod map.
 
     ``service_pod_map``'s map VALUES are per-pod JSON strings; the a1
     query consumes only ``size(map)`` and the first (minimum) key, and
     its oracle is literally ``COUNT(*), MIN(name) GROUP BY service`` —
     but Catalyst cannot prune map values back through
-    ``map_from_entries``, so the r15 query built, shuffled and
-    assembled ~3M JSON strings per run only to count them (measured
+    ``map_from_entries``, so the map form builds, shuffles and
+    assembles ~3M JSON strings per run only to count them (measured
     ~3 s of the query's 8.2 s at sf0.1; at 100 TB the waste is a full
     data-sized exchange).  This operator aggregates the NARROW
     (service_uid, pod_name) pairs directly: count = map size and
@@ -460,6 +456,9 @@ def service_pod_stats(
     service, which ``service_pod_map``'s EXCEPTION dedup policy
     already enforces for the map form.  ``service_pod_map`` remains
     the reference-parity anchor for consumers that need the maps.
+
+    ``n_pods`` counts (service, pod) pairs; duplicate pod names behind
+    one service are counted, not detected (the map form raises).
     """
     pod_name = pods.select(
         F.col(pod_key).alias("pod_uid"),
@@ -490,7 +489,10 @@ def service_pod_shard_stats(
     pod-JSON broadcast attach and no map aggregation: the declared
     outputs are the shard's entry count and minimum name, so the
     final exchange carries two narrow columns instead of the
-    data-sized map payload (guide §2.3)."""
+    data-sized map payload.
+
+    ``n_pods`` counts (service, pod) pairs; duplicate pod names behind
+    one service are counted, not detected (the map form raises)."""
     ranked = _ranked_pod_shards(
         pairs, pods, shard_size, pod_key, name_col, preshards
     )
@@ -521,9 +523,9 @@ def service_pod_map_sharded(
     shards of ``shard_size`` in a deterministic order, and each
     (service, shard) emits its own map plus the shard's entry count.
 
-    Deterministic order WITHOUT a per-service global sort (r14 task 4 —
-    the r13 version's ``row_number`` over service_uid alone streamed a
-    whole mega-service through one window task): each pod hashes into
+    Deterministic order WITHOUT a per-service global sort (a
+    ``row_number`` over service_uid alone streams a whole mega-service
+    through one window task): each pod hashes into
     one of ``preshards`` pre-shards (60-bit sha256 prefix of the name,
     mod ``preshards`` — replayable in SQL), ranks by name WITHIN
     (service, pre-shard), and recovers its global position as the
@@ -558,11 +560,11 @@ def service_pod_map_sharded(
     if broadcast_pods:
         # Broadcast: pods is the dim side (J1's established contract);
         # an unhinted plan shuffles the full ranked PAIR stream by
-        # pod_uid here, which costs more than the wide window payload
-        # this restructure removed (measured 13.0 s vs 9.2 s at sf0.1).
-        # ``broadcast_pods=False`` (ADVICE r15) is the J1-style escape
-        # hatch for pathological pod cardinality where the full-JSON
-        # dim side would not fit executor/driver memory.
+        # pod_uid here, which costs more than a wide window payload
+        # (measured 13.0 s vs 9.2 s at sf0.1).  ``broadcast_pods=False``
+        # is the J1-style escape hatch for pathological pod cardinality
+        # where the full-JSON dim side would not fit executor/driver
+        # memory.
         pod_json = F.broadcast(pod_json)
     return (
         ranked.join(pod_json, "pod_uid")

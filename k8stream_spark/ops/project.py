@@ -26,6 +26,15 @@ def l9event_projection(
     (F5, event.go:52) + constant ``version`` stamp (event.go:65).
     """
     return df.select(
+        *_l9event_columns(uid_col, ts_col), F.lit(version).alias("version")
+    )
+
+
+def _l9event_columns(uid_col: str, ts_col: str) -> list[Column]:
+    """The L9Event record's fields before ``version``, in output order —
+    the one definition of the layout; the enriched projection in
+    ``streaming/pipeline.py`` appends its joined fields after these."""
+    return [
         F.col(uid_col).alias("id"),
         # NTZ-safe epoch seconds (F5): NTZ → TIMESTAMP under the pinned-UTC
         # session, then truncate to long.
@@ -40,8 +49,7 @@ def l9event_projection(
         F.col("ref_name").alias("reference_name"),
         F.col("ref_kind").alias("reference_kind"),
         F.col("ref_api_version").alias("reference_version"),
-        F.lit(version).alias("version"),
-    )
+    ]
 
 
 def mini_pod_info(prefix: str = "") -> Column:
@@ -133,11 +141,6 @@ def epoch_seconds(ts: Column | str) -> Column:
     casts through TIMESTAMP under the pinned-UTC session."""
     c = F.col(ts) if isinstance(ts, str) else ts
     return c.cast("timestamp").cast("long")
-
-
-def to_json_row(*cols: str) -> Column:
-    """F7 — JSON-marshal a row/struct (reference flush.go:44, cache.go:81)."""
-    return F.to_json(F.struct(*cols) if cols else F.struct("*"))
 
 
 def version_gte(a: Column | str, b: Column | str) -> Column:

@@ -1,72 +1,16 @@
-"""Schemas: the L9Event output record, k8s-shaped input schemas, and the
-driver fixture tables.
+"""Schemas: the k8s-shaped input schemas and the fixture tables.
 
-The reference's output unit is the flat ``L9Event`` struct with 17 fields
-(reference event.go:12-31).  We pin it as an explicit ``StructType`` — Spark
-is columnar under the hood (Tungsten/Parquet) so the row-oriented reference
-record becomes columnar for free.  Two reference fields are dynamic blobs:
-
-  * ``pod`` — for pod events a mini-struct {uid,name,namespace,start_time,
-    ip,host_ip} (reference event.go:89-98); for service events a map
-    podName → JSON string (reference event_service.go:88-96).  We model the
-    two shapes as two typed columns (``pod`` STRUCT, ``service_pods`` MAP)
-    — truer than one untyped blob, and oracle-comparable.
+The reference's output unit, the flat ``L9Event`` struct (reference
+event.go:12-31), has no schema object here: its layout is the
+projection that builds it (``ops/project.py`` — ``l9event_projection``,
+``service_event_synthesis``, and the enriched form
+``streaming/pipeline.project_enriched_l9``, which flattens the
+miniPodInfo struct into ``pod_*`` columns, FIXTURES.md §A5).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
-
-# ---------------------------------------------------------------------------
-# Output record (reference event.go:12-31)
-# ---------------------------------------------------------------------------
-
-POD_INFO_SCHEMA = T.StructType(
-    [
-        # miniPodInfo (reference event.go:89-98)
-        T.StructField("uid", T.StringType()),
-        T.StructField("name", T.StringType()),
-        T.StructField("namespace", T.StringType()),
-        T.StructField("start_time", T.TimestampNTZType()),
-        T.StructField("ip", T.StringType()),
-        T.StructField("host_ip", T.StringType()),
-    ]
-)
-
-L9EVENT_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.StringType(), False),
-        T.StructField("timestamp", T.LongType()),  # epoch seconds (event.go:52)
-        T.StructField("component", T.StringType()),
-        T.StructField("host", T.StringType()),
-        T.StructField("message", T.StringType()),
-        T.StructField("namespace", T.StringType()),
-        T.StructField("reason", T.StringType()),
-        T.StructField("reference_uid", T.StringType()),
-        T.StructField("reference_namespace", T.StringType()),
-        T.StructField("reference_name", T.StringType()),
-        T.StructField("reference_kind", T.StringType()),
-        T.StructField("reference_version", T.StringType()),
-        T.StructField("object_uid", T.StringType()),
-        T.StructField("labels", T.MapType(T.StringType(), T.StringType())),
-        T.StructField("annotations", T.MapType(T.StringType(), T.StringType())),
-        T.StructField("address", T.ArrayType(T.StringType())),
-        # miniPodInfo (reference event.go:89-98) flattened to pod_* columns —
-        # FIXTURES.md §A5 pins the flat shape for oracle comparability; the
-        # nested form stays available as POD_INFO_SCHEMA for operators that
-        # build the struct (P7) before flattening.
-        T.StructField("pod_uid", T.StringType()),
-        T.StructField("pod_name", T.StringType()),
-        T.StructField("pod_namespace", T.StringType()),
-        T.StructField("pod_ip", T.StringType()),
-        T.StructField("pod_host_ip", T.StringType()),
-        T.StructField("pod_start_time", T.TimestampNTZType()),
-        T.StructField(
-            "service_pods", T.MapType(T.StringType(), T.StringType())
-        ),
-        T.StructField("version", T.StringType()),
-    ]
-)
 
 # ---------------------------------------------------------------------------
 # k8s-shaped input schemas (FIXTURES.md §A; consumed fields only,

@@ -64,38 +64,30 @@ def get_spark(
         # long and let the loader convert (sources/fixtures.py).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # In local mode the driver JVM hosts every executor thread;
-        # Spark's 1g default starves 32 of them (observed: GC-locker
-        # death on map-heavy aggregates at sf0.1).  Size the single heap
-        # for the thread count; harmless when spark-submit overrides.
-        # 16g (was 8g): the 41-query bench session showed late-session
-        # GC tails at 8g that the 24-query session never hit.
+        # Spark's 1g default starves them (observed: GC-locker death on
+        # map-heavy aggregates at sf0.1), and a long many-query session
+        # shows late GC tails at 8g.  Harmless when spark-submit
+        # overrides.
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
         )
-        # A 41-query × 3-rep session compiles ~120+ whole-stage-codegen
+        # A many-query session compiles hundreds of whole-stage-codegen
         # classes; the JVM's default 240m code cache fills mid-session,
         # JIT compilation stops, and every later query runs partially
-        # interpreted (the flat ~1.5× late-session inflation seen in the
-        # r5 bench tail).  512m keeps codegen compiled end-to-end.
+        # interpreted (~1.5× slower).  512m keeps codegen compiled
+        # end-to-end.
         .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get(
-                "SPARK_GRAFT_DRIVER_JAVA_OPTS",
-                "-XX:ReservedCodeCacheSize=512m",
-            ),
+            "spark.driver.extraJavaOptions", "-XX:ReservedCodeCacheSize=512m"
         )
         # ContextCleaner only releases shuffle files, broadcast blocks and
         # localCheckpoint RDDs after a DRIVER GC collects their references
         # — and the default periodic-GC interval is 30min.  A large heap
         # means organic GCs are rare, so a many-query session accumulates
         # dead executor-side state for minutes and later queries inherit
-        # the litter (observed: docs_dedup_clusters 6s isolated vs 12-50s
-        # late in the 41-query bench).  1min bounds the litter window.
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "1min"),
-        )
+        # the litter (observed: docs_dedup_clusters 6 s isolated vs
+        # 12-50 s late in a long session).  1min bounds the litter window.
+        .config("spark.cleaner.periodicGC.interval", "1min")
         .config("spark.ui.enabled", "false")
         # The console progress bar writes \r-terminated lines that glue
         # onto diagnostic output (check_oracle / plan_audit line parsing).

@@ -43,8 +43,6 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType, TimestampNTZType
 
-DEFAULT_RESYNC_INTERVAL = 120  # reference config.go:8 DEFAULT_RESYNC_INTERVAL
-
 
 def _schema_for(kind: str) -> StructType:
     from k8stream_spark.schemas import K8S_EVENT_SCHEMA, K8S_SERVICE_SCHEMA
@@ -58,8 +56,8 @@ def _schema_for(kind: str) -> StructType:
 #: already reads every line, so it records the byte offset of every
 #: OFFSET_STRIDE-th non-blank row for free; executor slices then seek
 #: to the nearest checkpoint <= their start instead of skip-scanning
-#: from line 0 (which multiplied total I/O by O(N/2) per slice on the
-#: split single-huge-file initial-LIST case — r9 advice).
+#: from line 0 (which multiplies total I/O by O(N/2) per slice when a
+#: single huge file is split).
 OFFSET_STRIDE = 1024
 
 
@@ -99,22 +97,21 @@ class InformerStreamReader(DataSourceStreamReader):
             options.get("resyncinterval", options.get("resyncInterval", 0))
         )
         self._mode = str(options.get("mode", "permissive")).lower()
-        # Task sizing (r8 verdict item 7): split oversized ranges for
-        # parallelism, pack small ones to amortize per-partition Python
-        # worker startup — the measured fixed cost behind the informer
-        # vs file-source gap.  0 disables repacking (one task per raw
-        # range, the pre-r9 behavior).
+        # Task sizing: split oversized ranges for parallelism, pack
+        # small ones to amortize per-partition Python worker startup —
+        # the measured fixed cost behind the informer vs file-source
+        # gap.  0 disables repacking (one task per raw range).
         self._rows_per_part = int(
             options.get(
                 "rowsperpartition", options.get("rowsPerPartition", 16384)
             )
         )
-        # Parallelism floor for packing (r10): rowsPerPartition is a
-        # CEILING on task size; packing all the way up to it can
-        # collapse a batch to fewer tasks than the cluster has cores
-        # (100k rows / 16384 = 6 tasks on 32 cores — measured ~15%
-        # SLOWER than unpacked in the r10 sweep, both code versions).
-        # Packing therefore never sizes tasks above total/minTasks.
+        # Parallelism floor for packing: rowsPerPartition is a CEILING
+        # on task size; packing all the way up to it can collapse a
+        # batch to fewer tasks than the cluster has cores (100k rows /
+        # 16384 = 6 tasks on 32 cores — measured ~15% SLOWER than
+        # unpacked).  Packing therefore never sizes tasks above
+        # total/minTasks.
         # Default 64 = 2× the local core count; on a cluster set to
         # ~2-3× total executor cores.
         self._min_tasks = max(
@@ -457,7 +454,7 @@ class InformerStreamReader(DataSourceStreamReader):
         malformed lines, JSON numbers/bools/objects in string fields
         (``_coerce``'s json-text rendering), epoch-number timestamps,
         duplicate keys (json.loads keeps the last; pa.json refuses).
-        What the C++ reader handles IDENTICALLY (probed, r10): blank
+        What the C++ reader handles IDENTICALLY (probed): blank
         lines skipped like the non-blank offset counting, missing
         fields → null, extra fields ignored, ISO timestamps with 'Z' /
         numeric offsets converted to naive UTC exactly like
@@ -627,19 +624,17 @@ def informer_stream(
     source_dir: str,
     kind: str = "event",
     resync_interval: int = 0,
-    rows_per_partition: int | None = None,
 ):
     """readStream DataFrame over the informer source — drop-in for the
-    file-stream builders in streaming/pipeline.py.
-    ``rows_per_partition`` overrides the task-sizing target (see
-    ``_repack``); None keeps the source default."""
+    file-stream builders in streaming/pipeline.py.  Task sizing keeps
+    the source defaults (``rowsPerPartition``/``minTasks``, see
+    ``_repack``); set those options on ``readStream.format(
+    "k8s_informer")`` directly to change them."""
     register(spark)
-    reader = (
+    return (
         spark.readStream.format("k8s_informer")
         .option("path", source_dir)
         .option("kind", kind)
         .option("resyncInterval", str(resync_interval))
+        .load()
     )
-    if rows_per_partition is not None:
-        reader = reader.option("rowsPerPartition", str(rows_per_partition))
-    return reader.load()

@@ -27,7 +27,30 @@ from pyspark.sql import DataFrame, SparkSession
 from k8stream_spark.io.ndjson import ndjson_bytes
 from k8stream_spark.io.sinks import Flusher
 from k8stream_spark.ops import dedup, filters, joins
-from k8stream_spark.schemas import K8S_EVENT_SCHEMA
+from k8stream_spark.schemas import K8S_EVENT_SCHEMA, K8S_SERVICE_SCHEMA
+
+
+def _source_stream(
+    spark: SparkSession,
+    source_dir: str,
+    kind: str,
+    max_files_per_trigger: int | None,
+    source_format: str,
+    resync_interval: int,
+) -> DataFrame:
+    """The one source binding behind ``build_event_stream`` and
+    ``build_service_stream``; ``kind`` is ``"event"`` or ``"service"``."""
+    if source_format == "informer":
+        from k8stream_spark.sources.informer import informer_stream
+
+        return informer_stream(
+            spark, source_dir, kind=kind, resync_interval=resync_interval
+        )
+    schema = K8S_SERVICE_SCHEMA if kind == "service" else K8S_EVENT_SCHEMA
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.json(source_dir)
 
 
 def build_event_stream(
@@ -45,16 +68,10 @@ def build_event_stream(
     resync config.go:19-23) — identical schema and downstream plan.
     ``maxFilesPerTrigger`` is the count half of the reference's
     count-or-time batching at the source admission level."""
-    if source_format == "informer":
-        from k8stream_spark.sources.informer import informer_stream
-
-        return informer_stream(
-            spark, source_dir, kind="event", resync_interval=resync_interval
-        )
-    reader = spark.readStream.schema(K8S_EVENT_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.json(source_dir)
+    return _source_stream(
+        spark, source_dir, "event", max_files_per_trigger, source_format,
+        resync_interval,
+    )
 
 
 def build_service_stream(
@@ -67,18 +84,10 @@ def build_service_stream(
     """S2 — k8s-service stream (reference main.go:82-86: services get their
     own informer because changes don't surface on the events interface).
     Same source_format choice as ``build_event_stream``."""
-    from k8stream_spark.schemas import K8S_SERVICE_SCHEMA
-
-    if source_format == "informer":
-        from k8stream_spark.sources.informer import informer_stream
-
-        return informer_stream(
-            spark, source_dir, kind="service", resync_interval=resync_interval
-        )
-    reader = spark.readStream.schema(K8S_SERVICE_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.json(source_dir)
+    return _source_stream(
+        spark, source_dir, "service", max_files_per_trigger, source_format,
+        resync_interval,
+    )
 
 
 def transform_services(
@@ -165,10 +174,26 @@ def run_unified_pipeline(
         resync_interval=resync_interval,
     )
     svc_l9 = transform_services(services, namespaces=namespaces)
-    unified = joins.union_streams(ev_l9, svc_l9)
+    return _start(
+        joins.union_streams(ev_l9, svc_l9),
+        sink_fn,
+        checkpoint_dir,
+        trigger_seconds,
+        available_now,
+    )
 
+
+def _start(
+    df: DataFrame,
+    sink_fn,
+    checkpoint_dir: str,
+    trigger_seconds: int | None,
+    available_now: bool,
+):
+    """The writer/trigger setup shared by ``run_pipeline`` and
+    ``run_unified_pipeline``; availableNow wins over ``trigger_seconds``."""
     writer = (
-        unified.writeStream.outputMode("append")
+        df.writeStream.outputMode("append")
         .foreachBatch(sink_fn)
         .option("checkpointLocation", checkpoint_dir)
     )
@@ -208,25 +233,16 @@ def transform_events(
 
 
 def project_enriched_l9(enriched: DataFrame) -> DataFrame:
+    """P6 over the enriched frame: the L9Event fields of
+    ``ops.project.l9event_projection``, then the joined object, node and
+    pod fields, then ``version`` — the sink's record layout."""
     from pyspark.sql import functions as F
 
     from k8stream_spark import L9_VERSION
+    from k8stream_spark.ops import project as opsproject
 
     return enriched.select(
-        F.col("uid").alias("id"),
-        # NTZ-safe epoch seconds: NTZ → TIMESTAMP under the pinned-UTC
-        # session, then truncate to long (event.go:52 semantics).
-        F.col("creation_ts").cast("timestamp").cast("long").alias("timestamp"),
-        F.col("source_component").alias("component"),
-        F.col("source_host").alias("host"),
-        F.col("message"),
-        F.col("namespace"),
-        F.col("reason"),
-        F.col("ref_uid").alias("reference_uid"),
-        F.col("ref_namespace").alias("reference_namespace"),
-        F.col("ref_name").alias("reference_name"),
-        F.col("ref_kind").alias("reference_kind"),
-        F.col("ref_api_version").alias("reference_version"),
+        *opsproject._l9event_columns("uid", "creation_ts"),
         F.col("obj_uid").alias("object_uid"),
         F.col("obj_labels").alias("labels"),
         F.col("obj_annotations").alias("annotations"),
@@ -326,9 +342,9 @@ def near_dup_gate_sink(
         .persist()
     )
     ref_hashes.count()
-    # Banding is per-corpus-version too (r12): recomputing the 32-band
-    # explode + xxhash over the whole reference every micro-batch made
-    # the banding, not the batch, the per-trigger cost.
+    # Banding is per-corpus-version too: recomputing the 32-band
+    # explode + xxhash over the whole reference every micro-batch would
+    # make the banding, not the batch, the per-trigger cost.
     ref_bands = minhash_band_table(
         ref_sigs, "ref_id", num_hashes, bands
     ).persist()
@@ -396,14 +412,4 @@ def run_pipeline(
     l9 = transform_events(
         events, objects, nodes, namespaces=namespaces, reasons=reasons
     )
-
-    writer = (
-        l9.writeStream.outputMode("append")
-        .foreachBatch(sink_fn)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start(l9, sink_fn, checkpoint_dir, trigger_seconds, available_now)

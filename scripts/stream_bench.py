@@ -9,15 +9,14 @@ same single-node contract on BOTH source bindings — the built-in file
 stream source and the custom ``k8s_informer`` DataSourceStreamReader
 (LIST/WATCH offsets, sources/informer.py).
 
-Every leg reports TWO lines (r9 verdict items 5/7): the one-shot
-``warm: false`` number (includes state-store init, codegen, Python
-worker spin-up — the conservative includes-setup figure) and a
-``warm: true`` rerun against a fresh checkpoint in the same session
-(the marginal steady-state rate a 100 TB capacity claim can actually
-use; the first streaming run in a session is ~7× slower than warm,
-per the informer_sweep warmup-confound correction).  Pipeline warm
-legs interleave the two source bindings (F I F I) and report the
-per-binding min-of-2, the informer_sweep protocol.
+Every leg reports TWO lines: the one-shot ``warm: false`` number
+(includes state-store init, codegen, Python worker spin-up — the
+conservative includes-setup figure) and a ``warm: true`` rerun against
+a fresh checkpoint in the same session (the marginal steady-state rate
+a 100 TB capacity claim can actually use; the first streaming run in a
+session is ~7× slower than warm).  Pipeline warm legs interleave the
+two source bindings (F I F I) and report the per-binding min-of-2, so
+neither binding pays the session's warm-up for the other.
 
 Also measures the continuous-ingestion DOCUMENT gates: the
 stream-static exact incremental dedup (``incremental_exact_filter``
@@ -28,7 +27,7 @@ per-micro-batch marginal cost, with the artifact prep reported
 separately.
 
 All lines are also written to ``STREAM_BENCH_latest.json`` at the repo
-root (committed per round — the SCALE.md citation target).
+root (committed — the SCALE.md citation target).
 
 Usage: python scripts/stream_bench.py [sf_dir] [out_dir]
 """
@@ -108,7 +107,7 @@ def main() -> None:
             f"pipeline[{tag}]",
         )
 
-    # One-shot legs (includes-setup, the pre-r10 numbers).
+    # One-shot legs (includes-setup).
     for source_format in ("files", "informer"):
         elapsed = run_leg(source_format, source_format)
         emit(
@@ -124,8 +123,7 @@ def main() -> None:
         )
     # Warm legs: both bindings are session-warm now; interleave
     # (F I F I) and take the per-binding min-of-2 so a stray GC pause
-    # in one slot doesn't misrank the bindings (informer_sweep
-    # protocol).
+    # in one slot doesn't misrank the bindings.
     warm_times: dict[str, float] = {}
     for rep in (1, 2):
         for source_format in ("files", "informer"):
@@ -200,7 +198,7 @@ def main() -> None:
             }
         )
 
-    # --- continuous-ingestion NEAR-dup gate (r9): per micro-batch,
+    # --- continuous-ingestion NEAR-dup gate: per micro-batch,
     # the new docs audit against the reference corpus through the
     # banded LSH join (pipeline.near_dup_gate_sink).  The reference
     # artifacts (signature frame + md5 set) are a once-per-corpus-
@@ -240,7 +238,7 @@ def main() -> None:
             }
         )
 
-    # --- CDC content-change gate (r10): the stream twin of
+    # --- CDC content-change gate: the stream twin of
     # snapshot_delta.  Leg 1 ("first_sight") feeds a fresh checkpoint —
     # every doc is 'added', the worst-case all-emit rate.  Leg 2
     # ("steady_unchanged") copies the SAME spool under new file names
@@ -304,7 +302,7 @@ def main() -> None:
         )
     spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
 
-    # --- streaming quota gate (r10): first-come per-source admission
+    # --- streaming quota gate: first-come per-source admission
     # cap, the enforcement twin of source_quota_cap (NoTimeout state =
     # |sources| longs).  quota=50 over the 20-source doc stream admits
     # 1,000 of the 2,500 docs; the rate includes the drop path. ---
@@ -332,7 +330,7 @@ def main() -> None:
             }
         )
 
-    # --- keyed-state analytics twins (r8): per-group moment state for
+    # --- keyed-state analytics twins: per-group moment state for
     # z-score anomaly scoring and the equi-width histogram-bin state,
     # both applyInPandasWithState on the RocksDB provider — measured
     # over the sf events table streamed as JSON. ---

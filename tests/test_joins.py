@@ -162,6 +162,39 @@ def test_a1_stats_equal_map_derived_panel(services_df, pods_df):
     assert sh_stats == sh_map
 
 
+def test_a1_duplicate_pod_names_behind_one_service(spark):
+    """Two pods named alike behind one service: the map form raises
+    (Spark's default map-key dedup policy is EXCEPTION), while the stats
+    operators count (service, pod) pairs and report both."""
+    import datetime as dt
+
+    import pytest
+
+    from k8stream_spark.schemas import K8S_POD_SCHEMA
+
+    t = dt.datetime(2024, 1, 1)
+    pods = spark.createDataFrame(
+        [
+            ("p1", "dup", "default", {}, "10.0.0.1", "192.168.0.1", t),
+            ("p2", "dup", "other", {}, "10.0.0.2", "192.168.0.2", t),
+        ],
+        K8S_POD_SCHEMA,
+    )
+    pairs = spark.createDataFrame(
+        [("s1", "p1"), ("s1", "p2")], "service_uid string, pod_uid string"
+    )
+    with pytest.raises(Exception, match="DUPLICATED_MAP_KEY"):
+        joins.service_pod_map(pairs, pods).collect()
+    stats = joins.service_pod_stats(pairs, pods).collect()
+    assert [(r.service_uid, r.n_pods, r.first_pod) for r in stats] == [
+        ("s1", 2, "dup")
+    ]
+    shard = joins.service_pod_shard_stats(pairs, pods).collect()
+    assert [(r.service_uid, r.shard_id, r.n_pods) for r in shard] == [
+        ("s1", 0, 2)
+    ]
+
+
 def test_u1_union_fills_missing_columns(spark):
     a = spark.createDataFrame([("1", "x")], "id string, only_a string")
     b = spark.createDataFrame([("2", "y")], "id string, only_b string")

@@ -585,6 +585,25 @@ def test_pca_covariance_and_top_component_hand_values(spark):
     }
 
 
+def test_pca_project_keeps_duplicate_vec_ids_apart(spark):
+    """Two input rows sharing a vec_id yield two output rows, each
+    scored on its own vector — never one summed row."""
+    rows = [
+        (0, [1.0, 0.0]),
+        (0, [-1.0, 0.0]),
+        (2, [2.0, 0.0]),
+        (3, [-2.0, 0.0]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    proj = similarity.pca_project(spark, df, dim=2).collect()
+    assert sorted((r.vec_id, r.score_micro) for r in proj) == [
+        (0, -1_000_000),
+        (0, 1_000_000),
+        (2, 2_000_000),
+        (3, -2_000_000),
+    ]
+
+
 def test_pca_zero_spectrum_guarded(spark):
     """An all-identical corpus has a zero covariance matrix: the
     normalization guard must yield the zero vector and lambda 0, never

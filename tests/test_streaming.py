@@ -15,6 +15,15 @@ from k8stream_spark.streaming.pipeline import (
 )
 
 
+L9_ENRICHED_FIELDS = [
+    "id", "timestamp", "component", "host", "message", "namespace",
+    "reason", "reference_uid", "reference_namespace", "reference_name",
+    "reference_kind", "reference_version", "object_uid", "labels",
+    "annotations", "address", "pod_uid", "pod_name", "pod_namespace",
+    "pod_ip", "pod_host_ip", "pod_start_time", "version",
+]
+
+
 def _write_events(path: str) -> None:
     events = [
         dict(uid="e1", creation_ts="2024-01-01T00:00:00", namespace="default",
@@ -61,6 +70,9 @@ def test_streaming_pipeline_end_to_end(spark, objects_df, nodes_df, tmp_path):
         rows += [json.loads(l) for l in data.decode().splitlines()]
     by_id = {r["id"]: r for r in rows}
 
+    # The sunk record's key order is project_enriched_l9's layout.
+    for r in rows:
+        assert list(r) == L9_ENRICHED_FIELDS
     assert set(by_id) == {"e1", "e3"}  # e2 filtered (kube-system), dup dropped
     assert by_id["e1"]["message"] == "m1"  # first-seen wins
     assert by_id["e1"]["labels"] == {"app": "web"}  # J1 enrichment
