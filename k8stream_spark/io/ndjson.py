@@ -66,5 +66,6 @@ def write_single_ndjson(
 
 def gzip_bytes(data: bytes) -> bytes:
     """Streaming-style gzip of a flush buffer (reference io/flush_s3.go:55-61
-    pipes through gzip without temp files; in-memory here)."""
-    return gzip.compress(data)
+    pipes through gzip without temp files; in-memory here) at level 6,
+    the default of the reference's ``gzip.NewWriter``."""
+    return gzip.compress(data, compresslevel=6)

@@ -42,9 +42,13 @@ class FileSink:
         self.directory = directory
 
     def flush(self, uid: str, ident: int, data: bytes) -> str:
+        """Write a dot-prefixed temp file, then ``os.replace`` it onto the
+        final name: a crash mid-write leaves no partial final file."""
         path = os.path.join(self.directory, f"{uid}_{ident}.log")
-        with open(path, "wb") as f:
+        tmp = os.path.join(self.directory, f".{uid}_{ident}.log.tmp")
+        with open(tmp, "wb") as f:
             f.write(data)
+        os.replace(tmp, path)
         return path
 
 

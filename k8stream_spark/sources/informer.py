@@ -106,14 +106,10 @@ class InformerStreamReader(DataSourceStreamReader):
                 "rowsperpartition", options.get("rowsPerPartition", 16384)
             )
         )
-        # Parallelism floor for packing: rowsPerPartition is a CEILING
-        # on task size; packing all the way up to it can collapse a
-        # batch to fewer tasks than the cluster has cores (100k rows /
-        # 16384 = 6 tasks on 32 cores — measured ~15% SLOWER than
-        # unpacked).  Packing therefore never sizes tasks above
-        # total/minTasks.
-        # Default 64 = 2× the local core count; on a cluster set to
-        # ~2-3× total executor cores.
+        # Task-count goal: a batch with the rows for it is cut into
+        # minTasks equal tasks (``_repack``), one per core, so the read
+        # runs in one wave.  ``informer_stream`` passes the session's
+        # defaultParallelism; without the option the goal is 64 tasks.
         self._min_tasks = max(
             1,
             int(options.get("mintasks", options.get("minTasks", 64))),
@@ -269,58 +265,38 @@ class InformerStreamReader(DataSourceStreamReader):
     def _repack(
         self, parts: list[_RangePartition]
     ) -> list[InputPartition]:
-        """Size tasks to ~``rowsPerPartition`` rows: split oversized
-        ranges (the initial-LIST single-huge-file case would otherwise
-        serialize on one task) and pack small ones (the steady-state
-        many-tiny-appends case would otherwise pay Python worker
-        startup per file).  Deterministic given the same range list —
-        the checkpoint-replay contract ``partitions`` already pins.
-        Single-range groups stay plain ``_RangePartition``.
-
-        ``rowsPerPartition`` is a size CEILING, not the sizing goal:
-        the effective target is additionally clamped to
-        ``total_rows // minTasks`` (bounded below by OFFSET_STRIDE so
-        tasks never shrink under the seek-checkpoint stride), keeping
-        at least ~minTasks tasks whenever the batch has the rows for
-        it — packing a 100k-row batch into 16384-row tasks left a
-        32-core box 80% idle (6 tasks, measured ~15% slower than
-        unpacked); the floor packs/splits the same batch into ~64
-        balanced tasks instead while the 10 GB-file ceiling bound is
-        unchanged."""
+        """One pass: cut the batch's ranges, in range order, into
+        consecutive groups of ``target`` rows, where ``target`` is
+        ``min(rowsPerPartition, max(OFFSET_STRIDE, ceil(total /
+        minTasks)))``.  A group may span a file boundary (a
+        ``_SpoolSlices``) and a big file splits across groups, so a
+        batch with the rows for it runs as ``minTasks`` equal tasks —
+        one wave on ``minTasks`` cores — while ``rowsPerPartition``
+        still caps any one task and OFFSET_STRIDE keeps tasks above the
+        seek-checkpoint stride.  Deterministic given the same range
+        list — the checkpoint-replay contract ``partitions`` already
+        pins.  Single-range groups stay plain ``_RangePartition``."""
         target = self._rows_per_part
         if target <= 0:
             return [self._annotate_seek(p) for p in parts]
         total = sum(p.end - p.start for p in parts)
         target = min(
-            target, max(OFFSET_STRIDE, total // self._min_tasks)
+            target, max(OFFSET_STRIDE, -(-total // self._min_tasks))
         )
-        split: list[_RangePartition] = []
+        groups: list[list[_RangePartition]] = [[]]
+        room = target
         for p in parts:
-            if p.end - p.start <= target:
-                split.append(self._annotate_seek(p))
-            else:
-                s = p.start
-                while s < p.end:
-                    e = min(s + target, p.end)
-                    split.append(
-                        self._annotate_seek(
-                            _RangePartition(p.path, s, e, p.relist)
-                        )
-                    )
-                    s = e
-        packed: list[InputPartition] = []
-        cur: list[_RangePartition] = []
-        cur_rows = 0
-        for p in split:
-            rows = p.end - p.start
-            if cur and cur_rows + rows > target:
-                packed.append(cur[0] if len(cur) == 1 else _SpoolSlices(cur))
-                cur, cur_rows = [], 0
-            cur.append(p)
-            cur_rows += rows
-        if cur:
-            packed.append(cur[0] if len(cur) == 1 else _SpoolSlices(cur))
-        return packed
+            s = p.start
+            while s < p.end:
+                if room == 0:
+                    groups.append([])
+                    room = target
+                e = min(s + room, p.end)
+                r = _RangePartition(p.path, s, e, p.relist)
+                groups[-1].append(self._annotate_seek(r))
+                room -= e - s
+                s = e
+        return [g[0] if len(g) == 1 else _SpoolSlices(g) for g in groups if g]
 
     def _annotate_seek(self, p: _RangePartition) -> _RangePartition:
         """Attach the nearest byte-offset checkpoint <= ``p.start`` from
@@ -626,15 +602,18 @@ def informer_stream(
     resync_interval: int = 0,
 ):
     """readStream DataFrame over the informer source — drop-in for the
-    file-stream builders in streaming/pipeline.py.  Task sizing keeps
-    the source defaults (``rowsPerPartition``/``minTasks``, see
-    ``_repack``); set those options on ``readStream.format(
-    "k8s_informer")`` directly to change them."""
+    file-stream builders in streaming/pipeline.py.  ``minTasks`` is the
+    session's ``defaultParallelism`` (the local core count, or the total
+    executor cores on a cluster), so a batch's read is one task per core
+    (see ``_repack``); ``rowsPerPartition`` keeps the source default.
+    Set either option on ``readStream.format("k8s_informer")`` directly
+    to change it."""
     register(spark)
     return (
         spark.readStream.format("k8s_informer")
         .option("path", source_dir)
         .option("kind", kind)
         .option("resyncInterval", str(resync_interval))
+        .option("minTasks", str(spark.sparkContext.defaultParallelism))
         .load()
     )

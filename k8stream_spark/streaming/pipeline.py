@@ -264,9 +264,9 @@ def sink_foreach_batch(
     flush units (the count half of W1) and hand each to the Flusher as
     NDJSON — one artifact per chunk, named by a nanosecond ident (W2).
 
-    ``toLocalIterator`` runs one Spark job per partition of the batch, one
-    after another, so the fetch costs a job per shuffle partition
-    (``session.get_spark``) on top of the rows it carries.
+    The fetch is one ``collect``: one Spark job runs all of the batch's
+    partitions in parallel and returns rows in partition order.  The
+    driver holds the whole micro-batch at once.
 
     NOTE on scale: this driver-side path exists for reference-parity
     sinks (one named object per batch).  The throughput path at 100 TB is
@@ -275,14 +275,9 @@ def sink_foreach_batch(
     """
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
-        rows = (r.asDict(recursive=True) for r in batch_df.toLocalIterator())
-        chunk: list[dict] = []
-        for row in rows:
-            chunk.append(row)
-            if len(chunk) >= batch_size:
-                flusher.flush(uid, time.time_ns(), ndjson_bytes(chunk))
-                chunk = []
-        if chunk:
+        rows = [r.asDict(recursive=True) for r in batch_df.collect()]
+        for i in range(0, len(rows), batch_size):
+            chunk = rows[i : i + batch_size]
             flusher.flush(uid, time.time_ns(), ndjson_bytes(chunk))
 
     return fn
@@ -402,7 +397,10 @@ def run_pipeline(
     Returns the StreamingQuery; callers own ``awaitTermination``/``stop``
     (the reference's trapSignal, main.go:96-112).  ``resync_interval``
     (informer source only) enables the periodic re-list, reference
-    default 120 s (config.go:8)."""
+    default 120 s (config.go:8).  With the informer source,
+    ``available_now`` falls back to a single micro-batch (the Python
+    source does not support Trigger.AvailableNow), so a LIST is one
+    batch."""
     events = build_event_stream(
         spark,
         source_dir,

@@ -394,6 +394,65 @@ def test_repack_respects_parallelism_floor(tmp_path):
             assert s.end - s.start <= 1500
 
 
+def test_repack_cuts_equal_groups_across_file_boundaries(tmp_path):
+    """A 5,000/5,000/2,000-row spool with minTasks=4 is cut, in range
+    order, into exactly 4 groups of 3,000 rows, two of which span a file
+    boundary; the delivered rows are the spool's lines in order."""
+    src = str(tmp_path / "spool")
+    os.makedirs(src)
+    want = []
+    for name, n in (("a.json", 5000), ("b.json", 5000), ("c.json", 2000)):
+        with open(os.path.join(src, name), "w") as f:
+            for i in range(n):
+                uid = f"{name[0]}{i}"
+                want.append(uid)
+                f.write(json.dumps({"uid": uid}) + "\n")
+    r = InformerStreamReader(
+        _schema_for("event"), {"path": src, "minTasks": "4"}
+    )
+    parts = r.partitions(r.initialOffset(), r.latestOffset())
+    groups = [p.slices if hasattr(p, "slices") else [p] for p in parts]
+    assert [sum(s.end - s.start for s in g) for g in groups] == [3000] * 4
+    assert [
+        [(os.path.basename(s.path), s.start, s.end) for s in g]
+        for g in groups
+    ] == [
+        [("a.json", 0, 3000)],
+        [("a.json", 3000, 5000), ("b.json", 0, 1000)],
+        [("b.json", 1000, 4000)],
+        [("b.json", 4000, 5000), ("c.json", 0, 2000)],
+    ]
+    assert [row[0] for row in _rows(r, parts)] == want
+
+
+def test_informer_stream_batch_has_one_partition_per_core(spark, tmp_path):
+    """``informer_stream`` sizes a micro-batch's read to the session's
+    defaultParallelism: 2,048 rows per core arrive in one task per core,
+    not one per OFFSET_STRIDE (1,024) rows."""
+    from k8stream_spark.sources.informer import informer_stream
+
+    cores = spark.sparkContext.defaultParallelism
+    src = str(tmp_path / "spool")
+    os.makedirs(src)
+    with open(os.path.join(src, "a.json"), "w") as f:
+        for i in range(2048 * cores):
+            f.write(json.dumps({"uid": f"e{i}"}) + "\n")
+    seen = []
+    q = (
+        informer_stream(spark, src)
+        .writeStream.foreachBatch(
+            lambda df, _bid: seen.append(
+                (df.rdd.getNumPartitions(), df.count())
+            )
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    assert seen == [(cores, 2048 * cores)]
+
+
 def test_repack_splits_large_and_packs_small_ranges(tmp_path):
     """Task sizing: ranges above the rowsPerPartition target split into
     chunks (initial-LIST parallelism), tiny per-file ranges pack into

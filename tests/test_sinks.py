@@ -30,6 +30,19 @@ def test_file_sink_layout(tmp_path):
     # reference io/flush_file.go:39: {dir}/{uid}_{ident}.log
     assert path == str(tmp_path / "uid1_123456789.log")
     assert open(path, "rb").read() == b"payload\n"
+    assert os.listdir(tmp_path) == ["uid1_123456789.log"]  # no temp file
+
+
+def test_file_sink_crash_mid_write_leaves_no_final_file(tmp_path, monkeypatch):
+    """A flush that dies before the rename leaves no file under the final
+    name, so a reader never sees a partial batch."""
+    def boom(src, dst):
+        raise OSError("crash before rename")
+
+    monkeypatch.setattr(os, "replace", boom)
+    with pytest.raises(OSError, match="crash before rename"):
+        FileSink(str(tmp_path)).flush("uid1", 7, b"payload\n")
+    assert not (tmp_path / "uid1_7.log").exists()
 
 
 def test_file_sink_dir_validation(tmp_path):
@@ -85,7 +98,11 @@ def test_make_flusher_dispatch(tmp_path):
 
 
 def test_gzip_bytes_roundtrip():
-    assert gzip.decompress(gzip_bytes(b"x" * 1000)) == b"x" * 1000
+    payload = gzip_bytes(b"x" * 1000)
+    assert gzip.decompress(payload) == b"x" * 1000
+    # XFL (header byte 8) is 2 at the maximum level 9; the reference's
+    # gzip.NewWriter default level 6 writes 0.
+    assert payload[8] == 0
 
 
 def test_write_single_ndjson(spark, tmp_path):

@@ -117,44 +117,53 @@ def _event(uid: str, second: int) -> dict:
                 ref_api_version="v1")
 
 
-def test_dedup_state_keeps_checkpointed_partition_count(spark, tmp_path):
-    """A restart under a different session partition count keeps the
-    count stored in the checkpoint, and with it the dedup state."""
+def _write_spool(src, name: str, events: list[dict]) -> None:
+    (src / name).write_text("".join(json.dumps(e) + "\n" for e in events))
+
+
+def _dedup_available_now(spark, src, ckpt: str) -> tuple[list[str], set[int]]:
+    """One availableNow run of the streaming uid dedup over ``src``;
+    returns the uids it emitted and the state operator's partition
+    counts."""
     from k8stream_spark.ops.dedup import dedup_streaming
     from k8stream_spark.schemas import K8S_EVENT_SCHEMA
 
+    seen: list[str] = []
+    stream = spark.readStream.schema(K8S_EVENT_SCHEMA).json(str(src))
+    q = (
+        dedup_streaming(stream, key="uid", ts_col="creation_ts")
+        .writeStream.outputMode("append")
+        .foreachBatch(lambda df, _bid: seen.extend(r.uid for r in df.collect()))
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    stored = {
+        op["numShufflePartitions"]
+        for p in q.recentProgress
+        for op in p["stateOperators"]
+    }
+    return seen, stored
+
+
+def test_dedup_state_keeps_checkpointed_partition_count(spark, tmp_path):
+    """A restart under a different session partition count keeps the
+    count stored in the checkpoint, and with it the dedup state."""
     src = tmp_path / "src"
     src.mkdir()
     ckpt = str(tmp_path / "ckpt")
 
-    def write(name: str, events: list[dict]) -> None:
-        (src / name).write_text("".join(json.dumps(e) + "\n" for e in events))
-
     def run(partitions: int) -> tuple[list[str], set[int]]:
-        seen: list[str] = []
         spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-        stream = spark.readStream.schema(K8S_EVENT_SCHEMA).json(str(src))
-        q = (
-            dedup_streaming(stream, key="uid", ts_col="creation_ts")
-            .writeStream.outputMode("append")
-            .foreachBatch(lambda df, _bid: seen.extend(r.uid for r in df.collect()))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-        stored = {
-            op["numShufflePartitions"]
-            for p in q.recentProgress
-            for op in p["stateOperators"]
-        }
-        return seen, stored
+        return _dedup_available_now(spark, src, ckpt)
 
     before = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        write("a.json", [_event("e1", 0), _event("e2", 1)])
+        _write_spool(src, "a.json", [_event("e1", 0), _event("e2", 1)])
         first, first_parts = run(8)
-        write("b.json", [_event("e1", 0), _event("e3", 2)])  # e1 re-delivered
+        # e1 re-delivered
+        _write_spool(src, "b.json", [_event("e1", 0), _event("e3", 2)])
         second, second_parts = run(4)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
@@ -162,6 +171,32 @@ def test_dedup_state_keeps_checkpointed_partition_count(spark, tmp_path):
     assert sorted(first) == ["e1", "e2"]
     assert second == ["e3"]
     assert first_parts == second_parts == {8}
+
+
+def test_dedup_state_survives_changelog_checkpointing_switch(spark, tmp_path):
+    """A dedup checkpoint written with RocksDB changelog checkpointing
+    off restarts with it on, and the reverse: in both directions the
+    restored state still drops the re-delivered e1."""
+    conf = "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    before = spark.conf.get(conf)
+    try:
+        for first_on in (False, True):
+            src = tmp_path / f"src_{first_on}"
+            src.mkdir()
+            ckpt = str(tmp_path / f"ckpt_{first_on}")
+            _write_spool(src, "a.json", [_event("e1", 0), _event("e2", 1)])
+            spark.conf.set(conf, str(first_on).lower())
+            first, _ = _dedup_available_now(spark, src, ckpt)
+            # e1 re-delivered
+            _write_spool(src, "b.json", [_event("e1", 0), _event("e3", 2)])
+            spark.conf.set(conf, str(not first_on).lower())
+            second, _ = _dedup_available_now(spark, src, ckpt)
+            assert sorted(first) == ["e1", "e2"]
+            assert second == ["e3"]
+            # the run with the setting on logged its commit as a changelog
+            assert list((tmp_path / f"ckpt_{first_on}" / "state").rglob("*.changelog"))
+    finally:
+        spark.conf.set(conf, before)
 
 
 def test_sink_foreach_batch_rechunks_in_partition_order(spark):
