@@ -645,7 +645,7 @@ def _ivf_recall_oracle_sql(
 # the IVF training replay provides every vector's final cell (asgf);
 # within a cell, each pair (a < b) is scored with the raw-double cosine
 # list_dot_product(xa,xb)/(sqrt(·)·sqrt(·)) — the identical left-to-
-# right IEEE sum Spark's unrolled _dot_fixed performs — and b is marked
+# right IEEE sum Spark's _dot fold performs — and b is marked
 # a duplicate of its smallest-id evictor when the UNROUNDED cosine
 # meets the threshold.  Cells, kept flags and dup_of pointers are all
 # hash-checked.

@@ -36,18 +36,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0).cast("double"),
-        lambda acc, v: acc + v,
-    )
-
-
-def _dot_fixed(a: Column, b: Column, dim: int) -> Column:
+def _dot(a: Column, b: Column, dim: int | None = None) -> Column:
     """Dot product over the first ``dim`` elements (prefix semantics:
-    wider embeddings pass, reads past the array end yield NULL exactly
-    like the old unrolled ``element_at`` chain).
+    wider embeddings pass; ``_vec_checked`` rejects shorter ones), or
+    over all ``size(a)`` elements when ``dim`` is None.  ``_dot(a, a)``
+    is the squared L2 norm.
 
     A 64-term unrolled element_at-product chain falls out of
     whole-stage codegen on Spark 4 (hugeMethodLimit) and evaluates
@@ -58,26 +51,36 @@ def _dot_fixed(a: Column, b: Column, dim: int) -> Column:
     before unrolling.  The fold below performs the IDENTICAL IEEE op sequence
     left to right (0.0 + a₁b₁ + a₂b₂ + …; +0.0 as init is exact), so
     results are bit-for-bit unchanged — verified raw-value-identical
-    over sampled pairs and by the full DuckDB oracle sweep."""
+    over sampled pairs and by the full DuckDB oracle sweep.  With
+    ``dim`` None the indices are ``a``'s own positions (empty for an
+    empty array, where ``sequence(1, 0)`` would count down)."""
+    idx = (
+        F.sequence(F.lit(1), F.lit(dim))
+        if dim is not None
+        else F.transform(a, lambda _, i: i + 1)
+    )
     return F.aggregate(
-        F.sequence(F.lit(1), F.lit(dim)),
+        idx,
         F.lit(0.0).cast("double"),
         lambda acc, d: acc
         + F.element_at(a, d.cast("int")) * F.element_at(b, d.cast("int")),
     )
 
 
-def _vec_checked(a: Column, dim: int) -> Column:
-    """Fail LOUDLY when a vector is shorter than the declared ``dim``.
+def _vec_checked(a: Column, dim: int | None) -> Column:
+    """Fail LOUDLY when a vector is shorter than the declared ``dim``
+    (``dim`` None: the whole vector is read, nothing to check).
 
-    ``_dot_fixed`` reads ``element_at`` past the array end, which
-    returns NULL — every cosine would go NULL and a downstream
-    threshold filter would silently drop ALL pairs, an empty result
-    indistinguishable from "no near-dups".  Wrapping the base
-    projection in this check turns that silent wrong answer into an
-    immediate job error naming the bad row.  Pure codegen (size
+    ``_dot`` reads ``element_at`` past the array end, which fails
+    deep inside the fold (ANSI) or returns NULL (non-ANSI) — where every
+    cosine would go NULL and a downstream threshold filter would
+    silently drop ALL pairs, an empty result indistinguishable from "no
+    near-dups".  Wrapping the base projection in this check turns that
+    into an immediate job error naming the bad row.  Pure codegen (size
     compare per ROW, not per pair); vectors longer than ``dim`` pass —
     using a prefix of a wider embedding is legitimate."""
+    if dim is None:
+        return a
     return F.when(F.size(a) >= dim, a).otherwise(
         F.raise_error(
             F.concat(
@@ -86,14 +89,6 @@ def _vec_checked(a: Column, dim: int) -> Column:
                 ),
                 F.size(a).cast("string"),
             )
-        )
-    )
-
-
-def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            a, F.lit(0.0).cast("double"), lambda acc, v: acc + v * v
         )
     )
 
@@ -432,22 +427,14 @@ def with_unit_vectors(
     plain dot product downstream — normalize once, reuse in every query.
 
     The norm is computed in its own projection stage so it evaluates once
-    per row (an inline ``_norm`` inside the division lambda would re-run
-    the whole fold per element); pass ``dim`` to use the unrolled
-    codegen dot instead of the interpreted fold."""
-    src = (
-        _vec_checked(F.col(vec_col), dim)
-        if dim is not None
-        else F.col(vec_col)
+    per row (an inline norm inside the division lambda would re-run the
+    whole fold per element); ``dim`` is ``_dot``'s prefix length."""
+    v = F.transform(
+        _vec_checked(F.col(vec_col), dim), lambda x: x.cast("double")
     )
-    v = F.transform(src, lambda x: x.cast("double"))
-    staged = df.withColumn("__vd", v)
-    nc = (
-        F.sqrt(_dot_fixed(F.col("__vd"), F.col("__vd"), dim))
-        if dim is not None
-        else _norm(F.col("__vd"))
+    staged = df.withColumn("__vd", v).withColumn(
+        "__n", F.sqrt(_dot(F.col("__vd"), F.col("__vd"), dim))
     )
-    staged = staged.withColumn("__n", nc)
     return staged.withColumn(
         "__unit", F.transform(F.col("__vd"), lambda x: x / F.col("__n"))
     ).drop("__vd", "__n")
@@ -477,7 +464,8 @@ def cosine_topk(
         F.col("__id") != F.col("query_id")
     )
     cos = _dot(F.col("__q"), F.col("__v")) / (
-        _norm(F.col("__q")) * _norm(F.col("__v"))
+        F.sqrt(_dot(F.col("__q"), F.col("__q")))
+        * F.sqrt(_dot(F.col("__v"), F.col("__v")))
     )
     scored = scored.withColumn("cosine", F.round(cos, 6))
     w = Window.partitionBy("query_id").orderBy(
@@ -629,7 +617,8 @@ def cosine_topk_lsh(
         F.broadcast(qv.where(F.col("query_id").isin(*query_ids))), "query_id"
     ).join(_maybe_broadcast(base, n_rows), "__id")
     cos = _dot(F.col("__q"), F.col("__v")) / (
-        _norm(F.col("__q")) * _norm(F.col("__v"))
+        F.sqrt(_dot(F.col("__q"), F.col("__q")))
+        * F.sqrt(_dot(F.col("__v"), F.col("__v")))
     )
     scored = cand.withColumn("cosine", F.round(cos, 6))
     w = Window.partitionBy("query_id").orderBy(
@@ -658,25 +647,18 @@ def cosine_near_dup_pairs(
     The threshold is filtered on the UNROUNDED cosine (identical IEEE op
     order to DuckDB's list_dot_product) and rounded 6 dp only for output.
     Same quadratic-stage discipline as ``knn_graph_mutual``: per-row
-    norms (one dot per pair, not three), the unrolled codegen dot when
-    ``dim`` is known (the interpreted fold otherwise — both sum left to
-    right, so the bits never differ), and a CONDITIONAL stream-side
+    norms (one dot per pair, not three), ``_dot`` over ``dim`` elements
+    (all of each vector when ``dim`` is None), and a CONDITIONAL stream-side
     spread (``_spread``) so a single-file local input doesn't run the
     whole O(n²) stage on one core (49 s → 12 s at sf0.1 with dim=64)
     while a well-partitioned cluster input pays no extra exchange.
     """
-    src = (
-        _vec_checked(F.col(vec_col), dim)
-        if dim is not None
-        else F.col(vec_col)
-    )
-    vec_d = F.transform(src, lambda x: x.cast("double"))
-    dot = (
-        (lambda x, y: _dot_fixed(x, y, dim)) if dim is not None else _dot
+    vec_d = F.transform(
+        _vec_checked(F.col(vec_col), dim), lambda x: x.cast("double")
     )
     base = embeddings.select(
         F.col(id_col).alias("__id"), vec_d.alias("__v")
-    ).withColumn("__n", F.sqrt(dot(F.col("__v"), F.col("__v"))))
+    ).withColumn("__n", F.sqrt(_dot(F.col("__v"), F.col("__v"), dim)))
     a = _spread(base, "__id").select(
         F.col("__id").alias("id_a"),
         F.col("__v").alias("__va"),
@@ -687,7 +669,7 @@ def cosine_near_dup_pairs(
         F.col("__v").alias("__vb"),
         F.col("__n").alias("__nb"),
     )
-    cos = dot(F.col("__va"), F.col("__vb")) / (
+    cos = _dot(F.col("__va"), F.col("__vb"), dim) / (
         F.col("__na") * F.col("__nb")
     )
     return (
@@ -1377,7 +1359,7 @@ def vector_norms(
     vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     return embeddings.select(
         F.col(id_col).alias("vec_id"),
-        F.round(_norm(vec_d), 6).alias("l2_norm"),
+        F.round(F.sqrt(_dot(vec_d, vec_d)), 6).alias("l2_norm"),
     )
 
 
@@ -1711,7 +1693,7 @@ def semantic_dedup_replayable(
       separation and remains the recall-tuned pipeline default; this
       variant is the graded, engine-portable form.
     * within-cell cosines run on the RAW double vectors with the
-      unrolled left-to-right dot (``_dot_fixed``) — the exact IEEE op
+      left-to-right dot fold (``_dot``) — the exact IEEE op
       shape DuckDB's ``list_dot_product`` repeats, the
       ``cosine_near_dup_pairs`` parity precedent.  The unit-vector
       normalization of the float variant would add a division whose
@@ -1737,7 +1719,7 @@ def semantic_dedup_replayable(
     C = _sample_kmeans_int(base, nlist, n_rows)
     assigned = (
         base.withColumn("__cell", _int_cell_assigner(C)(F.col("__x")))
-        .withColumn("__n", F.sqrt(_dot_fixed(F.col("__x"), F.col("__x"), dim)))
+        .withColumn("__n", F.sqrt(_dot(F.col("__x"), F.col("__x"), dim)))
         .persist()
     )
     assigned.count()  # materialize before the self-join
@@ -1754,7 +1736,7 @@ def semantic_dedup_replayable(
         F.col("__x").alias("__xb"),
         F.col("__n").alias("__nb"),
     )
-    cos = _dot_fixed(F.col("__xa"), F.col("__xb"), dim) / (
+    cos = _dot(F.col("__xa"), F.col("__xb"), dim) / (
         F.col("__na") * F.col("__nb")
     )
     # Threshold on the UNROUNDED cosine, computed in a SELECT after the
@@ -2283,7 +2265,7 @@ def knn_graph_mutual(
     already runs (``dedup_clusters``).
 
     This is the exact BASELINE: an O(n²) diagonal self-join scored with
-    the unrolled codegen dot (``_dot_fixed``), computing each unordered
+    the left-to-right dot fold (``_dot``), computing each unordered
     pair ONCE (a < b) and deriving both directions from it — at 100 TB
     candidates come from ``bucket_keys`` LSH buckets or the IVF cells
     instead, and the rank/mutual stages below apply unchanged to that
@@ -2303,7 +2285,7 @@ def knn_graph_mutual(
         F.transform(
             _vec_checked(F.col(vec_col), dim), lambda x: x.cast("double")
         ).alias("__v"),
-    ).withColumn("__n", F.sqrt(_dot_fixed(F.col("__v"), F.col("__v"), dim)))
+    ).withColumn("__n", F.sqrt(_dot(F.col("__v"), F.col("__v"), dim)))
     # The O(n²) scoring parallelism is the STREAM side's partition count
     # — the fixture parquet is one file/one partition, which would run
     # the whole quadratic stage on a single core (measured: 53 s single
@@ -2320,7 +2302,7 @@ def knn_graph_mutual(
         F.col("__v").alias("__vb"),
         F.col("__n").alias("__nb"),
     )
-    cos = _dot_fixed(F.col("__va"), F.col("__vb"), dim) / (
+    cos = _dot(F.col("__va"), F.col("__vb"), dim) / (
         F.col("__na") * F.col("__nb")
     )
     # Persist the scored halves: the union below reads them twice and
@@ -2412,7 +2394,7 @@ def knn_graph_mutual_lsh(
             _vec_checked(F.col(vec_col), dim), lambda x: x.cast("double")
         ).alias("__v"),
     ).withColumn(
-        "__n", F.sqrt(_dot_fixed(F.col("__v"), F.col("__v"), dim))
+        "__n", F.sqrt(_dot(F.col("__v"), F.col("__v"), dim))
     ).persist()
     n_rows = raw.count()
     if tables is None:
@@ -2445,7 +2427,7 @@ def knn_graph_mutual_lsh(
     # dot per pair) — computed in a SELECT after the equi-joins, never
     # pushed into a join condition (the _pair_cos interpreted-filter
     # trap).
-    cos = _dot_fixed(F.col("__va"), F.col("__vb"), dim) / (
+    cos = _dot(F.col("__va"), F.col("__vb"), dim) / (
         F.col("__na") * F.col("__nb")
     )
     # size-gated rejoin broadcast — see cosine_near_dup_lsh: unhinted,

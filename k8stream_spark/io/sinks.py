@@ -43,12 +43,18 @@ class FileSink:
 
     def flush(self, uid: str, ident: int, data: bytes) -> str:
         """Write a dot-prefixed temp file, then ``os.replace`` it onto the
-        final name: a crash mid-write leaves no partial final file."""
+        final name: a crash mid-write leaves no partial final file, and a
+        failed write or rename removes the temp file before re-raising."""
         path = os.path.join(self.directory, f"{uid}_{ident}.log")
         tmp = os.path.join(self.directory, f".{uid}_{ident}.log.tmp")
-        with open(tmp, "wb") as f:
-            f.write(data)
-        os.replace(tmp, path)
+        try:
+            with open(tmp, "wb") as f:
+                f.write(data)
+            os.replace(tmp, path)
+        except BaseException:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+            raise
         return path
 
 

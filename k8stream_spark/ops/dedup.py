@@ -50,12 +50,11 @@ def dedup_streaming(
     df: DataFrame,
     key: str = "id",
     ts_col: str = "ts",
-    ttl_seconds: int = DEDUP_TTL_SECONDS,
 ) -> DataFrame:
     """D1 (streaming form) — watermarked exact-once dedup on the key.
 
     The watermark delay plays the reference's cache TTL: duplicates within
-    ``ttl_seconds`` of event time are dropped, older state is evicted
+    ``DEDUP_TTL_SECONDS`` of event time are dropped, older state is evicted
     (reference flush.go:57-62 marks after flush with 3600 s expiry).
 
     Event-time watermarks require TIMESTAMP (not NTZ) — cast through the
@@ -66,9 +65,9 @@ def dedup_streaming(
     query's first start and the checkpoint keeps it on restart.
     """
     df = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return df.withWatermark(ts_col, f"{ttl_seconds} seconds").dropDuplicates(
-        [key]
-    )
+    return df.withWatermark(
+        ts_col, f"{DEDUP_TTL_SECONDS} seconds"
+    ).dropDuplicates([key])
 
 
 def keep_latest_version(

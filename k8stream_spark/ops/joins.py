@@ -30,21 +30,20 @@ def enrich_involved_object(
     event_key: str = "ref_uid",
     object_key: str = "uid",
     prefix: str = "obj_",
-    broadcast: bool = True,
 ) -> DataFrame:
     """J1 — event ⋈ involved object, left equi on UID
     (reference event.go:36, k8sclient.go:124-159).
 
     Left join: an unmatched ``ref_uid`` yields null object columns — the
     reference's cache-miss path degrades the same way rather than dropping
-    the event.  Broadcast by default: the object dimension is small
-    relative to the event stream.
+    the event.  Broadcast: the object dimension is small relative to the
+    event stream.
     """
-    dim = objects.select(
-        *[F.col(c).alias(f"{prefix}{c}") for c in objects.columns]
+    dim = F.broadcast(
+        objects.select(
+            *[F.col(c).alias(f"{prefix}{c}") for c in objects.columns]
+        )
     )
-    if broadcast:
-        dim = F.broadcast(dim)
     return events.join(
         dim, events[event_key] == dim[f"{prefix}{object_key}"], "left"
     )
@@ -57,7 +56,6 @@ def node_addresses(
     node_key: str = "name",
     addresses_col: str = "addresses",
     out_col: str = "address",
-    broadcast: bool = True,
 ) -> DataFrame:
     """J2 — event ⋈ node addresses, left equi on host name
     (reference event.go:41, k8sclient.go:95-122).
@@ -65,14 +63,14 @@ def node_addresses(
     Edge semantics pinned from the reference: an empty/unmatched host gets
     an **empty array**, not null (k8sclient.go:98-100 returns ``[]string{}``
     for the miss path before the error check; event.go:41 assigns whatever
-    comes back).
+    comes back).  Broadcast, like J1's dimension.
     """
-    dim = nodes.select(
-        F.col(node_key).alias("__node_name"),
-        F.col(addresses_col).alias(out_col),
+    dim = F.broadcast(
+        nodes.select(
+            F.col(node_key).alias("__node_name"),
+            F.col(addresses_col).alias(out_col),
+        )
     )
-    if broadcast:
-        dim = F.broadcast(dim)
     joined = events.join(
         dim, events[host_col] == dim["__node_name"], "left"
     ).drop("__node_name")
@@ -112,62 +110,32 @@ def conditional_pod_enrich(
     )
 
 
-def pod_label_frequencies(
-    pods: DataFrame,
-    labels_col: str = "labels",
-    fraction: float = 0.1,
-) -> DataFrame:
-    """Approximate pod count per distinct label (key, value) — the stats
-    table that drives J4's selective-anchor choice.
-
-    Label frequencies are slowly-changing statistics: they drift with
-    deployments, not with individual queries.  Compute this once,
-    ``persist()`` it, and hand it to ``label_selector_join`` via
-    ``label_freqs`` so repeated joins (a streaming pipeline's per-batch
-    enrichment, a bench loop, a dashboard) amortize the stats pass
-    instead of re-scanning pod labels per invocation.  The output is
-    O(distinct label pairs) rows — safely broadcastable at any pod count.
-    """
-    kv = pods.select(F.explode(F.col(labels_col)).alias("__k", "__v"))
-    sampled = kv.sample(fraction=fraction, seed=42) if fraction < 1.0 else kv
-    return sampled.groupBy("__k", "__v").agg(F.count(F.lit(1)).alias("__freq"))
+#: Share of the exploded pod labels ``_selective_anchor`` counts to
+#: estimate how many pods each selector entry matches.
+_ANCHOR_STATS_FRACTION = 0.1
 
 
-def _selective_anchor(
-    nonempty_svc: DataFrame,
-    pod_kv: DataFrame,
-    stats_fraction: float = 0.1,
-    label_freqs: DataFrame | None = None,
-) -> DataFrame:
+def _selective_anchor(nonempty_svc: DataFrame, pod_kv: DataFrame) -> DataFrame:
     """Pick, per service, the selector entry matching the fewest pods.
 
-    One aggregation over a ``stats_fraction`` sample of the exploded pod
-    labels gives an approximate count per distinct (k, v) — map-side
-    combined, output cardinality = distinct label pairs.  Sampling is
-    sound here because the counts only drive the anchor CHOICE (a
-    performance decision, never correctness — every anchor yields the
-    same verified pairs), and relative frequencies survive uniform
-    sampling.  The count table broadcasts onto the selector entries;
-    ``min_by`` over (count, key) picks the rarest entry deterministically
-    (key breaks count ties; selector keys are unique within a map).  An
-    entry absent from every sampled pod gets count 0 — maximally
-    selective; if that estimate is wrong the join is merely slower, still
-    exact.
-
-    ``label_freqs`` (from :func:`pod_label_frequencies`, ideally
-    persisted by the caller) skips the inline stats pass entirely.
+    One aggregation over an ``_ANCHOR_STATS_FRACTION`` sample of the
+    exploded pod labels gives an approximate count per distinct (k, v) —
+    map-side combined, output cardinality = distinct label pairs.
+    Sampling is sound here because the counts only drive the anchor
+    CHOICE (a performance decision, never correctness — every anchor
+    yields the same verified pairs), and relative frequencies survive
+    uniform sampling.  The count table broadcasts onto the selector
+    entries; ``min_by`` over (count, key) picks the rarest entry
+    deterministically (key breaks count ties; selector keys are unique
+    within a map).  An entry absent from every sampled pod gets count 0
+    — maximally selective; if that estimate is wrong the join is merely
+    slower, still exact.
     """
-    if label_freqs is not None:
-        freqs = label_freqs
-    else:
-        sampled = (
-            pod_kv.sample(fraction=stats_fraction, seed=42)
-            if stats_fraction < 1.0
-            else pod_kv
-        )
-        freqs = sampled.groupBy("__k", "__v").agg(
-            F.count(F.lit(1)).alias("__freq")
-        )
+    freqs = (
+        pod_kv.sample(fraction=_ANCHOR_STATS_FRACTION, seed=42)
+        .groupBy("__k", "__v")
+        .agg(F.count(F.lit(1)).alias("__freq"))
+    )
     entries = nonempty_svc.select(
         "service_uid", "__sel", F.explode(F.col("__sel")).alias("__k", "__v")
     )
@@ -198,11 +166,6 @@ def label_selector_join(
     labels_col: str = "labels",
     service_key: str = "uid",
     pod_key: str = "uid",
-    empty_selector_matches_all: bool = True,
-    broadcast_selectors: bool = True,
-    anchor: str = "selective",
-    anchor_stats_fraction: float = 0.1,
-    label_freqs: DataFrame | None = None,
 ) -> DataFrame:
     """J4 — service ⋈ pods via k8s label-selector containment
     (reference k8sclient.go:76-89, event_service.go:10-17): pod matches iff
@@ -215,27 +178,17 @@ def label_selector_join(
     entries are verified inline with ``forall`` against the pod's labels
     map.  Returns (service_uid, pod_uid) pairs.
 
-    ``anchor`` picks which entry drives the join:
-
-    * ``"selective"`` (default) — the entry whose (k, v) matches the
-      FEWEST pods, found by one cheap stats pass over the exploded pod
-      labels (map-side-combined count per distinct (k, v) — the
-      aggregation is O(distinct label pairs), not O(pods)).  Candidate
-      volume per service is then governed by its rarest entry, so one
-      low-selectivity leading key (e.g. a 5-value "seg" label) cannot
-      make a hot bucket holding 20% of all pods.
-    * ``"first"`` — the selector's first entry, skipping the stats pass;
-      right when selectors are known to lead with a selective key.
-
-    ``label_freqs`` — a precomputed (persisted) stats frame from
-    :func:`pod_label_frequencies`; skips the inline stats pass under
-    ``anchor="selective"``.  Use it wherever the join runs repeatedly
-    against slowly-changing pods (streaming enrichment, dashboards).
+    The anchor is the entry whose (k, v) matches the FEWEST pods
+    (``_selective_anchor``: one sampled stats pass over the exploded pod
+    labels, O(distinct label pairs) output).  Candidate volume per
+    service is then governed by its rarest entry, so one low-selectivity
+    leading key (e.g. a 5-value "seg" label) cannot make a hot bucket
+    holding 20% of all pods.  The selector side is broadcast.
 
     Empty-selector edge case, pinned per SURVEY §7.4: the reference formats
     an empty selector set to an empty string, and an empty k8s selector
-    string lists ALL pods (k8sclient.go:78-81) — so by default an
-    empty/null selector matches every pod.
+    string lists ALL pods (k8sclient.go:78-81) — so an empty/null
+    selector matches every pod.
     """
     svc = services.select(
         F.col(service_key).alias("service_uid"), F.col(selector_col).alias("__sel")
@@ -248,19 +201,7 @@ def label_selector_join(
         F.explode(F.col(labels_col)).alias("__k", "__v"),
     )
 
-    nonempty = svc.where(F.size(F.col("__sel")) > 0)
-    if anchor == "selective":
-        sel = _selective_anchor(
-            nonempty, pod_kv, anchor_stats_fraction, label_freqs
-        )
-    else:
-        first_entry = F.element_at(F.map_entries(F.col("__sel")), 1)
-        sel = nonempty.select(
-            "service_uid",
-            "__sel",
-            first_entry["key"].alias("__k"),
-            first_entry["value"].alias("__v"),
-        )
+    sel = _selective_anchor(svc.where(F.size(F.col("__sel")) > 0), pod_kv)
     # The anchor entry is ALREADY verified by the (__k, __v) equi-join
     # below, so the inline check only needs the REMAINING selector
     # entries.  Project them once on the (tiny, broadcast) selector
@@ -270,17 +211,17 @@ def label_selector_join(
     # (verified: identical 1,501,495 matched pairs at sf0.1).  A/B
     # min-of-3 at sf0.1: matched branch 3.36 → 2.07 s, full join
     # 3.20 → 1.90 s.
-    sel = sel.select(
-        "service_uid",
-        F.filter(
-            F.map_entries(F.col("__sel")),
-            lambda e: e["key"] != F.col("__k"),
-        ).alias("__rest"),
-        "__k",
-        "__v",
+    sel = F.broadcast(
+        sel.select(
+            "service_uid",
+            F.filter(
+                F.map_entries(F.col("__sel")),
+                lambda e: e["key"] != F.col("__k"),
+            ).alias("__rest"),
+            "__k",
+            "__v",
+        )
     )
-    if broadcast_selectors:
-        sel = F.broadcast(sel)
 
     # A pod missing a selector key yields element_at → null → forall null,
     # which the filter treats as false: non-matching pods drop, as required.
@@ -294,9 +235,6 @@ def label_selector_join(
         )
         .select("service_uid", "pod_uid")
     )
-
-    if not empty_selector_matches_all:
-        return matched
 
     empty_sel = svc.where(
         F.col("__sel").isNull() | (F.size(F.col("__sel")) == 0)
@@ -509,7 +447,6 @@ def service_pod_map_sharded(
     pod_key: str = "uid",
     name_col: str = "name",
     preshards: int = _POD_MAP_PRESHARDS,
-    broadcast_pods: bool = True,
 ) -> DataFrame:
     """A1's 100 TB form: per-service pod map SHARDED into rows of at
     most ``shard_size`` entries.
@@ -545,27 +482,24 @@ def service_pod_map_sharded(
     ranked = _ranked_pod_shards(
         pairs, pods, shard_size, pod_key, name_col, preshards
     )
-    pod_json = pods.select(
-        F.col(pod_key).alias("pod_uid"),
-        F.to_json(
-            F.struct(
-                F.col(pod_key).alias("uid"),
-                F.col(name_col).alias("name"),
-                F.col("namespace"),
-                F.col("pod_ip").alias("ip"),
-                F.col("host_ip"),
-            )
-        ).alias("__pod_json"),
+    # Broadcast: pods is the dim side (J1's established contract); an
+    # unhinted plan shuffles the full ranked PAIR stream by pod_uid here,
+    # which costs more than a wide window payload (measured 13.0 s vs
+    # 9.2 s at sf0.1).
+    pod_json = F.broadcast(
+        pods.select(
+            F.col(pod_key).alias("pod_uid"),
+            F.to_json(
+                F.struct(
+                    F.col(pod_key).alias("uid"),
+                    F.col(name_col).alias("name"),
+                    F.col("namespace"),
+                    F.col("pod_ip").alias("ip"),
+                    F.col("host_ip"),
+                )
+            ).alias("__pod_json"),
+        )
     )
-    if broadcast_pods:
-        # Broadcast: pods is the dim side (J1's established contract);
-        # an unhinted plan shuffles the full ranked PAIR stream by
-        # pod_uid here, which costs more than a wide window payload
-        # (measured 13.0 s vs 9.2 s at sf0.1).  ``broadcast_pods=False``
-        # is the J1-style escape hatch for pathological pod cardinality
-        # where the full-JSON dim side would not fit executor/driver
-        # memory.
-        pod_json = F.broadcast(pod_json)
     return (
         ranked.join(pod_json, "pod_uid")
         .groupBy("service_uid", "shard_id")

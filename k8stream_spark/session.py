@@ -8,8 +8,8 @@ Every knob here is chosen for the 100 TB posture:
     demotion are essential once partition statistics are only known at run
     time on big inputs.
   * ``spark.sql.shuffle.partitions`` defaults to ``cpu_count()``, one
-    partition per core the session runs on; an explicit
-    ``shuffle_partitions=`` wins.  For batch plans AQE's coalescing makes
+    partition per core the session runs on; ``extra_conf`` overrides it
+    like any other key.  For batch plans AQE's coalescing makes
     the number a ceiling rather than a tuning knob.  Stateful streaming
     operators are outside AQE: a query's first start freezes the count
     into its checkpoint (one state-store instance per partition per
@@ -42,23 +42,19 @@ def cpu_count() -> int:
 def get_spark(
     app_name: str = "k8stream_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
     ``master=None`` → ``local[cpu_count()]`` for local runs; pass an
     explicit master (or let spark-submit inject one) on a cluster.
-    ``shuffle_partitions=None`` → ``cpu_count()``.
+    ``extra_conf`` is applied last, so it overrides any key set here.
     """
     n = cpu_count()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{n}]")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or n),
-        )
+        .config("spark.sql.shuffle.partitions", str(n))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -72,10 +68,7 @@ def get_spark(
         # map-heavy aggregates at sf0.1), and a long many-query session
         # shows late GC tails at 8g.  Harmless when spark-submit
         # overrides.
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-        )
+        .config("spark.driver.memory", "16g")
         # A many-query session compiles hundreds of whole-stage-codegen
         # classes; the JVM's default 240m code cache fills mid-session,
         # JIT compilation stops, and every later query runs partially

@@ -36,12 +36,14 @@ import time
 from collections.abc import Iterator, Sequence
 from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.json as pj
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
     InputPartition,
 )
-from pyspark.sql.types import StructType, TimestampNTZType
+from pyspark.sql.types import StringType, StructType, TimestampNTZType
 
 
 def _schema_for(kind: str) -> StructType:
@@ -59,6 +61,12 @@ def _schema_for(kind: str) -> StructType:
 #: from line 0 (which multiplies total I/O by O(N/2) per slice when a
 #: single huge file is split).
 OFFSET_STRIDE = 1024
+
+#: Task-size ceiling (rows) for ``_repack``: split ranges above it for
+#: parallelism, pack smaller ones to amortize per-partition Python
+#: worker startup — the measured fixed cost behind the informer vs
+#: file-source gap.
+_ROWS_PER_PARTITION = 16384
 
 
 class _RangePartition(InputPartition):
@@ -90,30 +98,17 @@ class _SpoolSlices(InputPartition):
 
 class InformerStreamReader(DataSourceStreamReader):
     def __init__(self, schema: StructType, options: dict):
+        # Spark hands the reader its options with lower-cased keys
+        # (a CaseInsensitiveDict), so each is read by that key alone.
         self._path = options.get("path")
         if not self._path:
             raise ValueError("k8s_informer source requires option 'path'")
-        self._resync_s = int(
-            options.get("resyncinterval", options.get("resyncInterval", 0))
-        )
-        self._mode = str(options.get("mode", "permissive")).lower()
-        # Task sizing: split oversized ranges for parallelism, pack
-        # small ones to amortize per-partition Python worker startup —
-        # the measured fixed cost behind the informer vs file-source
-        # gap.  0 disables repacking (one task per raw range).
-        self._rows_per_part = int(
-            options.get(
-                "rowsperpartition", options.get("rowsPerPartition", 16384)
-            )
-        )
+        self._resync_s = int(options.get("resyncinterval", 0))
         # Task-count goal: a batch with the rows for it is cut into
         # minTasks equal tasks (``_repack``), one per core, so the read
         # runs in one wave.  ``informer_stream`` passes the session's
         # defaultParallelism; without the option the goal is 64 tasks.
-        self._min_tasks = max(
-            1,
-            int(options.get("mintasks", options.get("minTasks", 64))),
-        )
+        self._min_tasks = max(1, int(options.get("mintasks", 64)))
         # (path → (size, mtime_ns, count, sig, byte_offsets)) so
         # unchanged files are not re-read on every trigger
         # (driver-side; checkpointed offsets stay pure [count, sig] —
@@ -122,7 +117,6 @@ class InformerStreamReader(DataSourceStreamReader):
         self._count_cache: dict[
             str, tuple[int, int, int, str, list[int]]
         ] = {}
-        from pyspark.sql.types import StringType
 
         # Per-field coercion kind: "ts" normalizes to naive-UTC
         # datetimes, "str" stringifies non-string JSON values (the
@@ -138,12 +132,21 @@ class InformerStreamReader(DataSourceStreamReader):
 
         self._fields = [(f.name, _kind(f.dataType)) for f in schema.fields]
 
-        # Arrow fast path eligibility (see read()): only all-string/
-        # all-ntz schemas build clean columnar batches; map columns
-        # stay on the row path.
-        self._all_simple = all(
-            isinstance(f.dataType, (StringType, TimestampNTZType))
-            for f in schema.fields
+        # Arrow fast path (see read()): only all-string/all-ntz schemas
+        # parse to clean columnar batches; a schema with map columns
+        # (the service schema) has no Arrow schema and reads row tuples.
+        self._arrow_schema = (
+            pa.schema(
+                [
+                    pa.field(
+                        name,
+                        pa.timestamp("us") if kind == "ts" else pa.string(),
+                    )
+                    for name, kind in self._fields
+                ]
+            )
+            if all(kind != "raw" for _, kind in self._fields)
+            else None
         )
 
     def _gen(self) -> int:
@@ -267,21 +270,19 @@ class InformerStreamReader(DataSourceStreamReader):
     ) -> list[InputPartition]:
         """One pass: cut the batch's ranges, in range order, into
         consecutive groups of ``target`` rows, where ``target`` is
-        ``min(rowsPerPartition, max(OFFSET_STRIDE, ceil(total /
+        ``min(_ROWS_PER_PARTITION, max(OFFSET_STRIDE, ceil(total /
         minTasks)))``.  A group may span a file boundary (a
         ``_SpoolSlices``) and a big file splits across groups, so a
         batch with the rows for it runs as ``minTasks`` equal tasks —
-        one wave on ``minTasks`` cores — while ``rowsPerPartition``
+        one wave on ``minTasks`` cores — while ``_ROWS_PER_PARTITION``
         still caps any one task and OFFSET_STRIDE keeps tasks above the
         seek-checkpoint stride.  Deterministic given the same range
         list — the checkpoint-replay contract ``partitions`` already
         pins.  Single-range groups stay plain ``_RangePartition``."""
-        target = self._rows_per_part
-        if target <= 0:
-            return [self._annotate_seek(p) for p in parts]
         total = sum(p.end - p.start for p in parts)
         target = min(
-            target, max(OFFSET_STRIDE, -(-total // self._min_tasks))
+            _ROWS_PER_PARTITION,
+            max(OFFSET_STRIDE, -(-total // self._min_tasks)),
         )
         groups: list[list[_RangePartition]] = [[]]
         room = target
@@ -329,95 +330,36 @@ class InformerStreamReader(DataSourceStreamReader):
     def read(self, partition: InputPartition) -> Iterator:
         """Deliver the partition's line range(s) — a single
         ``_RangePartition`` or a packed ``_SpoolSlices`` group.  Fast
-        path: yield Arrow RecordBatches (Spark 4 Python data sources
-        accept them) instead of per-row pickled tuples.  Honest
-        accounting (SCALE.md): Arrow removed the row-at-a-time boundary
-        cost but most of the informer-vs-file-source gap is fixed
-        per-partition Python worker startup and driver-side offset
-        planning — hence ``_repack``'s task sizing.  Falls back to row
-        tuples when the schema has non-string/non-timestamp fields (the
-        service schema's map columns) or pyarrow is unavailable."""
+        path: when every range parses vectorized, yield their Arrow
+        RecordBatches (Spark 4 Python data sources accept them) instead
+        of per-row pickled tuples.  Otherwise — a malformed line or a
+        value only ``_coerce`` renders, or a schema with map columns —
+        yield row tuples for the whole partition, which Spark's data
+        source worker converts to Arrow itself (one iterator may not
+        mix the two).  Honest accounting (SCALE.md): Arrow removed the
+        row-at-a-time boundary cost but most of the informer-vs-file-
+        source gap is fixed per-partition Python worker startup and
+        driver-side offset planning — hence ``_repack``'s task
+        sizing."""
         ranges = (
             partition.slices
             if isinstance(partition, _SpoolSlices)
             else [partition]
         )
-        if self._arrow_schema() is not None:
-            return self._read_arrow(ranges)
-
-        def rows() -> Iterator[tuple]:
+        if self._arrow_schema is not None:
+            tables = []
             for r in ranges:
-                yield from self._read_rows(r)
-
-        return rows()
-
-    def _arrow_schema(self):
-        """pyarrow schema when every source field is string or
-        TimestampNTZ (``self._all_simple``, recorded at init from the
-        real Spark schema); None otherwise — map-typed columns (the
-        service schema) take the row path."""
-        if not self._all_simple:
-            return None
-        try:
-            import pyarrow as pa
-        except ImportError:  # pragma: no cover - pyarrow is baked in
-            return None
-        return pa.schema(
-            [
-                pa.field(
-                    name, pa.timestamp("us") if kind == "ts" else pa.string()
+                tbl = self._read_range_fast(r)
+                if tbl is None:
+                    break
+                tables.append(tbl)
+            else:
+                return (
+                    b for t in tables for b in t.to_batches(max_chunksize=8192)
                 )
-                for name, kind in self._fields
-            ]
-        )
+        return (row for r in ranges for row in self._read_rows(r))
 
-    def _read_arrow(self, ranges: list[_RangePartition]) -> Iterator:
-        import pyarrow as pa
-
-        schema = self._arrow_schema()
-        batch_rows = 4096
-        cols: list[list] = [[] for _ in self._fields]
-        n = 0
-        # Batches accumulate ACROSS the packed ranges — many tiny files
-        # still produce full-size Arrow batches.
-        for partition in ranges:
-            fast = self._read_range_fast(partition, schema)
-            if fast is not None:
-                # Flush any accumulated row-path rows first so delivery
-                # order stays range order.
-                if n:
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            pa.array(c, type=f.type)
-                            for c, f in zip(cols, schema)
-                        ],
-                        schema=schema,
-                    )
-                    cols = [[] for _ in self._fields]
-                    n = 0
-                yield from fast.to_batches(max_chunksize=8192)
-                continue
-            for row in self._read_rows(partition):
-                for i, v in enumerate(row):
-                    cols[i].append(v)
-                n += 1
-                if n >= batch_rows:
-                    yield pa.RecordBatch.from_arrays(
-                        [
-                            pa.array(c, type=f.type)
-                            for c, f in zip(cols, schema)
-                        ],
-                        schema=schema,
-                    )
-                    cols = [[] for _ in self._fields]
-                    n = 0
-        if n:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
-                schema=schema,
-            )
-
-    def _read_range_fast(self, p: _RangePartition, schema):
+    def _read_range_fast(self, p: _RangePartition):
         """Vectorized NDJSON parse of one range: slice the file at the
         driver-recorded byte bounds and hand the bytes to pyarrow's
         C++ line-delimited JSON reader with the EXPLICIT Arrow schema —
@@ -426,7 +368,7 @@ class InformerStreamReader(DataSourceStreamReader):
 
         Semantics are pinned to the row path by construction — every
         divergence ERRORS and returns None, falling back to
-        ``_read_rows`` for this range with full permissive behavior:
+        ``_read_rows`` for the partition with full permissive behavior:
         malformed lines, JSON numbers/bools/objects in string fields
         (``_coerce``'s json-text rendering), epoch-number timestamps,
         duplicate keys (json.loads keeps the last; pa.json refuses).
@@ -438,11 +380,6 @@ class InformerStreamReader(DataSourceStreamReader):
         newline-alignment guard as the seek path; misalignment or a
         row-count shortfall (file changed under the index) degrades to
         the row path, never to wrong rows."""
-        try:
-            import pyarrow as pa
-            import pyarrow.json as pj
-        except ImportError:  # pragma: no cover - pyarrow is baked in
-            return None
         seek_row = getattr(p, "seek_row", 0)
         seek_byte = getattr(p, "seek_byte", 0)
         end_byte = getattr(p, "end_byte", 0)
@@ -469,7 +406,7 @@ class InformerStreamReader(DataSourceStreamReader):
             tbl = pj.read_json(
                 pa.BufferReader(data),
                 parse_options=pj.ParseOptions(
-                    explicit_schema=schema,
+                    explicit_schema=self._arrow_schema,
                     unexpected_field_behavior="ignore",
                 ),
             )
@@ -480,7 +417,6 @@ class InformerStreamReader(DataSourceStreamReader):
         return tbl.slice(skip, take)
 
     def _read_rows(self, partition: _RangePartition) -> Iterator[tuple]:
-        permissive = self._mode != "failfast"
         # Binary mode so the seek target (a byte offset recorded by the
         # driver's binary count pass) is exact; json.loads accepts
         # UTF-8 bytes directly.  seek_row/seek_byte default to 0 —
@@ -519,15 +455,13 @@ class InformerStreamReader(DataSourceStreamReader):
                     try:
                         obj = json.loads(line)
                     except ValueError:
-                        if permissive:
-                            # PERMISSIVE parity with the JSON file source:
-                            # a malformed line must not kill the stream.
-                            # Offsets count non-blank lines (same rule as
-                            # latestOffset), so the skipped line still
-                            # advances idx to keep ranges aligned.
-                            idx += 1
-                            continue
-                        raise
+                        # PERMISSIVE parity with the JSON file source: a
+                        # malformed line must not kill the stream.
+                        # Offsets count non-blank lines (same rule as
+                        # latestOffset), so the skipped line still
+                        # advances idx to keep ranges aligned.
+                        idx += 1
+                        continue
                     yield tuple(
                         _coerce(obj.get(name), kind)
                         for name, kind in self._fields
@@ -542,14 +476,13 @@ def _coerce(value, kind: str):
     schema is TimestampNTZ, and a tz-aware value (ISO '...Z' or
     '+02:00') would error or shift with the session timezone.
 
-    ``"str"``: always yield str-or-None — a syntactically valid line
-    whose string field holds a JSON number/bool/object would otherwise
-    raise ArrowInvalid on the fast path (``pa.array(..., pa.string())``)
-    and kill the stream even in permissive mode, a harder failure than
-    the documented malformed-line tolerance.  Non-string values render
-    as their JSON text (5 → "5", true → "true", {...} → '{"..."}'),
-    which keeps the downstream permissive ``from_json`` decode
-    (ops/project.py) working on nested objects.
+    ``"str"``: always yield str-or-None, a non-string JSON value
+    rendered as its JSON text (5 → "5", true → "true", {...} →
+    '{"..."}') — the text the fast path's JSON reader cannot produce,
+    and which keeps the downstream permissive ``from_json`` decode
+    (ops/project.py) working on nested objects.  Spark's own
+    conversion of the row tuples would ``str()`` a nested object into
+    its Python repr instead.
 
     ``"raw"`` (map/struct fields, row path only): untouched — Spark's
     row-path converters expect the native shape (convert_map asserts
@@ -576,7 +509,12 @@ class K8sInformerDataSource(DataSource):
     * ``path`` (required): spool directory of JSON-lines files;
     * ``kind``: ``event`` (default) | ``service`` — picks the schema;
     * ``resyncInterval``: seconds between full re-lists, 0 disables
-      (reference default 120, config.go:8).
+      (reference default 120, config.go:8);
+    * ``minTasks``: the task-count goal for one micro-batch's read
+      (default 64; see ``InformerStreamReader._repack``).
+
+    Malformed lines are skipped (permissive, like Spark's JSON file
+    source).
     """
 
     @classmethod
@@ -605,9 +543,9 @@ def informer_stream(
     file-stream builders in streaming/pipeline.py.  ``minTasks`` is the
     session's ``defaultParallelism`` (the local core count, or the total
     executor cores on a cluster), so a batch's read is one task per core
-    (see ``_repack``); ``rowsPerPartition`` keeps the source default.
-    Set either option on ``readStream.format("k8s_informer")`` directly
-    to change it."""
+    (see ``_repack``), each at most ``_ROWS_PER_PARTITION`` rows.  Set
+    ``minTasks`` on ``readStream.format("k8s_informer")`` directly to
+    change it."""
     register(spark)
     return (
         spark.readStream.format("k8s_informer")

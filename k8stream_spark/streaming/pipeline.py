@@ -12,9 +12,11 @@ only binds them to ``readStream`` and a sink.
 
 Scale posture: the static dims are re-read every micro-batch (the
 reference's 3600 s cache TTL analog); dedup state lives in the RocksDB
-state store (session.py); sink writes go through the vectorized JSON
-writer.  The exact count-or-time flush (W1) runs inside foreachBatch via
-``Batcher`` semantics — Spark's trigger covers the time half natively.
+state store (session.py).  The reference-parity sink
+(``sink_foreach_batch``) fetches each micro-batch with one ``collect``
+and slices it into ``batch_size``-row NDJSON flushes — the count half of
+W1; Spark's trigger covers the time half.  ``distributed_json_sink`` is
+the scale sink: every partition writes through the JVM JSON writer.
 """
 
 from __future__ import annotations
@@ -34,7 +36,6 @@ def _source_stream(
     spark: SparkSession,
     source_dir: str,
     kind: str,
-    max_files_per_trigger: int | None,
     source_format: str,
     resync_interval: int,
 ) -> DataFrame:
@@ -47,16 +48,12 @@ def _source_stream(
             spark, source_dir, kind=kind, resync_interval=resync_interval
         )
     schema = K8S_SERVICE_SCHEMA if kind == "service" else K8S_EVENT_SCHEMA
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.json(source_dir)
+    return spark.readStream.schema(schema).json(source_dir)
 
 
 def build_event_stream(
     spark: SparkSession,
     source_dir: str,
-    max_files_per_trigger: int | None = None,
     source_format: str = "files",
     resync_interval: int = 0,
 ) -> DataFrame:
@@ -65,19 +62,15 @@ def build_event_stream(
     shape); ``"informer"`` reads the same directory through the custom
     ``k8s_informer`` DataSourceStreamReader (sources/informer.py), which
     models the reference's LIST→WATCH→RESYNC contract (main.go:77-94,
-    resync config.go:19-23) — identical schema and downstream plan.
-    ``maxFilesPerTrigger`` is the count half of the reference's
-    count-or-time batching at the source admission level."""
+    resync config.go:19-23) — identical schema and downstream plan."""
     return _source_stream(
-        spark, source_dir, "event", max_files_per_trigger, source_format,
-        resync_interval,
+        spark, source_dir, "event", source_format, resync_interval
     )
 
 
 def build_service_stream(
     spark: SparkSession,
     source_dir: str,
-    max_files_per_trigger: int | None = None,
     source_format: str = "files",
     resync_interval: int = 0,
 ) -> DataFrame:
@@ -85,55 +78,36 @@ def build_service_stream(
     own informer because changes don't surface on the events interface).
     Same source_format choice as ``build_event_stream``."""
     return _source_stream(
-        spark, source_dir, "service", max_files_per_trigger, source_format,
-        resync_interval,
+        spark, source_dir, "service", source_format, resync_interval
     )
 
 
 def transform_services(
     services: DataFrame,
     namespaces: Sequence[str] = (),
-    streaming_dedup: bool = True,
-    dedup_mode: str = "exact_watermark",
 ) -> DataFrame:
-    """The service-side hot path (reference handler.go:82-120): eligibility
-    (P1/P2/P4) → version dedup (D2) → L9Event synthesis (P10).
+    """The streaming service-side hot path (reference handler.go:82-120):
+    eligibility (P1/P2/P4) → version dedup (D2) → L9Event synthesis (P10).
 
-    Streaming dedup modes (``streaming_dedup=True``):
-
-    * ``"exact_watermark"`` — dropDuplicatesWithinWatermark on
-      (uid, resource_version): the reference's RUNTIME behavior (its cache
-      key is ``{uid}-{rv}``, handler.go:96-97, so only exact repeats ever
-      hit the ``>=`` branch).  Works under append output mode.
-    * ``"keep_latest"`` — ``stateful.keep_latest_stateful``: the ``>=``
-      comparison AS WRITTEN (handler.go:111) — also drops an out-of-order
-      OLDER version arriving after a newer one, matching the batch D2
-      oracle.  Requires update output mode (applyInPandasWithState).
+    The dedup is dropDuplicatesWithinWatermark on (uid, resource_version):
+    the reference's RUNTIME behavior (its cache key is ``{uid}-{rv}``,
+    handler.go:96-97, so only exact repeats ever hit the ``>=`` branch).
+    Works under append output mode.  The ``>=`` comparison as written
+    (handler.go:111) is ``ops.dedup.keep_latest_version`` in batch and
+    ``stateful.keep_latest_stateful`` in streaming.
     """
     from pyspark.sql import functions as F
 
     from k8stream_spark.ops import project as opsproject
 
     eligible = filters.eligible_services(services, namespaces=namespaces)
-    if streaming_dedup:
-        if dedup_mode == "keep_latest":
-            from k8stream_spark.streaming.stateful import keep_latest_stateful
-
-            deduped = keep_latest_stateful(
-                eligible, key="uid", version_col="resource_version"
-            )
-        else:
-            # the synthetic wall-clock arrival time bounds the dedup state
-            deduped = (
-                eligible.withColumn("__arrival", F.current_timestamp())
-                .withWatermark("__arrival", "1 hour")
-                .dropDuplicatesWithinWatermark(["uid", "resource_version"])
-                .drop("__arrival")
-            )
-    else:
-        deduped = dedup.keep_latest_version(
-            eligible, key="uid", version_col="resource_version"
-        )
+    # the synthetic wall-clock arrival time bounds the dedup state
+    deduped = (
+        eligible.withColumn("__arrival", F.current_timestamp())
+        .withWatermark("__arrival", "1 hour")
+        .dropDuplicatesWithinWatermark(["uid", "resource_version"])
+        .drop("__arrival")
+    )
     # Keep labels/annotations: the reference stamps service L9 events with
     # them (event_service.go:72-112) and the event side of union_streams
     # carries the same map<string,string> columns, so they align by name.
@@ -366,15 +340,14 @@ def near_dup_gate_sink(
     return fn
 
 
-def distributed_json_sink(base_path: str, compress_gzip: bool = True):
+def distributed_json_sink(base_path: str):
     """The scale sink: every partition writes in parallel through the JVM
-    JSON writer; one directory per micro-batch."""
+    JSON writer, gzipped; one directory per micro-batch."""
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
-        writer = batch_df.write.mode("overwrite")
-        if compress_gzip:
-            writer = writer.option("compression", "gzip")
-        writer.json(f"{base_path}/batch={batch_id}")
+        batch_df.write.mode("overwrite").option("compression", "gzip").json(
+            f"{base_path}/batch={batch_id}"
+        )
 
     return fn
 

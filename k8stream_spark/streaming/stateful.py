@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-DEDUP_TTL_SECONDS = 3600  # reference k8sclient.go:19-21 objectCacheExpiry
+from k8stream_spark.ops.dedup import DEDUP_TTL_SECONDS
 
 
 def dedup_ttl_stateful(

@@ -122,7 +122,8 @@ class Ctx:
                 F.col("__v").alias("__n"),
             )
             cos = sim._dot(F.col("__q"), F.col("__n")) / (
-                sim._norm(F.col("__q")) * sim._norm(F.col("__n"))
+                F.sqrt(sim._dot(F.col("__q"), F.col("__q")))
+                * F.sqrt(sim._dot(F.col("__n"), F.col("__n")))
             )
             bad = (
                 pairs.join(qv, "query_id")
@@ -149,7 +150,7 @@ class Ctx:
                 F.col("embedding"), lambda x: x.cast("double")
             ).alias("__v"),
         ).withColumn(
-            "__n", F.sqrt(sim._dot_fixed(F.col("__v"), F.col("__v"), 64))
+            "__n", F.sqrt(sim._dot(F.col("__v"), F.col("__v"), 64))
         )
         a = base.select(
             F.col("vec_id").alias("id_a"),
@@ -161,7 +162,7 @@ class Ctx:
             F.col("__v").alias("__vb"),
             F.col("__n").alias("__nb"),
         )
-        exact_cos = sim._dot_fixed(F.col("__va"), F.col("__vb"), 64) / (
+        exact_cos = sim._dot(F.col("__va"), F.col("__vb"), 64) / (
             F.col("__na") * F.col("__nb")
         )
         return a, b, exact_cos

@@ -95,9 +95,7 @@ def main() -> None:
                 src,
                 objects,
                 nodes,
-                sink_fn=distributed_json_sink(
-                    f"{work}/out-{tag}", compress_gzip=True
-                ),
+                sink_fn=distributed_json_sink(f"{work}/out-{tag}"),
                 checkpoint_dir=f"{work}/ckpt-{tag}",
                 available_now=True,
                 namespaces=(),

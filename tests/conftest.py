@@ -23,7 +23,11 @@ def _t(seconds: int) -> dt.datetime:
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", master="local[4]", shuffle_partitions=4)
+    s = get_spark(
+        "tests",
+        master="local[4]",
+        extra_conf={"spark.sql.shuffle.partitions": "4"},
+    )
     yield s
     s.stop()
 

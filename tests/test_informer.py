@@ -10,6 +10,7 @@ import os
 import time
 
 from k8stream_spark.io.sinks import MemorySink
+from k8stream_spark.sources import informer
 from k8stream_spark.sources.informer import (
     InformerStreamReader,
     _schema_for,
@@ -175,14 +176,37 @@ def test_permissive_skips_malformed_lines(tmp_path):
     parts = r.partitions(r.initialOffset(), r.latestOffset())
     assert [row[0] for row in _rows(r, parts)] == ["e1", "e2"]
 
-    import pytest
 
-    strict = InformerStreamReader(
-        _schema_for("event"), {"path": src, "mode": "failfast"}
+def test_row_fallback_through_spark_delivers_every_good_row(spark, tmp_path):
+    """A partition the vectorized parse declines — one malformed line and
+    one epoch-number ``creation_ts`` — reaches Spark as row tuples, which
+    Spark's data source worker converts to Arrow itself: a real
+    streaming query gets every good row, timestamps as naive UTC."""
+    from k8stream_spark.sources.informer import informer_stream
+
+    src = str(tmp_path / "spool")
+    os.makedirs(src)
+    iso = "2024-03-01T14:00:00+02:00"
+    with open(os.path.join(src, "a.json"), "w") as f:
+        f.write(json.dumps({"uid": "e1", "creation_ts": iso}) + "\n")
+        f.write("{not json at all\n")
+        f.write(json.dumps({"uid": "e2", "creation_ts": 1709294400}) + "\n")
+    seen = []
+    q = (
+        informer_stream(spark, src)
+        .writeStream.foreachBatch(
+            lambda df, _bid: seen.extend(
+                (r.uid, r.creation_ts)
+                for r in df.select("uid", "creation_ts").collect()
+            )
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
     )
-    parts = strict.partitions(strict.initialOffset(), strict.latestOffset())
-    with pytest.raises(ValueError):
-        _rows(strict, parts)
+    assert q.awaitTermination(120)
+    want = __import__("datetime").datetime(2024, 3, 1, 12, 0, 0)
+    assert sorted(seen) == [("e1", want), ("e2", want)]
 
 
 def test_shrunk_file_redelivers_new_content(tmp_path):
@@ -315,7 +339,7 @@ def test_non_string_values_in_string_fields_coerce_to_json_text(tmp_path):
     assert [row[0] for row in rows] == ["123", "e2"]
 
 
-def test_seek_misalignment_falls_back_to_line0_scan(tmp_path):
+def test_seek_misalignment_falls_back_to_line0_scan(tmp_path, monkeypatch):
     """A byte-offset checkpoint that lands mid-line (the rename-over
     race between latestOffset() and the executor task) must NOT shift
     rows off-by-one: the executor verifies the preceding byte is a
@@ -325,9 +349,9 @@ def test_seek_misalignment_falls_back_to_line0_scan(tmp_path):
     with open(os.path.join(src, "big.json"), "w") as f:
         for i in range(3000):
             f.write(json.dumps({"uid": f"b{i:04d}"}) + "\n")
+    monkeypatch.setattr(informer, "_ROWS_PER_PARTITION", 1024)
     r = InformerStreamReader(
-        _schema_for("event"),
-        {"path": src, "rowsPerPartition": "1024", "minTasks": "1"},
+        _schema_for("event"), {"path": src, "mintasks": "1"}
     )
     parts = r.partitions(r.initialOffset(), r.latestOffset())
     seeked = [
@@ -344,23 +368,23 @@ def test_seek_misalignment_falls_back_to_line0_scan(tmp_path):
     assert got == want == sorted(f"b{i:04d}" for i in range(3000))
 
 
-def test_repack_respects_parallelism_floor(tmp_path):
-    """rowsPerPartition is a CEILING, not the packing goal: with a
+def test_repack_respects_parallelism_floor(tmp_path, monkeypatch):
+    """_ROWS_PER_PARTITION is a CEILING, not the packing goal: with a
     minTasks floor, a batch with enough rows must spread over at least
-    ~minTasks tasks instead of packing down to total/rowsPerPartition
+    ~minTasks tasks instead of packing down to total/_ROWS_PER_PARTITION
     (measured 15% slower when 100k rows collapsed to 6 tasks on 32
     cores).  OFFSET_STRIDE (1024) bounds the effective target below."""
     src = str(tmp_path / "spool")
     os.makedirs(src)
-    # 8 files x 1024 rows; rowsPerPartition would pack them into ONE
-    # 8192-row task without the floor.
+    # 8 files x 1024 rows; a _ROWS_PER_PARTITION of 8192 would pack them
+    # into ONE 8192-row task without the floor.
     for j in range(8):
         with open(os.path.join(src, f"f{j}.json"), "w") as f:
             for i in range(1024):
                 f.write(json.dumps({"uid": f"{j}-{i}"}) + "\n")
+    monkeypatch.setattr(informer, "_ROWS_PER_PARTITION", 8192)
     r = InformerStreamReader(
-        _schema_for("event"),
-        {"path": src, "rowsPerPartition": "8192", "minTasks": "4"},
+        _schema_for("event"), {"path": src, "mintasks": "4"}
     )
     parts = r.partitions(r.initialOffset(), r.latestOffset())
     # effective target = min(8192, max(1024, 8192 // 4)) = 2048
@@ -376,16 +400,15 @@ def test_repack_respects_parallelism_floor(tmp_path):
     # 4096, i.e. exactly 2 packed tasks; a regression to the default
     # would yield 8 tasks of 1024 and fail here
     r2 = InformerStreamReader(
-        _schema_for("event"),
-        {"path": src, "rowsPerPartition": "8192", "minTasks": "2"},
+        _schema_for("event"), {"path": src, "mintasks": "2"}
     )
     parts2 = r2.partitions(r2.initialOffset(), r2.latestOffset())
     assert len(parts2) == 2
     # the ceiling still splits: one oversized file alone must not
     # serialize on a single task either
+    monkeypatch.setattr(informer, "_ROWS_PER_PARTITION", 1500)
     r1 = InformerStreamReader(
-        _schema_for("event"),
-        {"path": src, "rowsPerPartition": "1500", "minTasks": "1"},
+        _schema_for("event"), {"path": src, "mintasks": "1"}
     )
     parts1 = r1.partitions(r1.initialOffset(), r1.latestOffset())
     for p in parts1:
@@ -408,7 +431,7 @@ def test_repack_cuts_equal_groups_across_file_boundaries(tmp_path):
                 want.append(uid)
                 f.write(json.dumps({"uid": uid}) + "\n")
     r = InformerStreamReader(
-        _schema_for("event"), {"path": src, "minTasks": "4"}
+        _schema_for("event"), {"path": src, "mintasks": "4"}
     )
     parts = r.partitions(r.initialOffset(), r.latestOffset())
     groups = [p.slices if hasattr(p, "slices") else [p] for p in parts]
@@ -453,8 +476,8 @@ def test_informer_stream_batch_has_one_partition_per_core(spark, tmp_path):
     assert seen == [(cores, 2048 * cores)]
 
 
-def test_repack_splits_large_and_packs_small_ranges(tmp_path):
-    """Task sizing: ranges above the rowsPerPartition target split into
+def test_repack_splits_large_and_packs_small_ranges(tmp_path, monkeypatch):
+    """Task sizing: ranges above the _ROWS_PER_PARTITION target split into
     chunks (initial-LIST parallelism), tiny per-file ranges pack into
     one task (worker-startup amortization); the row stream is unchanged
     and replaying the same offsets yields the same groups."""
@@ -469,9 +492,8 @@ def test_repack_splits_large_and_packs_small_ranges(tmp_path):
             for i in range(2):
                 f.write(json.dumps({"uid": f"t{j}-{i}"}) + "\n")
 
-    r = InformerStreamReader(
-        _schema_for("event"), {"path": src, "rowsPerPartition": "10"}
-    )
+    monkeypatch.setattr(informer, "_ROWS_PER_PARTITION", 10)
+    r = InformerStreamReader(_schema_for("event"), {"path": src})
     start, end = r.initialOffset(), r.latestOffset()
     parts = r.partitions(start, end)
     sizes = []
@@ -500,14 +522,6 @@ def test_repack_splits_large_and_packs_small_ranges(tmp_path):
             out.append([(s.path, s.start, s.end) for s in slices])
         return out
     assert shape(parts) == shape(again)
-
-    # target 0 disables repacking: one partition per raw file range
-    r0 = InformerStreamReader(
-        _schema_for("event"), {"path": src, "rowsPerPartition": "0"}
-    )
-    parts0 = r0.partitions(r0.initialOffset(), r0.latestOffset())
-    assert all(not hasattr(p, "slices") for p in parts0)
-    assert len(parts0) == 6
 
 
 def test_raw_kind_passes_map_values_untouched():
@@ -550,9 +564,7 @@ def test_fast_path_identity_and_fallback(tmp_path):
 
     orig = InformerStreamReader._read_range_fast
     try:
-        InformerStreamReader._read_range_fast = (
-            lambda self, p, schema: None
-        )
+        InformerStreamReader._read_range_fast = lambda self, p: None
         rows_slow = _rows(r, parts)
     finally:
         InformerStreamReader._read_range_fast = orig
@@ -568,7 +580,6 @@ def test_fast_path_identity_and_fallback(tmp_path):
         p
         for p in r2.partitions(r2.initialOffset(), r2.latestOffset())
     ]
-    sch = r2._arrow_schema()
     bad = [
         p
         for p in parts2
@@ -582,7 +593,7 @@ def test_fast_path_identity_and_fallback(tmp_path):
     for p in bad:
         for s in getattr(p, "slices", [p]):
             if s.path.endswith("b.json"):
-                assert r2._read_range_fast(s, sch) is None
+                assert r2._read_range_fast(s) is None
     # ...and the row path still delivers the two good rows permissively
     uids = {row[0] for row in _rows(r2, parts2)}
     assert {"ok1", "ok2"} <= uids
@@ -596,7 +607,7 @@ def test_fast_path_identity_and_fallback(tmp_path):
     parts3 = r3.partitions(r3.initialOffset(), r3.latestOffset())
     for p in parts3:
         for s in getattr(p, "slices", [p]):
-            assert r3._read_range_fast(s, r3._arrow_schema()) is None
+            assert r3._read_range_fast(s) is None
     rows3 = _rows(r3, parts3)
     assert rows3[0][0] == "t1" and rows3[0][1].year == 2025
 

@@ -27,6 +27,7 @@ def test_get_spark_defaults_partitions_to_cpu_count(spark, monkeypatch):
     before = spark.conf.get(key)
     try:
         assert get_spark("tests").conf.get(key) == "3"
-        assert get_spark("tests", shuffle_partitions=6).conf.get(key) == "6"
+        six = get_spark("tests", extra_conf={key: "6"})
+        assert six.conf.get(key) == "6"
     finally:
         spark.conf.set(key, before)

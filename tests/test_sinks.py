@@ -35,7 +35,7 @@ def test_file_sink_layout(tmp_path):
 
 def test_file_sink_crash_mid_write_leaves_no_final_file(tmp_path, monkeypatch):
     """A flush that dies before the rename leaves no file under the final
-    name, so a reader never sees a partial batch."""
+    name, so a reader never sees a partial batch, and no temp file."""
     def boom(src, dst):
         raise OSError("crash before rename")
 
@@ -43,6 +43,7 @@ def test_file_sink_crash_mid_write_leaves_no_final_file(tmp_path, monkeypatch):
     with pytest.raises(OSError, match="crash before rename"):
         FileSink(str(tmp_path)).flush("uid1", 7, b"payload\n")
     assert not (tmp_path / "uid1_7.log").exists()
+    assert os.listdir(tmp_path) == []
 
 
 def test_file_sink_dir_validation(tmp_path):

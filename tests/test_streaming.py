@@ -94,7 +94,7 @@ def test_streaming_distributed_sink(spark, objects_df, nodes_df, tmp_path):
         src,
         objects_df,
         nodes_df,
-        sink_fn=distributed_json_sink(out, compress_gzip=True),
+        sink_fn=distributed_json_sink(out),
         checkpoint_dir=str(tmp_path / "ckpt2"),
         available_now=True,
     )
@@ -279,57 +279,6 @@ def test_unified_pipeline_unions_both_streams(
     assert svc["reference_version"] == "10"
     # event rows keep their enrichment through the union
     assert by_id["e1"]["pod_name"] == "pod-1"
-
-
-def test_service_stream_keep_latest_drops_older(spark, tmp_path):
-    """transform_services(dedup_mode='keep_latest') E2E: an out-of-order
-    OLDER resource_version is dropped inside the streaming pipeline (the
-    handler.go:111 >= comparison as written), not just in the unit test."""
-    from k8stream_spark.streaming.pipeline import (
-        build_service_stream,
-        transform_services,
-    )
-
-    src = str(tmp_path / "svc_src")
-    services = [
-        dict(uid="s1", name="web", namespace="default", resource_version="5",
-             selector={}, labels={}, annotations={},
-             event_type="addedService"),
-        dict(uid="s1", name="web", namespace="default", resource_version="3",
-             selector={}, labels={}, annotations={},
-             event_type="updatedService"),  # older after newer -> drop
-        dict(uid="s1", name="web", namespace="default", resource_version="7",
-             selector={}, labels={}, annotations={},
-             event_type="updatedService"),  # newer -> keep
-    ]
-    os.makedirs(src, exist_ok=True)
-    with open(os.path.join(src, "services.json"), "w") as f:
-        for s in services:
-            f.write(json.dumps(s) + "\n")
-
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        stream = build_service_stream(spark, src)
-        out = transform_services(stream, dedup_mode="keep_latest")
-        emitted = []
-
-        def collect(batch_df, _bid):
-            emitted.extend(
-                (r["id"], r["reference_version"]) for r in batch_df.collect()
-            )
-
-        q = (
-            out.writeStream.outputMode("update")
-            .foreachBatch(collect)
-            .option("checkpointLocation", str(tmp_path / "ckpt-kl"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120)
-    finally:
-        spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
-
-    assert sorted(emitted) == [("s1-5", "5"), ("s1-7", "7")]
 
 
 def test_streaming_windowed_aggregation_with_watermark(spark, tmp_path):
