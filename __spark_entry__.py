@@ -641,7 +641,7 @@ def _ivf_recall_oracle_sql(
     return _ivf_training_sql(iters, dim).replace("__TAIL__", tail)
 
 
-# Oracle for docs_semantic_dedup (similarity.semantic_dedup_replayable):
+# Oracle for docs_semantic_dedup (similarity.semantic_dedup):
 # the IVF training replay provides every vector's final cell (asgf);
 # within a cell, each pair (a < b) is scored with the raw-double cosine
 # list_dot_product(xa,xb)/(sqrt(·)·sqrt(·)) — the identical left-to-
@@ -1878,22 +1878,19 @@ def _q_source_quota_cap(spark, sf_dir):
 
 
 def _q_semantic_dedup(spark, sf_dir):
-    # Hash-checked since r8: the replayable variant trains the
-    # integer-exact IVF quantizer, so cells, kept flags and dup_of
-    # pointers all replay in the DuckDB oracle
-    # (_semantic_dedup_oracle_sql).  The float seed-separated
-    # semantic_dedup stays the recall-tuned pipeline default, graded
-    # through its invariants companion below.
-    return similarity.semantic_dedup_replayable(
+    # The operator trains the integer-exact IVF quantizer, so cells,
+    # kept flags and dup_of pointers all replay in the DuckDB oracle
+    # (_semantic_dedup_oracle_sql).
+    return similarity.semantic_dedup(
         load_table(spark, sf_dir, "embeddings"), threshold=0.45
     )
 
 
 def _q_semantic_dedup_invariants(spark, sf_dir):
-    # Hash-checkable shadow of docs_semantic_dedup: three integer
-    # properties (coverage, within-cell completeness, pointer totality)
-    # that hold for ANY cell assignment, so the oracle can grade them
-    # without reproducing the engine-specific cells.
+    # Property companion of docs_semantic_dedup: three integers
+    # (coverage, within-cell completeness, pointer totality) that hold
+    # for ANY cell assignment, so the oracle grades them without
+    # reproducing the quantizer.
     return similarity.semantic_dedup_invariants(
         load_table(spark, sf_dir, "embeddings"), threshold=0.45
     )
@@ -3303,18 +3300,16 @@ _PCA_TOP2_TAIL = (
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-equivalent SQL per query — COMPLETE since r8: every
-    registered query has an oracle.  The approximate pipelines are
-    hash-checked end to end where the engine decisions are integer-exact:
-    emb_cosine_topk_lsh / emb_cosine_near_dup_lsh (_LSH_CTE),
-    docs_dedup_simhash (sha256 token hash), emb_cosine_topk_ivf
-    (_ivf_oracle_sql replays quantizer training, assignment, probing and
-    rerank bit-for-bit), the recall reports (emb_ann/_ivf/_adc and
-    docs_minhash_recall_report — BOTH sides replayed, so the recall
-    numbers themselves hash-check), docs_semantic_dedup (the replayable int-
-    quantizer variant — cells, kept flags and dup_of pointers replay via
-    _semantic_dedup_oracle_sql; the float seed-separated semantic_dedup
-    remains graded through its invariants companion) and
+    """DuckDB-equivalent SQL per query — every registered query has
+    one.  The approximate pipelines are hash-checked end to end where
+    the engine decisions are integer-exact: emb_cosine_topk_lsh /
+    emb_cosine_near_dup_lsh (_LSH_CTE), docs_dedup_simhash (sha256
+    token hash), emb_cosine_topk_ivf (_ivf_oracle_sql replays quantizer
+    training, assignment, probing and rerank bit-for-bit), the recall
+    reports (emb_ann/_ivf/_adc and docs_minhash_recall_report — BOTH
+    sides replayed, so the recall numbers themselves hash-check),
+    docs_semantic_dedup (the integer quantizer — cells, kept flags and
+    dup_of pointers replay via _semantic_dedup_oracle_sql) and
     events_approx_user_counts (the replayable HLL — the estimate itself
     replays via _hll_oracle_sql; Spark's HLL++ stays covered through
     events_approx_distinct_bound's 3×rsd contract)."""
@@ -4049,8 +4044,8 @@ def oracle_sql() -> dict[str, str]:
         """,
         # Property oracle: the three integers hold for ANY cell
         # assignment (coverage / within-cell completeness / pointer
-        # totality), so the engine-specific k-means cells never need
-        # reproducing — see similarity.semantic_dedup_invariants.
+        # totality), so the quantizer never needs reproducing — see
+        # similarity.semantic_dedup_invariants.
         "docs_semantic_dedup_invariants": """
             SELECT (SELECT COUNT(*) FROM embeddings) AS n_vectors,
                    CAST(0 AS BIGINT) AS same_cell_missed_pairs,

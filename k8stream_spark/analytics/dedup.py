@@ -720,11 +720,11 @@ def containment_dedup(
     fingerprints (its own set is the covered one — Broder's containment
     is asymmetric); on equal counts the larger id drops, keeping the
     house lowest-id-survives convention.  ``contained_in`` is the
-    smallest container id, RAW like ``semantic_dedup.dup_of`` — on a
-    chain c ⊂ b ⊂ a both b and c drop and c may point at the dropped b;
-    follow pointers to a kept root for transitive substitution (ids do
-    not necessarily decrease along containment chains, but the pointer
-    walk is bounded by chain depth).
+    smallest container id, RAW like ``similarity.semantic_dedup``'s
+    ``dup_of`` — on a chain c ⊂ b ⊂ a both b and c drop and c may point
+    at the dropped b; follow pointers to a kept root for transitive
+    substitution (ids do not necessarily decrease along containment
+    chains, but the pointer walk is bounded by chain depth).
 
     Output: one row per input doc — (doc_id, kept, contained_in).
     Scale adds nothing beyond ``containment_pairs``: one groupBy-min

@@ -757,30 +757,15 @@ def cosine_near_dup_lsh(
     )
 
 
-def _cell_assigner(C: np.ndarray):
-    """Arrow-batched argmax cell assignment against a fixed centroid
-    matrix (broadcast in the UDF closure) — shared by the IVF index and
-    semantic dedup.  One numpy matmul per Arrow batch."""
-
-    @pandas_udf("int")
-    def cell_of(u: pd.Series) -> pd.Series:
-        if u.empty:
-            return pd.Series([], dtype="int32")
-        U = np.vstack(u.to_numpy())
-        return pd.Series(np.argmax(U @ C.T, axis=1).astype("int32"))
-
-    return cell_of
-
-
 def _pair_cos(a: Column, b: Column) -> Column:
     """Verification dot as an Arrow-batched einsum over pre-normalized
     unit vectors: an unrolled expression filter gets pushed into the
     join as a 128-term condition, which falls out of whole-stage codegen
     and evaluates interpreted (measured 4× slower end-to-end).  The UDF
     keeps the joins as plain equi-joins and verifies a whole Arrow batch
-    per numpy call.  Shared by LSH near-dup, IVF top-k, and semantic
-    dedup.  (A factory, not a module-level @pandas_udf: decoration needs
-    an active SparkSession, which doesn't exist at import time.)
+    per numpy call.  Shared by LSH near-dup and the IVF rerank.  (A
+    factory, not a module-level @pandas_udf: decoration needs an active
+    SparkSession, which doesn't exist at import time.)
 
     Marked ``asNondeterministic``: the consumers all
     follow the ``withColumn("__cos", …).where(__cos >= t)`` shape, and
@@ -872,7 +857,8 @@ def _check_label_cardinality(
 def _quantize_ivf(X: np.ndarray) -> np.ndarray:
     """floor(x*1e4 + 0.5) per coordinate as int64 — the same IEEE double
     expression every engine evaluates identically (cf. the hyperplane-LSH
-    bucketing, bucket_keys)."""
+    bucketing, bucket_keys).  The one quantization of the IVF index, the
+    PQ codebooks and ``semantic_dedup``'s cells."""
     return np.floor(X * _IVF_QSCALE + 0.5).astype(np.int64)
 
 
@@ -907,10 +893,11 @@ def _sample_kmeans_int(
     return_sample: bool = False,
 ) -> np.ndarray | tuple[np.ndarray, np.ndarray]:
     """Integer-exact spherical-assignment k-means on a bounded,
-    deterministic sample — the cross-engine-reproducible twin of
-    ``_sample_kmeans``, used by the IVF index so a SQL oracle can replay
-    quantizer training bit-for-bit (same trick as the hyperplane-LSH
-    integer bucketing):
+    deterministic sample — the FAISS pattern (quantizer fit needs only a
+    sample; recall is governed by nprobe, not centroid polish) made
+    cross-engine-reproducible: the one coarse quantizer of the IVF
+    index and ``semantic_dedup``, so a SQL oracle can replay training
+    bit-for-bit (same trick as the hyperplane-LSH integer bucketing):
 
     * sample row r is selected when ``sha256(str(id))[:15hex] % 1000 <
       permille`` (permille = max_train·1000 // n_rows, integer division)
@@ -966,7 +953,8 @@ def _int_cell_assigner(C: np.ndarray):
     double vector column: quantize the batch, exact int64 matmul against
     the centroid matrix (closure-broadcast), argmax of the exact-parts
     cosine with first-max (= smallest cell) ties — the distributed twin
-    of the training loop's assignment step."""
+    of the training loop's assignment step, shared by the IVF index and
+    ``semantic_dedup``."""
 
     @pandas_udf("int")
     def cell_of(x: pd.Series) -> pd.Series:
@@ -978,92 +966,6 @@ def _int_cell_assigner(C: np.ndarray):
         )
 
     return cell_of
-
-
-def _sample_kmeans(
-    norm_d: DataFrame,
-    nlist: int,
-    n_rows: int,
-    max_train: int = 20000,
-    iters: int = 8,
-    seed_min_cos: float | None = None,
-) -> np.ndarray:
-    """Spherical k-means trained on a bounded, deterministic sample —
-    the FAISS pattern: quantizer training needs only a sample (cells
-    must roughly follow the data; recall is governed by nprobe), so the
-    fit is O(sample) driver-side numpy instead of a distributed
-    iteration.  On unit vectors euclidean assignment is monotone in
-    cosine, so spherical centroids are the right geometry.
-
-    Determinism: the sample is hash-selected (no RNG, no partition-order
-    dependence), init takes the hash-least ``nlist`` sample rows, and
-    Lloyd iterations are pure numpy — identical centroids every run.
-    Returns the (<=nlist, dim) centroid matrix, unit-normalized.
-
-    ``seed_min_cos`` (used by ``semantic_dedup``): when set, no two
-    centroids may be within that cosine of each other.  Init selects
-    seeds greedily in hash order, SKIPPING a candidate whose cosine to
-    any already-chosen seed >= seed_min_cos, and after Lloyd any
-    centroid pair still closer than the bound is merged (greedy keep
-    in index order).  Without this, two near-duplicate vectors can both
-    seed singleton clusters that Lloyd never merges (each centroid
-    converges onto its own seed), permanently splitting the pair across
-    cells — a recall hole that scales with the training sample, not the
-    data.  The returned matrix may therefore have FEWER than ``nlist``
-    rows: a dedup radius of t forbids cells finer than t apart, so cell
-    granularity is bounded by the dedup threshold by construction.
-    """
-    # max(1, ...): at n_rows > max_train*1000 the integer ratio floors to
-    # 0 and the sample would be empty — exactly at the scale this path
-    # exists for.  The hash-ordered sort has __id as tiebreak so the
-    # sampled rows (and therefore the C = X[:nlist] init) are identical
-    # on any partitioning — hash buckets alone have only 1000 distinct
-    # values, which would leave tie order partition-dependent.
-    _check_max_train(max_train)
-    frac_permille = max(1, min(1000, int(max_train * 1000 / max(1, n_rows))))
-    sample = norm_d.select(
-        "__id",
-        "__u",
-        F.pmod(F.xxhash64(F.col("__id").cast("string")), 1000).alias("__h"),
-    ).where(F.col("__h") < frac_permille)
-    rows = sample.orderBy("__h", "__id").limit(max_train).collect()
-    X = np.asarray([r["__u"] for r in rows], dtype=float)
-    if len(X) < nlist:
-        raise ValueError(
-            f"sample ({len(X)}) smaller than nlist ({nlist}); "
-            "raise max_train or lower nlist"
-        )
-    if seed_min_cos is None:
-        C = X[:nlist].copy()
-    else:
-        # Greedy farthest-point-flavored init over the hash-ordered
-        # sample: a candidate too close to an existing seed is the same
-        # prospective cell, not a new one.
-        seeds: list[np.ndarray] = []
-        for row in X:
-            if len(seeds) >= nlist:
-                break
-            if all(float(row @ s) < seed_min_cos for s in seeds):
-                seeds.append(row)
-        C = np.vstack(seeds) if seeds else X[:1].copy()
-    for _ in range(iters):
-        assign = np.argmax(X @ C.T, axis=1)
-        for c in range(len(C)):
-            members = X[assign == c]
-            if len(members):
-                m = members.mean(axis=0)
-                norm = np.linalg.norm(m)
-                if norm > 0:
-                    C[c] = m / norm
-    if seed_min_cos is not None and len(C) > 1:
-        # Lloyd can still drift two centroids together; merge (greedy
-        # keep in index order) so the invariant survives the iterations.
-        kept: list[np.ndarray] = []
-        for row in C:
-            if all(float(row @ s) < seed_min_cos for s in kept):
-                kept.append(row)
-        C = np.vstack(kept)
-    return C
 
 
 def ann_recall_report(
@@ -1499,6 +1401,40 @@ def quantize_int8(
     )
 
 
+def _same_cell_near_dups(
+    vecs: DataFrame, threshold: float, dim: int, *dup_cols: str
+) -> DataFrame:
+    """Every same-cell pair (keep_id < dup_id) of ``vecs`` (``__cell``,
+    ``__id``, raw double ``__x``, its norm ``__n``) whose cosine
+    ``_dot(xa, xb) / (na * nb)`` meets ``threshold``, carrying
+    ``dup_cols`` from the dup side.  ``semantic_dedup`` and its
+    invariants both read this one pair set.  Thresholded on the
+    UNROUNDED cosine, computed in a SELECT after the cell equi-join
+    (module convention; never inside a join condition)."""
+    left = vecs.select(
+        "__cell",
+        F.col("__id").alias("keep_id"),
+        F.col("__x").alias("__xa"),
+        F.col("__n").alias("__na"),
+    )
+    right = vecs.select(
+        "__cell",
+        F.col("__id").alias("dup_id"),
+        F.col("__x").alias("__xb"),
+        F.col("__n").alias("__nb"),
+        *dup_cols,
+    )
+    cos = _dot(F.col("__xa"), F.col("__xb"), dim) / (
+        F.col("__na") * F.col("__nb")
+    )
+    return (
+        left.join(right, "__cell")
+        .where(F.col("keep_id") < F.col("dup_id"))
+        .withColumn("__cos", cos)
+        .where(F.col("__cos") >= threshold)
+    )
+
+
 def semantic_dedup(
     embeddings: DataFrame,
     threshold: float = 0.85,
@@ -1525,186 +1461,33 @@ def semantic_dedup(
     follow the dup_of pointers to a kept root (a bounded walk: ids
     strictly decrease along the chain).
 
-    The quantizer is trained with ``seed_min_cos=threshold`` so no two
-    centroids are within the dedup radius of each other — otherwise a
-    near-duplicate pair can seed two singleton clusters that Lloyd
-    never merges, splitting the pair across cells forever (the
-    within-cell pass then can't see it).  Consequence: cell granularity
-    is bounded by the threshold, which is exactly the SemDedup contract
-    (clusters must be coarser than the dedup radius).
+    The quantizer is integer-exact (``_sample_kmeans_int`` /
+    ``_int_cell_assigner``, the IVF recipe), so the whole pipeline —
+    quantizer training, cell assignment, within-cell cosine dedup —
+    replays bit-for-bit in a DuckDB oracle, and the cells, kept flags
+    and dup_of pointers are hash-checked (``docs_semantic_dedup``):
+
+    * seeds are the first ``nlist`` sample rows.  A near-dup pair can
+      seed two cells and stay split; that is a CROSS-cell recall miss,
+      the class the SemDedup contract concedes (within a cell every
+      pair meeting the threshold is caught).
+    * within-cell cosines run on the RAW double vectors with the
+      left-to-right dot fold (``_dot``) — the exact IEEE op shape
+      DuckDB's ``list_dot_product`` repeats, the
+      ``cosine_near_dup_pairs`` parity precedent.  Normalizing to unit
+      vectors first would add a division whose placement differs
+      between engines.
 
     Scale posture (100 TB): the classic SemDedup trick IS the cluster
     prune — cosine pairs are only computed inside a cell, never across
     the corpus.  With nlist ~ sqrt(n) the expected cell size is sqrt(n),
     bounding per-cell pair work; hot cells are real data skew the paper
-    accepts (AQE skew-split handles the join).  Quantizer training is
-    the bounded hash-deterministic sample of ``_sample_kmeans`` —
-    driver-side state is the (nlist × dim) centroid matrix, nothing
-    else.  Assignment is one Arrow-batched argmax matmul; the pair join
-    is an equi-join on the cell id carrying (id, unit-vector) rows; the
-    dup-map groupBy shuffles 16-byte id pairs only.
-
-    Like the other kmeans-seeded ops (IVF, LSH) the cell boundaries are
-    engine-specific, so there is no SQL oracle — correctness is
-    pytest-bound against the exact all-pairs ``cosine_near_dup_pairs``
-    baseline (every same-cell exact pair must be caught; cross-cell
-    misses are the documented recall tradeoff).
-    """
-    norm_d = with_unit_vectors(embeddings, vec_col, dim=dim).select(
-        F.col(id_col).alias("__id"), F.col("__unit").alias("__u")
-    )
-    n_rows = norm_d.count()
-    if nlist is None:
-        nlist = max(4, int(n_rows ** 0.5 / 2))
-    norm_d = norm_d.persist()
-    C = _sample_kmeans(norm_d, nlist, n_rows, seed_min_cos=threshold)
-    assigned = norm_d.withColumn(
-        "__cell", _cell_assigner(C)(F.col("__u"))
-    ).persist()
-    assigned.count()  # materialize before the self-join
-    norm_d.unpersist()
-
-    left = assigned.select(
-        "__cell", F.col("__id").alias("keep_id"), F.col("__u").alias("__ua")
-    )
-    right = assigned.select(
-        "__cell", F.col("__id").alias("dup_id"), F.col("__u").alias("__ub")
-    )
-    # Threshold on the UNROUNDED cosine — module convention (see
-    # cosine_near_dup_pairs): rounding first would flag boundary pairs
-    # the exact baseline rejects.
-    dup_map = (
-        left.join(right, "__cell")
-        .where(F.col("keep_id") < F.col("dup_id"))
-        .withColumn("__cos", _pair_cos(F.col("__ua"), F.col("__ub")))
-        .where(F.col("__cos") >= threshold)
-        .groupBy("dup_id")
-        .agg(F.min("keep_id").alias("dup_of"))
-    )
-    return (
-        assigned.select(
-            F.col("__id").alias("vec_id"),
-            F.col("__cell").cast("bigint").alias("cell"),
-        )
-        .join(
-            dup_map.select(F.col("dup_id").alias("vec_id"), "dup_of"),
-            "vec_id",
-            "left",
-        )
-        .select(
-            "vec_id", "cell", F.col("dup_of").isNull().alias("kept"), "dup_of"
-        )
-    )
-
-
-def semantic_dedup_invariants(
-    embeddings: DataFrame,
-    threshold: float = 0.85,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int = 64,
-    nlist: int | None = None,
-) -> DataFrame:
-    """Hash-checkable contract for ``semantic_dedup``: the cell
-    boundaries are engine-specific (k-means seeded from a hash sample),
-    but three integer properties hold for ANY cell assignment, so an
-    oracle can grade them without reproducing the cells:
-
-    * ``n_vectors`` — every input vector appears exactly once in the
-      output (coverage; the left join drops/duplicates nothing).
-    * ``same_cell_missed_pairs`` — 0: for every same-cell pair (a < b)
-      with unrounded cosine ≥ threshold, b was removed.  This is the
-      SemDedup within-cell completeness guarantee (the documented recall
-      tradeoff is CROSS-cell pairs only).
-    * ``dup_without_pointer`` — 0: every removed vector carries a
-      ``dup_of`` pointer to the lower-id member that evicted it.
-
-    One row of integers; the oracle asserts the property values (count
-    from the table, zeros for the violation counters).  This is the
-    derived-metric companion the rows-only ``docs_semantic_dedup`` entry
-    points at — the estimate-bearing output stays visible there."""
-    res = semantic_dedup(
-        embeddings, threshold, vec_col, id_col, dim=dim, nlist=nlist
-    ).persist()
-    norm_d = with_unit_vectors(embeddings, vec_col, dim=dim).select(
-        F.col(id_col).alias("vec_id"), F.col("__unit").alias("__u")
-    )
-    tagged = res.join(norm_d, "vec_id")
-    left = tagged.select(
-        "cell",
-        F.col("vec_id").alias("id_a"),
-        F.col("__u").alias("__ua"),
-    )
-    right = tagged.select(
-        "cell",
-        F.col("vec_id").alias("id_b"),
-        F.col("kept").alias("kept_b"),
-        F.col("__u").alias("__ub"),
-    )
-    # Same unrounded-threshold discipline as semantic_dedup itself: the
-    # pair set checked here is exactly the pair set the operator saw.
-    # All three properties reduce to global scalars, so the forced
-    # single-partition exchanges are the semantically-required kind
-    # (PLANS.md convention); nothing per-row reaches the driver.
-    missed = (
-        left.join(right, "cell")
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(_pair_cos(F.col("__ua"), F.col("__ub")) >= threshold)
-        .agg(
-            F.sum(F.col("kept_b").cast("bigint"))
-            .cast("bigint")
-            .alias("same_cell_missed_pairs")
-        )
-        .na.fill(0)
-    )
-    totals = res.agg(
-        F.count(F.lit(1)).alias("n_vectors"),
-        F.sum((~F.col("kept") & F.col("dup_of").isNull()).cast("bigint"))
-        .cast("bigint")
-        .alias("dup_without_pointer"),
-    )
-    return totals.crossJoin(missed).select(
-        "n_vectors", "same_cell_missed_pairs", "dup_without_pointer"
-    )
-
-
-def semantic_dedup_replayable(
-    embeddings: DataFrame,
-    threshold: float = 0.85,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int = 64,
-    nlist: int | None = None,
-) -> DataFrame:
-    """``semantic_dedup`` with the INTEGER-EXACT coarse quantizer
-    (``_sample_kmeans_int`` / ``_int_cell_assigner``, the IVF recipe) so
-    the WHOLE pipeline — quantizer training, cell assignment, within-
-    cell cosine dedup — replays bit-for-bit in a DuckDB oracle and the
-    cell-bearing output is hash-checked, not just invariant-bounded.
-    Same columns as ``semantic_dedup``: (vec_id, cell, kept, dup_of).
-
-    Differences from the float variant, both deliberate:
-
-    * seeds are the first ``nlist`` sample rows (no ``seed_min_cos``
-      separation — greedy separation is sequential and not SQL-
-      replayable).  A near-dup pair can therefore seed two cells and
-      stay split; that is a CROSS-cell recall miss, the same class the
-      SemDedup contract already concedes.  The float variant keeps the
-      separation and remains the recall-tuned pipeline default; this
-      variant is the graded, engine-portable form.
-    * within-cell cosines run on the RAW double vectors with the
-      left-to-right dot fold (``_dot``) — the exact IEEE op
-      shape DuckDB's ``list_dot_product`` repeats, the
-      ``cosine_near_dup_pairs`` parity precedent.  The unit-vector
-      normalization of the float variant would add a division whose
-      placement differs between engines.
-
-    Scale posture is unchanged from ``semantic_dedup``: training reads
-    a bounded hash-deterministic sample (driver holds the nlist×dim
-    int64 centroid matrix only), assignment is one Arrow-batched
-    argmax matmul, the pair join is a cell equi-join, the dup-map
-    groupBy shuffles 16-byte id pairs.  Output is eagerly finalized
-    (``_cache.finalize``) releasing the assigned cache.
+    accepts (AQE skew-split handles the join).  Training reads a bounded
+    hash-deterministic sample (the driver holds the nlist×dim int64
+    centroid matrix only), assignment is one Arrow-batched argmax
+    matmul, the pair join is a cell equi-join, and the dup-map groupBy
+    shuffles 16-byte id pairs.  Output is eagerly finalized
+    (``_cache.finalize``), releasing the assigned cache.
     """
     base = embeddings.select(
         F.col(id_col).alias("__id"),
@@ -1724,28 +1507,8 @@ def semantic_dedup_replayable(
     )
     assigned.count()  # materialize before the self-join
     base.unpersist()
-    left = assigned.select(
-        "__cell",
-        F.col("__id").alias("keep_id"),
-        F.col("__x").alias("__xa"),
-        F.col("__n").alias("__na"),
-    )
-    right = assigned.select(
-        "__cell",
-        F.col("__id").alias("dup_id"),
-        F.col("__x").alias("__xb"),
-        F.col("__n").alias("__nb"),
-    )
-    cos = _dot(F.col("__xa"), F.col("__xb"), dim) / (
-        F.col("__na") * F.col("__nb")
-    )
-    # Threshold on the UNROUNDED cosine, computed in a SELECT after the
-    # cell equi-join (module convention; never inside a join condition).
     dup_map = (
-        left.join(right, "__cell")
-        .where(F.col("keep_id") < F.col("dup_id"))
-        .withColumn("__cos", cos)
-        .where(F.col("__cos") >= threshold)
+        _same_cell_near_dups(assigned, threshold, dim)
         .groupBy("dup_id")
         .agg(F.min("keep_id").alias("dup_of"))
     )
@@ -1766,6 +1529,68 @@ def semantic_dedup_replayable(
     from k8stream_spark.analytics._cache import finalize
 
     return finalize(out, assigned)
+
+
+def semantic_dedup_invariants(
+    embeddings: DataFrame,
+    threshold: float = 0.85,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    dim: int = 64,
+    nlist: int | None = None,
+) -> DataFrame:
+    """Three integer properties of ``semantic_dedup`` that hold for ANY
+    cell assignment, so an oracle grades them without reproducing the
+    quantizer:
+
+    * ``n_vectors`` — every input vector appears exactly once in the
+      output (coverage; the left join drops/duplicates nothing).
+    * ``same_cell_missed_pairs`` — 0: for every same-cell pair (a < b)
+      with unrounded cosine ≥ threshold, b was removed.  This is the
+      SemDedup within-cell completeness guarantee (the documented recall
+      tradeoff is CROSS-cell pairs only).  The pairs are scored by the
+      operator's own ``_same_cell_near_dups`` over the raw double
+      vectors, so the pair set checked is the pair set it saw.
+    * ``dup_without_pointer`` — 0: every removed vector carries a
+      ``dup_of`` pointer to the lower-id member that evicted it.
+
+    One row of integers; the oracle asserts the property values (count
+    from the table, zeros for the violation counters).  The operator's
+    output is persisted because both the totals and the pair check read
+    it."""
+    res = semantic_dedup(
+        embeddings, threshold, vec_col, id_col, dim=dim, nlist=nlist
+    ).persist()
+    raw = embeddings.select(
+        F.col(id_col).alias("__id"),
+        F.transform(
+            _vec_checked(F.col(vec_col), dim), lambda x: x.cast("double")
+        ).alias("__x"),
+    ).withColumn("__n", F.sqrt(_dot(F.col("__x"), F.col("__x"), dim)))
+    tagged = res.select(
+        F.col("vec_id").alias("__id"), F.col("cell").alias("__cell"), "kept"
+    ).join(raw, "__id")
+    # All three properties reduce to global scalars, so the forced
+    # single-partition exchanges are the semantically-required kind
+    # (PLANS.md convention); nothing per-row reaches the driver.
+    missed = (
+        _same_cell_near_dups(tagged, threshold, dim, "kept")
+        .agg(
+            F.sum(F.col("kept").cast("bigint"))
+            .cast("bigint")
+            .alias("same_cell_missed_pairs")
+        )
+        .na.fill(0)
+    )
+    totals = res.agg(
+        F.count(F.lit(1)).alias("n_vectors"),
+        F.sum((~F.col("kept") & F.col("dup_of").isNull()).cast("bigint"))
+        .cast("bigint")
+        .alias("dup_without_pointer"),
+    )
+    return totals.crossJoin(missed).select(
+        "n_vectors", "same_cell_missed_pairs", "dup_without_pointer"
+    )
 
 
 #: Product-quantization defaults: m subspaces × k codes.  k=16 keeps a

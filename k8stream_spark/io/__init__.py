@@ -4,7 +4,7 @@ reference io/ package re-expressed for Spark.
 """
 
 from k8stream_spark.io.batch import Batcher, batch_ident
-from k8stream_spark.io.ndjson import ndjson_bytes, write_single_ndjson
+from k8stream_spark.io.ndjson import ndjson_bytes
 from k8stream_spark.io.sinks import (
     FileSink,
     MemorySink,
@@ -16,7 +16,6 @@ __all__ = [
     "Batcher",
     "batch_ident",
     "ndjson_bytes",
-    "write_single_ndjson",
     "FileSink",
     "MemorySink",
     "S3Sink",

@@ -79,9 +79,10 @@ class S3Sink:
     class STANDARD_IA).
 
     The uploader is injected: in production pass a callable that PUTs to
-    object storage (or use the Spark-native ``write_single_ndjson`` to an
-    ``s3a://`` path, which streams multipart uploads through the s3a
-    committer — the idiomatic 100 TB path).  No AWS SDK is assumed here.
+    object storage (or use ``streaming.pipeline.distributed_json_sink``
+    with an ``s3a://`` base path, whose gzip JSON writer streams
+    multipart uploads through the s3a committer — the idiomatic 100 TB
+    path).  No AWS SDK is assumed here.
     """
 
     storage_class = "STANDARD_IA"  # reference io/flush_s3.go:81
@@ -105,7 +106,7 @@ class S3Sink:
         if self._upload is None:
             raise RuntimeError(
                 "S3Sink has no uploader configured; inject one or write via "
-                "write_single_ndjson to an s3a:// path"
+                "streaming.pipeline.distributed_json_sink to an s3a:// path"
             )
         self._upload(self.bucket, key, payload)
         return f"s3://{self.bucket}/{key}"

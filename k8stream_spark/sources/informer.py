@@ -308,7 +308,7 @@ class InformerStreamReader(DataSourceStreamReader):
         next count pass) degrades to the old skip-scan, never to wrong
         rows."""
         cached = self._count_cache.get(p.path)
-        offs = cached[4] if cached and len(cached) > 4 else None
+        offs = cached[4] if cached else None
         if offs:
             if p.start > 0:
                 k = min(p.start // OFFSET_STRIDE, len(offs) - 1)
@@ -380,22 +380,19 @@ class InformerStreamReader(DataSourceStreamReader):
         newline-alignment guard as the seek path; misalignment or a
         row-count shortfall (file changed under the index) degrades to
         the row path, never to wrong rows."""
-        seek_row = getattr(p, "seek_row", 0)
-        seek_byte = getattr(p, "seek_byte", 0)
-        end_byte = getattr(p, "end_byte", 0)
-        skip = p.start - seek_row
+        skip = p.start - p.seek_row
         take = p.end - p.start
         if skip < 0 or take <= 0:
             return None
         try:
             with open(p.path, "rb") as fh:
-                if seek_byte > 0:
-                    fh.seek(seek_byte - 1)
+                if p.seek_byte > 0:
+                    fh.seek(p.seek_byte - 1)
                     if fh.read(1) != b"\n":
                         return None  # index describes replaced content
                 data = (
-                    fh.read(end_byte - seek_byte)
-                    if end_byte > seek_byte
+                    fh.read(p.end_byte - p.seek_byte)
+                    if p.end_byte > p.seek_byte
                     else fh.read()
                 )
         except OSError:
@@ -423,9 +420,9 @@ class InformerStreamReader(DataSourceStreamReader):
         # checkpoints recorded at most OFFSET_STRIDE rows before
         # ``start``, so the skip-scan below is bounded, not O(file).
         with open(partition.path, "rb") as fh:
-            idx = getattr(partition, "seek_row", 0)
+            idx = partition.seek_row
             if idx:
-                seek_byte = getattr(partition, "seek_byte", 0)
+                seek_byte = partition.seek_byte
                 # Alignment guard: the offset index was recorded
                 # against the file identity seen at latestOffset(); if
                 # the path was renamed-over between planning and this

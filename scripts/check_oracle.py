@@ -87,6 +87,13 @@ def compare(name: str, spark_df: pd.DataFrame, oracle_df: pd.DataFrame) -> str:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    qs = entrymod.queries()
+    # A misspelled or stale name would otherwise be skipped silently and
+    # the run would still exit 0.
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown query names: {' '.join(unknown)}")
+        return 2
     spark = get_spark("oracle-check")
     con = duckdb.connect()
     # DuckDB shares the box with a 100+GB-heap JVM: cap its threads and
@@ -100,7 +107,6 @@ def main() -> int:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = 0
     for name, fn in qs.items():

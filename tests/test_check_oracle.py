@@ -115,3 +115,20 @@ def test_multiset_semantics(perturb):
         # occurred in a.  normalize() sorts whole rows, so this must
         # be rejected.
         assert compare("t", a, b).startswith("VAL")
+
+
+def test_unknown_query_name_exits_2_before_spark(monkeypatch, capsys):
+    # A stale name must fail the run, not be skipped into a green exit.
+    def no_spark(*a, **k):
+        raise AssertionError("get_spark called for an unknown query name")
+
+    monkeypatch.setattr(
+        check_oracle.entrymod, "queries", lambda: {"q_real": None}
+    )
+    monkeypatch.setattr(check_oracle, "get_spark", no_spark)
+    monkeypatch.setattr(
+        sys, "argv", ["check_oracle.py", "/nonexistent", "q_real", "q_gone"]
+    )
+    assert check_oracle.main() == 2
+    out = capsys.readouterr().out
+    assert "q_gone" in out and "q_real" not in out

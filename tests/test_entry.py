@@ -24,20 +24,18 @@ def test_oracle_keys_subset_of_queries():
     qs = set(entrymod.queries())
     os_ = set(entrymod.oracle_sql())
     assert os_ <= qs
-    # 142/142 since r8: the last two rows-only entries converted —
-    # docs_semantic_dedup now runs the integer-exact replayable variant
-    # (cells hash-checked via the IVF training replay) and
-    # events_approx_user_counts the replayable HLL (estimate itself
-    # oracle-replayed).  Every registered query carries an oracle.
+    # Every registered query carries an oracle, the approximate ones
+    # included: docs_semantic_dedup's cells replay through the integer
+    # IVF training and events_approx_user_counts' estimate through the
+    # replayable HLL.
     assert qs - os_ == set()
 
 
 # Building blocks invoked INSIDE registered operators, not operators
 # themselves — the only names allowed to have no presence in
 # __spark_entry__.py.  Adding an operator to this set requires the same
-# scrutiny as registering it: the r5 failure mode was two finished
-# operators (semantic_dedup, remove_boilerplate) that simply never
-# entered the registry and so were never graded.
+# scrutiny as registering it: an operator that never enters the
+# registry is never graded.
 NOT_OPERATORS = {
     "events.approx_user_counts",  # HLL++ stage of approx_distinct_bound
     # (the graded events_approx_user_counts surface is the replayable

@@ -4,6 +4,7 @@ recall against the brute-force baseline on the real embeddings table."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from k8stream_spark.analytics import similarity
 from k8stream_spark.sources.fixtures import load_table
@@ -133,10 +134,7 @@ def test_quantize_int8_closed_form(spark):
     assert r2.amax == 0.0 and r2.max_err_micro == 0
 
 
-def test_semantic_dedup_hand_vectors(spark):
-    # Two tight pairs + two isolated vectors; identical directions land
-    # in the same k-means cell by construction, so both pairs must be
-    # caught regardless of cell boundaries.
+def _hand_vectors(spark):
     rows = [
         (0, [1.0, 0.0, 0.0, 0.0]),
         (1, [0.999, 0.01, 0.0, 0.0]),   # dup of 0
@@ -145,7 +143,14 @@ def test_semantic_dedup_hand_vectors(spark):
         (4, [0.0, 0.0, 1.0, 0.0]),
         (5, [0.0, 0.0, 0.0, 1.0]),
     ]
-    df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    return spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+
+
+def test_semantic_dedup_hand_vectors(spark):
+    # Two tight pairs + two isolated vectors; identical directions land
+    # in the same k-means cell by construction, so both pairs must be
+    # caught regardless of cell boundaries.
+    df = _hand_vectors(spark)
     out = {r.vec_id: r for r in
            similarity.semantic_dedup(df, threshold=0.95, dim=4,
                                      nlist=4).collect()}
@@ -160,45 +165,56 @@ def test_semantic_dedup_hand_vectors(spark):
 
 
 def test_semantic_dedup_replayable_matches_contract(spark):
-    """The int-quantizer variant keeps the semantic_dedup contract:
-    one row per vector, within-cell near-dups flagged with a dup_of
-    pointer, kept vectors pointer-free — and on the fixture every
-    same-cell exact pair is caught (within-cell completeness)."""
+    """semantic_dedup keeps its contract on the fixture: one row per
+    vector, every same-cell exact pair caught (within-cell
+    completeness), every flagged vector traced to an exact same-cell
+    pair, kept vectors pointer-free and every dup_of pointing at a
+    lower id in the same cell."""
     emb = load_table(spark, SF_DIR, "embeddings")
     sd = {r.vec_id: r for r in
-          similarity.semantic_dedup_replayable(
-              emb, threshold=0.45).collect()}
+          similarity.semantic_dedup(emb, threshold=0.45).collect()}
     assert len(sd) == 500
     exact = {(r.id_a, r.id_b) for r in
              similarity.cosine_near_dup_pairs(emb, threshold=0.45).collect()}
     same_cell = {(a, b) for a, b in exact if sd[a].cell == sd[b].cell}
     for a, b in same_cell:
         assert not sd[b].kept, f"same-cell pair ({a},{b}) not flagged"
+    flagged = {v for v, r in sd.items() if not r.kept}
+    for v in flagged:
+        assert any(v == b and sd[a].cell == sd[b].cell for a, b in exact), v
     for v, r in sd.items():
         assert r.kept == (r.dup_of is None)
         if r.dup_of is not None:
             assert r.dup_of < v and sd[r.dup_of].cell == r.cell
 
 
-def test_semantic_dedup_same_cell_recall(spark):
-    # Every exact near-dup pair that lands in the same cell MUST be
-    # flagged; cross-cell misses are the documented recall tradeoff.
-    emb = load_table(spark, SF_DIR, "embeddings")
-    sd = {r.vec_id: r for r in
-          similarity.semantic_dedup(emb, threshold=0.45).collect()}
-    exact = {(r.id_a, r.id_b) for r in
-             similarity.cosine_near_dup_pairs(emb, threshold=0.45).collect()}
-    assert len(sd) == 500  # one row per vector, nothing dropped
-    same_cell = {(a, b) for a, b in exact if sd[a].cell == sd[b].cell}
-    for a, b in same_cell:
-        assert not sd[b].kept, f"same-cell pair ({a},{b}) not flagged"
-    flagged = {v for v, r in sd.items() if not r.kept}
-    # every flagged vector traces to a real exact near-dup pair
-    for v in flagged:
-        assert any(v == b and sd[a].cell == sd[b].cell for a, b in exact), v
-    if exact:
-        recall = len(same_cell) / len(exact)
-        assert recall >= 0.3, f"cluster recall {recall} too low"  # 0.57 measured
+def test_semantic_dedup_invariants_flags_a_broken_operator(spark, monkeypatch):
+    """Negative control: the invariants checker counts a same-cell pair
+    left unflagged and a removed vector without a pointer."""
+    df = _hand_vectors(spark)
+
+    def check():
+        return tuple(similarity.semantic_dedup_invariants(
+            df, threshold=0.95, dim=4, nlist=4).collect()[0])
+
+    assert check() == (6, 0, 0)
+    real = similarity.semantic_dedup
+
+    def broken(*args, **kwargs):
+        out = real(*args, **kwargs)
+        vid = F.col("vec_id")
+        return out.select(
+            "vec_id",
+            "cell",
+            (F.col("kept") | (vid == 1)).alias("kept"),
+            F.when(vid.isin(1, 3), F.lit(None)).otherwise(F.col("dup_of"))
+            .alias("dup_of"),
+        )
+
+    monkeypatch.setattr(similarity, "semantic_dedup", broken)
+    # vector 1 kept beside its same-cell evictor 0 -> 1 missed pair;
+    # vector 3 removed with no dup_of -> 1 pointer-less removal
+    assert check() == (6, 1, 1)
 
 
 def test_pq_encode_exact_on_clustered_vectors(spark):

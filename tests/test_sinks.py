@@ -13,7 +13,7 @@ import stat
 import pytest
 from pyspark.sql import functions as F
 
-from k8stream_spark.io.ndjson import gzip_bytes, ndjson_bytes, write_single_ndjson
+from k8stream_spark.io.ndjson import gzip_bytes, ndjson_bytes
 from k8stream_spark.io.sinks import FileSink, MemorySink, S3Sink, make_flusher
 
 
@@ -104,18 +104,6 @@ def test_gzip_bytes_roundtrip():
     # XFL (header byte 8) is 2 at the maximum level 9; the reference's
     # gzip.NewWriter default level 6 writes 0.
     assert payload[8] == 0
-
-
-def test_write_single_ndjson(spark, tmp_path):
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string")
-    dest = str(tmp_path / "out" / "batch.log")
-    write_single_ndjson(df, dest)
-    lines = [json.loads(l) for l in open(dest)]
-    assert sorted(lines, key=lambda r: r["id"]) == [
-        {"id": 1, "v": "a"}, {"id": 2, "v": "b"}]
-    gz = str(tmp_path / "out" / "batch.log.gz")
-    write_single_ndjson(df, gz, compress_gzip=True)
-    assert len([json.loads(l) for l in gzip.open(gz, "rt")]) == 2
 
 
 def test_write_sized_json_rolls_files(spark, tmp_path):
