@@ -2248,15 +2248,31 @@ def _grade_treeish(rnd: int) -> str:
 def _fn_sources(text: str) -> dict[str, str]:
     """name -> exact source segment for every top-level function in a
     version of this file (AST-extracted, so surrounding-file churn —
-    new oracles, new registrations — does not count as a change)."""
-    import ast
+    new oracles, new registrations — does not count as a change).
 
-    tree = ast.parse(text)
-    return {
-        n.name: ast.get_source_segment(text, n)
-        for n in tree.body
-        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
-    }
+    Equal to ``ast.get_source_segment(text, node)`` per def, but the
+    text is split into lines once, not once per def: a split per def
+    is quadratic in the file size."""
+    import ast
+    import re
+
+    # the parser's line rule: "\r\n", "\r" or "\n" ends a line, a form
+    # feed does not; col offsets are UTF-8 byte offsets into one line
+    lines = re.findall(r"[^\r\n]*(?:\r\n?|\n)|[^\r\n]+\Z", text)
+    out: dict[str, str] = {}
+    for n in ast.parse(text).body:
+        if not isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        first = lines[n.lineno - 1].encode()
+        if n.end_lineno == n.lineno:
+            out[n.name] = first[n.col_offset : n.end_col_offset].decode()
+            continue
+        out[n.name] = (
+            first[n.col_offset :].decode()
+            + "".join(lines[n.lineno : n.end_lineno - 1])
+            + lines[n.end_lineno - 1].encode()[: n.end_col_offset].decode()
+        )
+    return out
 
 
 def _module_paths() -> dict[str, str]:
@@ -2374,9 +2390,8 @@ _STALE_CACHE: set[str] | None = None
 
 def _changed_since_grade(reg: dict, graded: dict) -> set[str]:
     """Names whose newest GREEN grade predates a change to their code
-    path (r15, VERDICT r14 task 1: ``a1_service_pod_map_sharded``
-    shipped a semantics change in r14 under a stale r13 green and the
-    age queue would not have re-graded it until ~r16).
+    path, so a green-on-record query cannot ride a grade its current
+    code never earned.
 
     A query is stale when, comparing HEAD's working tree against the
     tree its newest grade actually ran on (``_grade_treeish``):
@@ -2388,7 +2403,7 @@ def _changed_since_grade(reg: dict, graded: dict) -> set[str]:
     Stale queries re-enter the red-first class in ``queries()`` and are
     re-graded the same round the change lands; the flag self-heals once
     the next grade records the new tree.  Any git/parse failure (or a
-    function the AST can't see) degrades to 'unchanged' — the plain r8
+    function the AST can't see) degrades to 'unchanged' — the plain
     red-first rotation is the fallback, never a crash and never a
     rotation collapse to all-red."""
     global _STALE_CACHE
@@ -2842,29 +2857,27 @@ def _q_reembed_worklist(spark, sf_dir):
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2 (+M6 layer).
 
-    ROTATION RULE (institutionalized round 5, red-first since round 8 —
-    do not hand-order): the driver grades only the first ~50 registered
-    entries per round, so the returned dict is sorted by the key
-    ``(last_grade_was_green, grading age, registration order)`` —
-    entries whose NEWEST grade was not green (never graded, hash-red,
+    ROTATION RULE (do not hand-order): the driver grades only the first
+    ~50 registered entries per round, so the returned dict is sorted by
+    the key ``(last_grade_was_green, grading age, registration order)``
+    — entries whose NEWEST grade was not green (never graded, hash-red,
     no_oracle, or hard error) sort before everything green, then
     ascending by the newest round each name was graded in
     (``_latest_graded_round`` over the committed CORRECTNESS_r*.json
     files), registration order as the stable tiebreak.  A red row fixed
-    this round therefore re-grades THIS round instead of waiting out the
-    age queue (the r7 verdict showed 4 fixed-but-red rows would
-    otherwise stay red on record until round 9).  With ~140 entries and
-    a 50/round budget a green entry is re-graded at worst every ~3
-    rounds; red and newly added entries are graded the round they land.
+    now is therefore re-graded in the next grading round instead of
+    waiting out the age queue.  With ~170 entries and a 50/round budget
+    a green entry is re-graded at worst every ~4 rounds; red and newly
+    added entries are graded the round they land.
 
-    STALENESS RULE (r15, VERDICT r14 task 1): a green entry whose code
-    path changed since its newest grade (``_changed_since_grade``: the
-    ``_q_`` function's AST source segment, any entry-module helper it
-    transitively calls, or any owning ``k8stream_spark`` module's git
-    blob differs between HEAD's working tree and the graded tree) is
-    demoted into the never-graded class, so a behavior change is
-    re-graded the round it lands instead of riding its stale green for
-    2-3 rounds.  Degrades to the plain rotation on any git failure.
+    STALENESS RULE: a green entry whose code path changed since its
+    newest grade (``_changed_since_grade``: the ``_q_`` function's AST
+    source segment, any entry-module helper it transitively calls, or
+    any owning ``k8stream_spark`` module's git blob differs between
+    HEAD's working tree and the graded tree) is demoted into the
+    never-graded class, so a behavior change is re-graded the round it
+    lands instead of riding a stale green.  Degrades to the plain
+    rotation on any git failure.
     """
     reg = {
         # Registration order only breaks ties within a grading-age class.
@@ -3050,12 +3063,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def _key(n):
         rnd, green = graded.get(n, (0, False))
         if n in stale:
-            # r15 (VERDICT r14 task 1): the query's code path changed
-            # since its newest green grade — a green-on-record row may
-            # be riding a stale grade, so treat it as never graded and
-            # re-grade it THIS round instead of waiting out the age
-            # queue (r14 shipped a semantics change to
-            # a1_service_pod_map_sharded under a stale r13 green).
+            # code path changed since its newest green grade: sort it
+            # with the never-graded entries
             rnd, green = 0, False
         return (green, rnd, order[n])
     return {name: reg[name] for name in sorted(reg, key=_key)}

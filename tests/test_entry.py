@@ -153,8 +153,8 @@ def test_oracle_output_types_have_spark_twins():
 
 
 # ---------------------------------------------------------------------------
-# Rotation staleness (r15, VERDICT r14 task 1): a green query whose code
-# path changed since its newest grade must re-grade THIS round.
+# Rotation staleness: a green query whose code path changed since its
+# newest grade sorts with the never-graded queries.
 # ---------------------------------------------------------------------------
 
 
@@ -223,6 +223,72 @@ def test_owned_paths_attribution():
     assert not any(p.endswith("__init__.py") for p in owned), owned
     owned2 = entrymod._owned_paths(cur_fns["_q_ivf_pq_topk"], alias_paths)
     assert "k8stream_spark/analytics/similarity.py" in owned2
+
+
+# One-line, decorated, async and redefined defs; multi-byte UTF-8 before
+# and inside the cut columns; CRLF, lone CR and LF line ends; form feeds
+# on a blank line and inside a string literal (not line ends); a class
+# method (not top-level) and a last line with no line end.
+_SYNTH_MODULE = (
+    "import os\r\n"
+    "def one(): return 'é中'  # trailing ü comment\r\n"
+    "\x0c\r\n"
+    "@staticmethod\r\n"
+    "@functools.cache\r\n"
+    "def decorated(x='ß'):\r\n"
+    "    return x + \"a\x0cb\"  # ε\r\n"
+    "\r\n"
+    "async def coro(a,\r\n"
+    "               b='日本'):\r"
+    "    \x0c\r\n"
+    "    return await a(b)\n"
+    "class C:\n"
+    "    def method(self): pass\n"
+    "def one(): return 'redefined'\n"
+    "def last(): return 'ñ'"
+)
+
+
+def test_fn_sources_matches_ast_segments_on_edge_cases():
+    import ast
+
+    got = entrymod._fn_sources(_SYNTH_MODULE)
+    want = {
+        n.name: ast.get_source_segment(_SYNTH_MODULE, n)
+        for n in ast.parse(_SYNTH_MODULE).body
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+    }
+    assert list(got) == list(want) == ["one", "decorated", "coro", "last"]
+    assert got == want
+    assert got["one"] == "def one(): return 'redefined'"
+
+
+def test_fn_sources_matches_ast_segments_on_entry_module():
+    """Every 10th top-level def of the real module (ast's per-def
+    re-split makes the full comparison cost ~10 s)."""
+    import ast
+
+    text = open(entrymod.__file__, encoding="utf-8").read()
+    got = entrymod._fn_sources(text)
+    defs = [
+        n for n in ast.parse(text).body
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+    ]
+    assert list(got) == [n.name for n in defs]
+    for n in defs[::10]:
+        assert got[n.name] == ast.get_source_segment(text, n), n.name
+
+
+def test_fn_sources_is_fast_on_entry_module():
+    """The registry build runs this once per graded file version; a
+    line split per def (quadratic) took 10-12 s on a 4-core box."""
+    import time
+
+    text = open(entrymod.__file__, encoding="utf-8").read()
+    t0 = time.perf_counter()
+    got = entrymod._fn_sources(text)
+    assert time.perf_counter() - t0 < 3.0
+    assert len(got) > 100
 
 
 def test_blob_now_matches_git_hash_object():
