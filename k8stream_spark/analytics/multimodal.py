@@ -10,9 +10,8 @@ struct-level parsers carry the tests).  ``synth_audio_blobs`` /
 fixtures whose decoded features have closed forms — which makes the full
 encode→decode path oracle-checkable end to end; ``synth_video_blobs`` /
 ``frame_sample`` extend this to multi-frame containers (MVID: an
-AVI-style frame index over concatenated BMP frames).
-``byte_histogram_features`` is the codec-free feature path for formats
-whose decoder needs an external codec (JPEG/MP4).
+AVI-style frame index over concatenated BMP frames).  Formats whose
+decoder needs an external codec (JPEG/MP4) have no decode path here.
 
 Scale notes: binary payloads ride the normal columnar path (parquet
 BYTE_ARRAY); ``mapInPandas`` processes whole Arrow batches per call, so
@@ -34,8 +33,6 @@ from pyspark.sql import functions as F
 BLOB_META_SCHEMA = (
     "doc_id bigint, n_bytes bigint, sha256 string, crc32 bigint"
 )
-FAKE_FEATURE_DIM = 16
-FAKE_FEATURES_SCHEMA = "doc_id bigint, features array<double>"
 
 
 def attach_blob(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -322,30 +319,6 @@ def decode_image(df: DataFrame) -> DataFrame:
 
     return df.select("doc_id", "blob").mapInPandas(
         extract, IMAGE_DECODE_SCHEMA
-    )
-
-
-def byte_histogram_features(df: DataFrame) -> DataFrame:
-    """Codec-free feature extraction: a 16-bucket byte histogram
-    (normalized) per blob — the deterministic feature path for formats
-    whose real decoder needs an external codec (JPEG/MP4).  Exercises
-    the exact batch shape, schema, and partition parallelism a codec
-    decoder would."""
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for b in pdf["blob"]:
-                raw = bytes(b)
-                hist = [0] * FAKE_FEATURE_DIM
-                for byte in raw:
-                    hist[byte % FAKE_FEATURE_DIM] += 1
-                total = max(len(raw), 1)
-                feats.append([round(h / total, 6) for h in hist])
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "features": feats})
-
-    return df.select("doc_id", "blob").mapInPandas(
-        extract, FAKE_FEATURES_SCHEMA
     )
 
 

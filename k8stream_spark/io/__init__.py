@@ -1,9 +1,10 @@
-"""I/O: the count-or-time batcher (W1/W2), NDJSON serialization (K1),
-sinks + dispatch (K2-K5), and the heartbeat control plane (K6) —
-reference io/ package re-expressed for Spark.
+"""I/O: NDJSON serialization (K1), sinks + dispatch (K2-K5), the
+bucketed-table layout, and the heartbeat control plane (K6) — reference
+io/ package re-expressed for Spark.  The count-or-time batch window
+(W1/W2) is the streaming trigger plus ``sink_foreach_batch``'s
+``batch_size`` slices (streaming/pipeline.py).
 """
 
-from k8stream_spark.io.batch import Batcher, batch_ident
 from k8stream_spark.io.ndjson import ndjson_bytes
 from k8stream_spark.io.sinks import (
     FileSink,
@@ -13,8 +14,6 @@ from k8stream_spark.io.sinks import (
 )
 
 __all__ = [
-    "Batcher",
-    "batch_ident",
     "ndjson_bytes",
     "FileSink",
     "MemorySink",

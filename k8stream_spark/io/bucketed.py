@@ -14,23 +14,23 @@ subsequent join/aggregation run co-located:
 * A join of two tables bucketed by the same key into the same bucket
   count compiles to a SortMergeJoin with NO Exchange on either side —
   each task reads bucket i of both sides; with ``sortBy`` the per-bucket
-  sort is also free.  ``assert_no_shuffle_join`` pins exactly that plan
-  shape (used by the tests; the same check a production deploy should
-  run against its own layout).
+  sort is also free.  ``tests/test_bucketed.py`` pins that executed-plan
+  shape; a production deploy should run the same check against its own
+  layout.
 * A groupBy on the bucket key likewise aggregates in place (no
   Exchange): partial = final because the layout already co-locates keys.
 
 This module is deliberately thin — bucketing IS a write-time `option`,
-not an engine feature to re-implement; the value is pinning the layout
-contract (bucket count must match across tables, the session must keep
-``spark.sql.sources.bucketing.enabled=true``, AQE leaves bucket joins
-alone) and asserting the resulting plans, which is what breaks silently
-in real deployments.
+not an engine feature to re-implement.  What breaks silently in real
+deployments is the layout contract: bucket count must match across
+tables, the session must keep ``spark.sql.sources.bucketing.enabled=true``,
+and AQE must leave bucket joins alone.  A join of two bucketed tables is
+a plain ``spark.table(a).join(spark.table(b), key)``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -58,28 +58,3 @@ def write_bucketed(
         w = w.sortBy(keys[0], *keys[1:])
     w.saveAsTable(table)
 
-
-def bucketed_join(
-    spark: SparkSession, left: str, right: str, on: str | list[str]
-) -> DataFrame:
-    """Join two same-key/same-count bucketed tables — compiles to a
-    zero-exchange SortMergeJoin (verify with ``assert_no_shuffle_join``).
-    """
-    on_cols = [on] if isinstance(on, str) else list(on)
-    return spark.table(left).join(spark.table(right), on_cols)
-
-
-def assert_no_shuffle_join(df: DataFrame) -> str:
-    """Assert the executed plan joins WITHOUT any Exchange (the bucketed
-    co-located contract) and return the plan string for logging.
-
-    Raises AssertionError with the offending plan if a shuffle appears —
-    the regression this catches (bucket-count drift, a config flip, an
-    extra repartition) silently multiplies job cost at scale.
-    """
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    if "Exchange" in plan:
-        raise AssertionError(f"bucketed join plan contains a shuffle:\n{plan}")
-    if "SortMergeJoin" not in plan:
-        raise AssertionError(f"expected SortMergeJoin in:\n{plan}")
-    return plan

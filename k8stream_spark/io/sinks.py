@@ -124,91 +124,3 @@ def make_flusher(conf: dict[str, Any]) -> Flusher:
         return S3Sink(conf["bucket"], conf.get("prefix", ""), conf.get("uploader"))
     raise ValueError(f"unknown sink {sink!r}; expected one of s3|file|memory")
 
-
-def write_sized_json(
-    df,
-    path: str,
-    target_mb: int = 128,
-    compression: str | None = "gzip",
-    sample_rows: int = 200,
-) -> int:
-    """Size-aware distributed JSON writer — the small-files guard for the
-    100 TB sink path.  Estimates bytes/row from a bounded sample of the
-    NDJSON serialization, derives ``maxRecordsPerFile`` for the target
-    object size, and lets every task roll files at that record count —
-    fully distributed (no repartition, no extra shuffle), unlike a
-    driver-computed ``repartition(n)`` which adds an exchange just to
-    control file sizes.  Returns the records-per-file it chose.
-
-    The sample is ``limit(sample_rows)`` — bounded driver work by
-    construction; gzip's ~4x text ratio is folded into the estimate when
-    compression is on.
-    """
-    import json as _json
-
-    sample = df.limit(sample_rows).toJSON().collect()
-    if not sample:
-        writer = df.write.mode("overwrite")
-        if compression:
-            writer = writer.option("compression", compression)
-        writer.json(path)
-        return 0
-    avg = max(1, sum(len(s) + 1 for s in sample) // len(sample))
-    target_bytes = target_mb * 1024 * 1024
-    if compression == "gzip":
-        target_bytes *= 4  # uncompressed target for a ~4x text ratio
-    per_file = max(1, target_bytes // avg)
-    writer = (
-        df.write.mode("overwrite").option("maxRecordsPerFile", per_file)
-    )
-    if compression:
-        writer = writer.option("compression", compression)
-    writer.json(path)
-    return per_file
-
-
-def write_training_shards(
-    df,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_shards: int = 16,
-    seed: str = "shard-v1",
-    max_records_per_file: int = 1_000_000,
-) -> str:
-    """Deterministic sharded parquet writer — the materialization side of
-    ``splits.shard_manifest``: documents land under
-    ``path/shard_id=K/`` with shard membership a pure function of
-    ``md5(seed:id)`` (stable across runs, retries, and cluster sizes),
-    and the matching manifest (counts, token totals, XOR membership
-    checksums) is written to ``path/_manifest/`` so a reader can verify
-    every shard without re-scanning the corpus.
-
-    Scale posture: one ``repartition`` on the shard id so each shard is
-    written by one task (no small-files explosion from every task
-    touching every shard); ``maxRecordsPerFile`` rolls oversized shards
-    into multiple parquet parts WITHIN the shard directory, so a hot
-    shard bounds file size, not task count.  The manifest pass is the
-    ``shard_manifest`` aggregate — one map-side-combined groupBy.
-
-    Returns the manifest directory path.
-    """
-    from pyspark.sql import functions as F
-
-    from k8stream_spark.analytics.splits import shard_manifest
-
-    tagged = F.concat(F.lit(seed), F.lit(":"), F.col(id_col).cast("string"))
-    okey = F.conv(F.substring(F.md5(tagged), 1, 8), 16, 10).cast("bigint")
-    (
-        df.withColumn("shard_id", okey % n_shards)
-        .repartition(n_shards, "shard_id")
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", max_records_per_file)
-        .partitionBy("shard_id")
-        .parquet(path)
-    )
-    manifest_path = f"{path}/_manifest"
-    shard_manifest(
-        df, id_col=id_col, text_col=text_col, n_shards=n_shards, seed=seed
-    ).coalesce(1).write.mode("overwrite").parquet(manifest_path)
-    return manifest_path

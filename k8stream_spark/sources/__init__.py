@@ -1,8 +1,3 @@
-from k8stream_spark.sources.fixtures import (
-    DEFAULT_SF_DIR,
-    load_table,
-    load_tables,
-    register_views,
-)
+from k8stream_spark.sources.fixtures import load_table
 
-__all__ = ["DEFAULT_SF_DIR", "load_table", "load_tables", "register_views"]
+__all__ = ["load_table"]

@@ -24,8 +24,6 @@ from pyspark.sql import functions as F
 
 from k8stream_spark.schemas import FIXTURE_TABLES
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def _nano_timestamp_columns(path: str) -> list[str]:
     """Columns stored as parquet timestamp[ns], from the footer only."""
@@ -40,9 +38,7 @@ def _nano_timestamp_columns(path: str) -> list[str]:
     ]
 
 
-def load_table(
-    spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, name: str = "lineitem"
-) -> DataFrame:
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in FIXTURE_TABLES:
         raise ValueError(f"unknown fixture table {name!r}; one of {FIXTURE_TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
@@ -68,16 +64,3 @@ def load_table(
         )
     return df
 
-
-def load_tables(
-    spark: SparkSession,
-    sf_dir: str = DEFAULT_SF_DIR,
-    names: tuple[str, ...] = FIXTURE_TABLES,
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register every fixture table as a temp view (for the SQL API)."""
-    for name in FIXTURE_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -1,12 +1,10 @@
 from k8stream_spark.streaming.pipeline import (
     project_enriched_l9,
-    build_event_stream,
     run_pipeline,
     sink_foreach_batch,
 )
 
 __all__ = [
-    "build_event_stream",
     "project_enriched_l9",
     "run_pipeline",
     "sink_foreach_batch",

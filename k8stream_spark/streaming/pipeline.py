@@ -1,10 +1,12 @@
 """W4 — the streaming binding: the reference's ingest loop
 (reference flush.go:19-30, main.go:73-94) as one Structured Streaming
-query.
+query, assembled by ``run_pipeline``.
 
     readStream(k8s-event JSON) → eligibility filter (P1-P5)
       → watermarked dedup (D1) → stream-static broadcast joins (J1-J3)
-      → L9Event projection (P6) → foreachBatch → N-or-T rechunk → sink
+      → L9Event projection (P6)
+      [∪ readStream(k8s-service JSON) → P1/P2/P4 → D2 → P10]
+      → foreachBatch → N-or-T rechunk → sink
 
 Batch/stream symmetry (SURVEY.md §7.1): the transformation functions are
 the exact same ``ops.*`` functions the batch oracle checks — this module
@@ -39,8 +41,15 @@ def _source_stream(
     source_format: str,
     resync_interval: int,
 ) -> DataFrame:
-    """The one source binding behind ``build_event_stream`` and
-    ``build_service_stream``; ``kind`` is ``"event"`` or ``"service"``."""
+    """S1/S2 — the k8s-event (``kind="event"``) or k8s-service
+    (``kind="service"``) stream; services get their own informer because
+    their changes do not surface on the events interface (reference
+    main.go:82-86).  ``source_format="files"`` reads the
+    JSON-lines directory through Spark's file source; ``"informer"`` reads
+    it through the custom ``k8s_informer`` DataSourceStreamReader
+    (sources/informer.py), which models the reference's LIST→WATCH→RESYNC
+    contract (main.go:77-94, resync config.go:19-23).  Both give the same
+    schema and downstream plan."""
     if source_format == "informer":
         from k8stream_spark.sources.informer import informer_stream
 
@@ -49,37 +58,6 @@ def _source_stream(
         )
     schema = K8S_SERVICE_SCHEMA if kind == "service" else K8S_EVENT_SCHEMA
     return spark.readStream.schema(schema).json(source_dir)
-
-
-def build_event_stream(
-    spark: SparkSession,
-    source_dir: str,
-    source_format: str = "files",
-    resync_interval: int = 0,
-) -> DataFrame:
-    """S1 — k8s-event stream.  ``source_format="files"`` reads the
-    JSON-lines directory through Spark's file source (the test/bench
-    shape); ``"informer"`` reads the same directory through the custom
-    ``k8s_informer`` DataSourceStreamReader (sources/informer.py), which
-    models the reference's LIST→WATCH→RESYNC contract (main.go:77-94,
-    resync config.go:19-23) — identical schema and downstream plan."""
-    return _source_stream(
-        spark, source_dir, "event", source_format, resync_interval
-    )
-
-
-def build_service_stream(
-    spark: SparkSession,
-    source_dir: str,
-    source_format: str = "files",
-    resync_interval: int = 0,
-) -> DataFrame:
-    """S2 — k8s-service stream (reference main.go:82-86: services get their
-    own informer because changes don't surface on the events interface).
-    Same source_format choice as ``build_event_stream``."""
-    return _source_stream(
-        spark, source_dir, "service", source_format, resync_interval
-    )
 
 
 def transform_services(
@@ -93,8 +71,7 @@ def transform_services(
     the reference's RUNTIME behavior (its cache key is ``{uid}-{rv}``,
     handler.go:96-97, so only exact repeats ever hit the ``>=`` branch).
     Works under append output mode.  The ``>=`` comparison as written
-    (handler.go:111) is ``ops.dedup.keep_latest_version`` in batch and
-    ``stateful.keep_latest_stateful`` in streaming.
+    (handler.go:111) is ``ops.dedup.keep_latest_version``, in batch only.
     """
     from pyspark.sql import functions as F
 
@@ -112,70 +89,6 @@ def transform_services(
     # them (event_service.go:72-112) and the event side of union_streams
     # carries the same map<string,string> columns, so they align by name.
     return opsproject.service_event_synthesis(deduped)
-
-
-def run_unified_pipeline(
-    spark: SparkSession,
-    event_source_dir: str,
-    service_source_dir: str,
-    objects: DataFrame,
-    nodes: DataFrame,
-    sink_fn,
-    checkpoint_dir: str,
-    trigger_seconds: int | None = None,
-    available_now: bool = False,
-    namespaces: Sequence[str] = (),
-    reasons: Sequence[str] = (),
-    source_format: str = "files",
-    resync_interval: int = 0,
-):
-    """U1 in streaming form — the reference's two informer streams feed one
-    channel (main.go:84-90); here both streaming frames union into ONE
-    streaming query with one sink and one checkpoint."""
-    events = build_event_stream(
-        spark,
-        event_source_dir,
-        source_format=source_format,
-        resync_interval=resync_interval,
-    )
-    ev_l9 = transform_events(
-        events, objects, nodes, namespaces=namespaces, reasons=reasons
-    )
-    services = build_service_stream(
-        spark,
-        service_source_dir,
-        source_format=source_format,
-        resync_interval=resync_interval,
-    )
-    svc_l9 = transform_services(services, namespaces=namespaces)
-    return _start(
-        joins.union_streams(ev_l9, svc_l9),
-        sink_fn,
-        checkpoint_dir,
-        trigger_seconds,
-        available_now,
-    )
-
-
-def _start(
-    df: DataFrame,
-    sink_fn,
-    checkpoint_dir: str,
-    trigger_seconds: int | None,
-    available_now: bool,
-):
-    """The writer/trigger setup shared by ``run_pipeline`` and
-    ``run_unified_pipeline``; availableNow wins over ``trigger_seconds``."""
-    writer = (
-        df.writeStream.outputMode("append")
-        .foreachBatch(sink_fn)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def transform_events(
@@ -365,22 +278,41 @@ def run_pipeline(
     reasons: Sequence[str] = (),
     source_format: str = "files",
     resync_interval: int = 0,
+    service_source_dir: str | None = None,
 ):
-    """Assemble and start the full streaming query (reference main.go:73-94).
+    """Assemble and start the streaming query (reference main.go:73-94).
     Returns the StreamingQuery; callers own ``awaitTermination``/``stop``
-    (the reference's trapSignal, main.go:96-112).  ``resync_interval``
-    (informer source only) enables the periodic re-list, reference
-    default 120 s (config.go:8).  With the informer source,
-    ``available_now`` falls back to a single micro-batch (the Python
-    source does not support Trigger.AvailableNow), so a LIST is one
-    batch."""
-    events = build_event_stream(
-        spark,
-        source_dir,
-        source_format=source_format,
-        resync_interval=resync_interval,
+    (the reference's trapSignal, main.go:96-112).
+
+    With ``service_source_dir`` the service stream's L9 events union into
+    the event stream: the reference's two informers feed one channel
+    (main.go:84-90), so here they are one query with one sink and one
+    checkpoint.  ``resync_interval`` (informer source only) enables the
+    periodic re-list, reference default 120 s (config.go:8).
+    ``available_now`` wins over ``trigger_seconds``; with the informer
+    source it falls back to a single micro-batch (the Python source does
+    not support Trigger.AvailableNow), so a LIST is one batch."""
+    events = _source_stream(
+        spark, source_dir, "event", source_format, resync_interval
     )
     l9 = transform_events(
         events, objects, nodes, namespaces=namespaces, reasons=reasons
     )
-    return _start(l9, sink_fn, checkpoint_dir, trigger_seconds, available_now)
+    if service_source_dir is not None:
+        services = _source_stream(
+            spark, service_source_dir, "service", source_format,
+            resync_interval,
+        )
+        l9 = joins.union_streams(
+            l9, transform_services(services, namespaces=namespaces)
+        )
+    writer = (
+        l9.writeStream.outputMode("append")
+        .foreachBatch(sink_fn)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif trigger_seconds is not None:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    return writer.start()

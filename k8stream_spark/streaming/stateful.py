@@ -1,25 +1,33 @@
-"""D3 — the reference's TTL KV dedup cache as a custom stateful operator.
+"""Custom stateful streaming operators (``applyInPandasWithState``) for
+the LLM-data layer: each keeps a small per-key state in the RocksDB state
+store (session.py) and is the stream form of a batch operator.
 
-The reference marks each flushed event UID in a buntdb table with a
-3600 s expiry (flush.go:57-62, cache.go) and drops any incoming event
-whose UID is still marked (handler.go:142-151).  That is a
-*processing-time* TTL: the mark expires one hour after it was written,
-regardless of event timestamps.
+  * ``anomaly_stats_stateful`` — running (n, Σv, Σv²) per group, the
+    stream form of ``analytics.events.anomaly_zscore``;
+  * ``histogram_bins_stateful`` — per-(group, bin) counts, the stream
+    form of ``analytics.events.value_quantiles_sketch``;
+  * ``content_change_gate_stateful`` — per-key content hash with a
+    processing-time TTL, the stream form of
+    ``analytics.dedup.snapshot_delta``;
+  * ``quota_gate_stateful`` — per-source admitted count, the stream form
+    of ``analytics.splits.source_quota_cap``.
 
-``dedup_streaming`` (ops/dedup.py) models this with an event-time
-watermark — the right default on Spark because it is deterministic on
-replay.  This module adds the exact processing-time semantics as a
-custom stateful operator via ``applyInPandasWithState``: per-key state
-("seen") with a real ProcessingTimeTimeout that evicts the mark after
-``ttl_seconds``, after which the key may be emitted again — byte-for-byte
-the reference's cache contract, including re-emission after expiry,
-which the watermark form cannot express.
+The reference pipeline's own dedup stages run elsewhere: D1/D3 (the
+buntdb UID mark) is ``ops.dedup.dedup_streaming``'s event-time watermark
+and D2 is ``streaming.pipeline.transform_services``.
 
-Scale posture: state is one boolean per live key, partitioned by the
-grouping key across executors and persisted in the RocksDB state store
-(session.py); timeouts make state size O(keys seen in the last TTL), not
-O(all keys ever).  The Pandas UDF touches only the first row per key per
-micro-batch — the grouping shuffle is the same one any keyed dedup pays.
+Ordering: rows of one key are folded in the order the grouped iterator
+yields them, which ``applyInPandasWithState`` pins only WITHIN a shuffled
+partition's frames; two rows of one key that arrive in one micro-batch
+from different source partitions have no pinned order.  Pre-sort by a
+monotonic source offset upstream where a total order is required.
+
+Deployment note for ProcessingTimeTimeout operators: the engine
+schedules no-data micro-batches to service pending timers, so a
+``trigger(availableNow=True)`` run never self-terminates.  Batch-style
+harnesses set ``spark.sql.streaming.noDataMicroBatches.enabled = false``
+(safe: the data path re-checks deadlines itself, the timer path is only
+state GC) or drain and stop; a continuous deployment is unaffected.
 """
 
 from __future__ import annotations
@@ -37,170 +45,6 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from k8stream_spark.ops.dedup import DEDUP_TTL_SECONDS
 
 
-def dedup_ttl_stateful(
-    df: DataFrame,
-    key: str = "uid",
-    ttl_seconds: int = DEDUP_TTL_SECONDS,
-) -> DataFrame:
-    """Keep the first row per ``key`` seen within a processing-time TTL
-    window; the mark self-evicts ``ttl_seconds`` after it was set and the
-    key becomes eligible again (reference flush.go:57-62 semantics).
-
-    Works on a *streaming* grouped frame; output mode must be "update".
-    Column order is preserved from ``df``.
-
-    Deployment note: with ProcessingTimeTimeout the engine schedules
-    no-data micro-batches to service pending timers, so a
-    ``trigger(availableNow=True)`` run never self-terminates.  Batch-style
-    harnesses should set ``spark.sql.streaming.noDataMicroBatches.enabled
-    = false`` (safe here: the data path re-checks deadlines itself, the
-    timer path is only state GC) or drain-and-stop; a continuous
-    deployment is unaffected.
-    """
-    out_schema = df.schema
-    cols = [f.name for f in out_schema.fields]
-    ttl_ms = ttl_seconds * 1000
-
-    def fn(
-        _key: Any,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # TTL elapsed with no traffic for this key: drop the mark so
-            # the state store stays O(keys seen within the last TTL).
-            state.remove()
-            return
-        first = None
-        for pdf in pdfs:
-            if first is None and len(pdf):
-                first = pdf.iloc[[0]][cols]
-        if first is None:
-            return
-        now_ms = int(time.time() * 1000)
-        if state.exists:
-            # Spark only raises hasTimedOut for keys with NO data in the
-            # batch, so an expired mark that receives traffic must be
-            # detected here: past its deadline → re-admit (the reference's
-            # cache GET after expiry misses, handler.go:142-151).
-            (deadline_ms,) = state.get
-            if now_ms < deadline_ms:
-                # Marked and still live → duplicate → drop.  The deadline
-                # itself is NOT refreshed (the reference's mark expires
-                # from WRITE time, flush.go:57-62) — but the engine-side
-                # timeout MUST be re-armed: Spark clears a key's timeout
-                # on every function invocation, so returning without
-                # setTimeoutDuration would cancel eviction and leak the
-                # state entry if this key never appears again.
-                state.setTimeoutDuration(max(1, deadline_ms - now_ms))
-                return
-        state.update((now_ms + ttl_ms,))
-        state.setTimeoutDuration(ttl_ms)
-        yield first
-
-    return df.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="deadline_ms long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
-def keep_latest_stateful(
-    df: DataFrame,
-    key: str = "uid",
-    version_col: str = "resource_version",
-    ttl_seconds: int = DEDUP_TTL_SECONDS,
-) -> DataFrame:
-    """D2 in streaming form — drop a change whose version is
-    lexicographically <= the max version already seen for the key
-    (reference handler.go:106-115: ``existingService.ReferenceVersion >=
-    s.GetResourceVersion()`` — a Go STRING compare, so '9' beats '10';
-    the batch twin is ops/dedup.keep_latest_version).
-
-    Semantics note pinned against the reference source: the cache lookup
-    key there is ``{uid}-{resourceVersion}`` (handler.go:96-97) and the
-    stored ``ReferenceVersion`` equals the rv in the key
-    (event_service.go:99,105), so at runtime the ``>=`` branch only ever
-    fires on an exact (uid, rv) repeat.  This operator implements the
-    comparison AS WRITTEN — max-seen-version per uid — which (a) is what
-    the defensive ``>=`` expresses, (b) matches the batch D2 oracle, and
-    (c) additionally suppresses out-of-order older versions, which the
-    exact-repeat form (dropDuplicatesWithinWatermark on (uid, rv)) lets
-    through.
-
-    State is (max_version, deadline_ms) per key; the mark expires
-    ``ttl_seconds`` after its last WRITE (the reference re-arms expiry on
-    every flush via ExpireSet, flush.go:57-62 — unlike the D1 mark, which
-    is written once).  Ordering caveat: rows are processed in the order
-    the grouped iterator yields them, which ``applyInPandasWithState``
-    guarantees only WITHIN a shuffled partition's frames — when two
-    versions of one key land in the same micro-batch from different
-    source partitions, which one is "seen first" is not pinned to file/
-    arrival order.  The reference has the same property (its handler
-    loop order is channel-delivery order, main.go:84-90); pre-sort each
-    batch by a monotonic source offset upstream if a total order is
-    required.
-
-    Same deployment note as ``dedup_ttl_stateful`` re noDataMicroBatches.
-    """
-    out_schema = df.schema
-    cols = [f.name for f in out_schema.fields]
-    ttl_ms = ttl_seconds * 1000
-
-    def fn(
-        _key: Any,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        now_ms = int(time.time() * 1000)
-        max_seen: str | None = None
-        if state.exists:
-            stored_version, deadline_ms = state.get
-            if now_ms < deadline_ms:
-                max_seen = stored_version
-            # else: mark expired → treat as absent (cache GET misses)
-        kept_any = False
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            keep_mask = []
-            for v in pdf[version_col].astype(str):
-                if max_seen is not None and max_seen >= v:
-                    keep_mask.append(False)
-                else:
-                    keep_mask.append(True)
-                    max_seen = v
-            out = pdf.loc[keep_mask, cols]
-            if len(out):
-                kept_any = True
-                yield out
-        # The DEADLINE refreshes only on emit (the reference re-ExpireSets
-        # the mark when a kept event flushes; a dropped duplicate leaves
-        # the cache entry untouched) — but the engine-side timeout must be
-        # re-armed on EVERY invocation, because Spark clears a key's
-        # timeout whenever the function runs for it; skipping that on a
-        # duplicate-only batch would cancel eviction and leak the entry.
-        if kept_any:
-            state.update((max_seen, now_ms + ttl_ms))
-            state.setTimeoutDuration(ttl_ms)
-        elif state.exists:
-            _, deadline_ms = state.get
-            state.setTimeoutDuration(max(1, deadline_ms - now_ms))
-
-    return df.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="max_version string, deadline_ms long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
 def anomaly_stats_stateful(
     df: DataFrame,
     value_col: str = "value",
@@ -212,8 +56,7 @@ def anomaly_stats_stateful(
     incoming events against the group's running mean/variance without
     rescanning history.
 
-    Exact batch/stream symmetry (the ``cms_counters_stateful``
-    contract): values are quantized ONCE to milli units
+    Exact batch/stream symmetry: values are quantized ONCE to milli units
     (floor(v·1000 + 0.5), a stateless codegen projection), and the
     state carries int64 (n, Σ_milli, Σ_milli²) — integer addition is
     order-free, so after any stream prefix the state equals the batch
@@ -299,8 +142,7 @@ def histogram_bins_stateful(
     time: state = one long per OCCUPIED bin (≤ value-range/width per
     group), never the values.
 
-    Batch/stream symmetry (the ``cms_counters_stateful`` contract): the
-    bin id is the identical IEEE ``floor(v / bin_width)`` projection
+    Batch/stream symmetry: the bin id is the identical IEEE ``floor(v / bin_width)`` projection
     the batch sketch computes, and counts are integer adds, so after
     any stream prefix the state table equals the batch sketch's
     ``counts`` stage over the same prefix — pinned by pytest.
@@ -344,69 +186,6 @@ def histogram_bins_stateful(
     )
 
 
-def cms_counters_stateful(
-    df: DataFrame,
-    token_col: str = "token",
-    depth: int = 4,
-    width: int = 64,
-    seed: str = "cms-v1",
-) -> DataFrame:
-    """Streaming Count-Min Sketch: maintain the ``depth × width``
-    counter table as keyed state over an unbounded token stream — the
-    deployment form of ``analytics.text.cms_token_counts``, whose
-    docstring promises "the counter table is the only state"; this
-    operator is that promise kept.
-
-    A stateless codegen projection expands each token into ``depth``
-    (row_id, bucket) rows using the SAME md5 recipe as the batch sketch
-    (``text._cms_bucket``), so after any prefix of the stream the state
-    table equals the batch sketch's counter table over the same prefix
-    — the batch/stream symmetry contract, pinned by the pytest that
-    runs both and compares.  State per key is ONE long; update-mode
-    emissions carry the key's new total, so a downstream reader always
-    joins against the freshest counters.  The grouping shuffle is
-    bounded by depth × width keys — constant, not corpus-sized: the
-    whole reason to run a sketch instead of exact tf at 100 TB.
-    """
-    from pyspark.sql import functions as F
-
-    from k8stream_spark.analytics.text import _cms_bucket
-
-    expanded = None
-    for j in range(depth):
-        part = df.select(
-            F.lit(j).cast("bigint").alias("row_id"),
-            _cms_bucket(j, token_col, width, seed).alias("bucket"),
-        )
-        expanded = part if expanded is None else expanded.unionByName(part)
-
-    def fn(
-        _key: Any,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        add = 0
-        for pdf in pdfs:
-            add += len(pdf)
-        total = (state.get[0] if state.exists else 0) + add
-        state.update((total,))
-        yield pd.DataFrame(
-            {
-                "row_id": [_key[0]],
-                "bucket": [_key[1]],
-                "bucket_sum": [total],
-            }
-        )
-
-    return expanded.groupBy("row_id", "bucket").applyInPandasWithState(
-        fn,
-        outputStructType="row_id long, bucket long, bucket_sum long",
-        stateStructType="n long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
 def content_change_gate_stateful(
     df: DataFrame,
     key: str = "doc_id",
@@ -434,17 +213,15 @@ def content_change_gate_stateful(
         Only a key that receives NO rows at all for ``ttl_seconds``
         is evicted, so state is bounded by the live traffic set, not
         by all keys ever seen.  A doc re-crawled after eviction
-        counts as ``added`` again — the same re-admission semantics
-        as ``dedup_ttl_stateful``'s mark expiry.
+        counts as ``added`` again.
 
     The hash is computed INSIDE the pandas fn (hashlib.md5 over the
     utf-8 text), matching F.md5/DuckDB md5 byte-for-byte — the
     batch/stream symmetry test feeds both twins the same two
     snapshots and asserts identical add/change decisions.  Multiple
     versions of one key inside a micro-batch are folded serially in
-    iterator order (same within-partition caveat as
-    ``keep_latest_stateful``).  The grouping shuffle carries (key,
-    text) rows once; state per key is one 32-char hash.
+    iterator order (the module's ordering note).  The grouping shuffle
+    carries (key, text) rows once; state per key is one 32-char hash.
     """
     out_schema = T.StructType(
         list(df.schema.fields) + [T.StructField("status", T.StringType())]
@@ -535,7 +312,7 @@ def quota_gate_stateful(
     |sources| longs total, the same bounded-state class as the CMS
     counter table; the grouping shuffle is the one any keyed cap pays.
     Within-partition arrival order follows the grouped iterator (the
-    ``keep_latest_stateful`` ordering caveat).
+    module's ordering note).
     """
     out_schema = T.StructType(
         list(df.schema.fields)

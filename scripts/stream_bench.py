@@ -253,7 +253,7 @@ def main() -> None:
     # ProcessingTimeTimeout keeps the engine scheduling no-data
     # micro-batches to service pending state timers, so an availableNow
     # run never terminates (measured: 291 empty epochs before the
-    # harness timeout) — same deployment note as dedup_ttl_stateful;
+    # harness timeout) — the deployment note in streaming/stateful.py;
     # the operator's data path checks deadlines itself.
     spark.conf.set(
         "spark.sql.streaming.noDataMicroBatches.enabled", "false"

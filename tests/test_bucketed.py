@@ -15,6 +15,19 @@ from pyspark.sql import functions as F
 from k8stream_spark.io import bucketed as bk
 
 
+def assert_no_shuffle_join(df) -> str:
+    """Assert the executed plan joins WITHOUT any Exchange (the bucketed
+    co-located contract) and return the plan string.  Bucket-count
+    drift, a config flip or an extra repartition would add a shuffle
+    while results stay correct."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if "Exchange" in plan:
+        raise AssertionError(f"bucketed join plan contains a shuffle:\n{plan}")
+    if "SortMergeJoin" not in plan:
+        raise AssertionError(f"expected SortMergeJoin in:\n{plan}")
+    return plan
+
+
 @pytest.fixture()
 def no_broadcast(spark):
     """Force the shuffle-join path so the bucketed layout (not a
@@ -42,9 +55,9 @@ def bucketed_tables(spark):
 
 def test_bucketed_join_has_no_exchange(spark, bucketed_tables, no_broadcast):
     left, right = bucketed_tables
-    j = bk.bucketed_join(spark, left, right, "k")
+    j = spark.table(left).join(spark.table(right), "k")
     assert j.count() == 10000
-    plan = bk.assert_no_shuffle_join(j)  # raises if any Exchange / no SMJ
+    plan = assert_no_shuffle_join(j)  # raises if any Exchange / no SMJ
     assert "SortMergeJoin" in plan
 
 

@@ -39,17 +39,16 @@ def test_oracle_keys_subset_of_queries():
 NOT_OPERATORS = {
     "events.approx_user_counts",  # HLL++ stage of approx_distinct_bound
     # (the graded events_approx_user_counts surface is the replayable
-    # hll_user_counts since r8)
+    # hll_user_counts)
     "dedup.minhash_signature",  # signature stage of minhash_lsh_pairs
     "dedup.minhash_band_table",  # banding stage, persisted per corpus
-    # version by the streaming gate (r12)
+    # version by the streaming gate
     "similarity.suggest_lsh_params",  # driver-side (bits, tables)
-    # arithmetic — no DataFrame surface to grade (r12)
+    # arithmetic — no DataFrame surface to grade
     "similarity.suggest_ivf_nprobe",  # driver-side nprobe arithmetic,
-    # the IVF twin of suggest_lsh_params (r14)
+    # the IVF twin of suggest_lsh_params
     "dedup.simhash",  # signature stage of simhash_pairs
     "dedup.word_shingles",  # shingling helper for minhash/jaccard
-    "multimodal.byte_histogram_features",  # codec-free feature helper
     "similarity.bucket_keys",  # LSH hyperplane bucketing helper
     "similarity.with_unit_vectors",  # normalization pre-pass
     "splits.hash_bucket",  # hash-split primitive
@@ -117,13 +116,12 @@ def test_j5_count_equals_reverse_index_set_size(spark):
     assert sum(n > 1 for n, _ in got.values()) > 0  # multi-service pods
 
 
-# Every driver hash-red row ever recorded except one traced back to an
-# oracle output column whose DuckDB type has no Spark twin: a bare
-# SUM(BIGINT) is HUGEINT (int128), and DECIMAL survives ROUND/means —
-# both canonicalize differently from Spark's bigint/double in the
-# driver's value hash even when the values are identical (4 false
-# negatives in r7 alone).  Guard the whole class: bind every oracle
-# through DuckDB and reject the types at test time, not grading time.
+# An oracle output column whose DuckDB type has no Spark twin hashes
+# red even when the values are identical: a bare SUM(BIGINT) is HUGEINT
+# (int128), and DECIMAL survives ROUND/means — both canonicalize
+# differently from Spark's bigint/double in the driver's value hash.
+# Bind every oracle through DuckDB and reject the types at test time,
+# not grading time.
 FORBIDDEN_ORACLE_TYPES = ("HUGEINT", "UHUGEINT", "DECIMAL")
 
 
@@ -180,20 +178,57 @@ def test_rotation_demotes_stale_green_query(monkeypatch):
 
 
 def test_staleness_flags_exactly_the_changed_modules(monkeypatch):
-    """End-to-end over real git history: every name the detector flags
-    must own a module file (or entry-fn source) that actually differs
-    between its grade tree and the working tree — spot-check one flagged
-    and one unflagged name when both classes exist."""
+    """On a controlled graded tree that differs from HEAD in exactly one
+    ``_q_`` source and one owned module blob, the stale set is exactly
+    the green names owning either; an unchanged green query and a red
+    owner stay unflagged."""
+    import re
+
+    reg = dict(entrymod.queries())
+    with open(entrymod.__file__, encoding="utf-8") as fh:
+        head_text = fh.read()
+    cur_fns = entrymod._fn_sources(head_text)
+    changed_fn = "_q_pq_encode"
+    changed_mod = "k8stream_spark/analytics/multimodal.py"
+    # only the registry names the changed query function, so only the
+    # names registered with it own that change
+    assert [n for n, src in cur_fns.items()
+            if re.search(rf"\b{changed_fn}\b", src)] == [changed_fn, "queries"]
+    seg = cur_fns[changed_fn]
+    graded_text = head_text.replace(
+        seg, seg.replace(f"def {changed_fn}(", f"def {changed_fn}( ", 1), 1
+    )
+
+    def git_out(args):
+        assert args == ["show", "GRADED:__spark_entry__.py"], args
+        return graded_text
+
+    def blobs_at(treeish, paths):
+        assert treeish == "GRADED"
+        return {p: ("old" if p == changed_mod else "now") + p for p in paths}
+
+    monkeypatch.setattr(entrymod, "_grade_treeish", lambda rnd: "GRADED")
+    monkeypatch.setattr(entrymod, "_git_out", git_out)
+    monkeypatch.setattr(entrymod, "_blobs_at", blobs_at)
+    monkeypatch.setattr(entrymod, "_blob_now", lambda p: "now" + p)
     monkeypatch.setattr(entrymod, "_STALE_CACHE", None)
-    reg = dict.fromkeys(entrymod.queries())
-    reg = {n: entrymod.queries()[n] for n in reg}
-    graded = entrymod._latest_graded_round()
+
+    def fname(n):
+        return getattr(reg[n], "__name__", "")
+
+    fn_owners = {n for n in reg if fname(n) == changed_fn}
+    mod_owners = {
+        n for n in reg
+        if fname(n) in cur_fns
+        and re.search(r"\bmultimodal\.", cur_fns[fname(n)])
+    }
+    assert fn_owners and len(mod_owners) >= 2
+    red = min(mod_owners)
+    graded = {n: (16, n != red) for n in reg}
     stale = entrymod._changed_since_grade(reg, graded)
-    # sanity: the detector never flags red/never-graded names (they
-    # already re-grade first) and never flags names outside the registry
-    for n in stale:
-        rnd, green = graded.get(n, (0, False))
-        assert green and rnd > 0 and n in reg, n
+    assert stale == (fn_owners | mod_owners) - {red}
+    assert "q1_pricing_summary" in reg
+    assert "q1_pricing_summary" not in stale
 
 
 def test_staleness_degrades_to_empty_on_git_failure(monkeypatch):

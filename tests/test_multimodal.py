@@ -74,15 +74,6 @@ def test_parse_bmp_rejects_non_bmp():
         multimodal._parse_bmp(b"PNG....definitely not a bmp")
 
 
-def test_byte_histogram_features_shape(docs_df):
-    blobs = multimodal.attach_blob(docs_df)
-    feats = multimodal.byte_histogram_features(blobs).collect()
-    assert len(feats) == docs_df.count()
-    for r in feats:
-        assert len(r.features) == multimodal.FAKE_FEATURE_DIM
-        assert abs(sum(r.features) - 1.0) < 0.01  # normalized histogram
-
-
 def test_frame_sample_real_container(spark):
     """Round trip: synthesize MVID containers, parse the index, decode
     every 2nd frame — indices and exact pixel sums must match the

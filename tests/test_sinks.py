@@ -11,7 +11,6 @@ import os
 import stat
 
 import pytest
-from pyspark.sql import functions as F
 
 from k8stream_spark.io.ndjson import gzip_bytes, ndjson_bytes
 from k8stream_spark.io.sinks import FileSink, MemorySink, S3Sink, make_flusher
@@ -105,57 +104,3 @@ def test_gzip_bytes_roundtrip():
     # gzip.NewWriter default level 6 writes 0.
     assert payload[8] == 0
 
-
-def test_write_sized_json_rolls_files(spark, tmp_path):
-    import os
-
-    from k8stream_spark.io.sinks import write_sized_json
-
-    df = spark.createDataFrame(
-        [(i, "x" * 1000) for i in range(2000)], "id bigint, payload string"
-    ).coalesce(1)
-    out = str(tmp_path / "sized")
-    # ~1 MB of rows with a tiny target -> must roll multiple files
-    per_file = write_sized_json(df, out, target_mb=1, compression=None)
-    files = [f for f in os.listdir(out) if f.endswith(".json")]
-    assert per_file > 0
-    assert len(files) >= 2
-
-    out2 = str(tmp_path / "sized-big")
-    write_sized_json(df, out2, target_mb=1024, compression=None)
-    files2 = [f for f in os.listdir(out2) if f.endswith(".json")]
-    assert len(files2) == 1  # big target, one partition -> one file
-
-
-def test_write_training_shards_layout_and_manifest(spark, tmp_path):
-    import hashlib
-
-    from k8stream_spark.io.sinks import write_training_shards
-
-    df = spark.createDataFrame(
-        [(i, " ".join(["w"] * (i % 5 + 1))) for i in range(60)],
-        "doc_id bigint, text string",
-    )
-    out = str(tmp_path / "shards")
-    mpath = write_training_shards(df, out, n_shards=4)
-
-    # every doc lands in the shard its md5 hash dictates
-    back = spark.read.parquet(out)
-    assert back.count() == 60
-    for r in back.select("doc_id", "shard_id").collect():
-        okey = int(
-            hashlib.md5(f"shard-v1:{r.doc_id}".encode()).hexdigest()[:8], 16
-        )
-        assert r.shard_id == okey % 4
-    # round-trip preserves the payload
-    assert sorted(
-        (r.doc_id, r.text) for r in back.select("doc_id", "text").collect()
-    ) == sorted((i, " ".join(["w"] * (i % 5 + 1))) for i in range(60))
-
-    # manifest agrees with the physical layout, shard by shard
-    manifest = {r.shard_id: r for r in spark.read.parquet(mpath).collect()}
-    counts = {
-        r.shard_id: r.n for r in back.groupBy("shard_id").agg(
-            F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert {s: m.n_docs for s, m in manifest.items()} == counts

@@ -1,13 +1,10 @@
-"""D3 — processing-time TTL dedup cache (applyInPandasWithState).
-
-Mirrors the reference's buntdb mark-with-expiry contract
-(flush.go:57-62, handler.go:142-151): first occurrence emitted and
-marked; re-occurrence within TTL dropped; re-occurrence after TTL
-re-admitted.  Sequential runs share one checkpoint so state carries
-across restarts exactly like the long-lived reference process.
+"""Custom stateful streaming operators (applyInPandasWithState): each
+one's state after draining a stream equals its batch twin's result over
+the same rows.  Sequential runs share one checkpoint so state carries
+across restarts exactly like a long-lived process.
 
 Harness notes: ProcessingTimeTimeout keeps the engine scheduling
-no-data micro-batches to service pending timers, so these runs disable
+no-data micro-batches to service pending timers, so the TTL runs disable
 ``noDataMicroBatches`` (the operator's data path checks deadlines
 itself; timers are only state GC).  The sink is foreachBatch — the
 memory sink cannot recover from a checkpoint.
@@ -22,15 +19,6 @@ import time
 import pytest
 from pyspark.sql import types as T
 
-from k8stream_spark.streaming.stateful import dedup_ttl_stateful
-
-SCHEMA = T.StructType(
-    [
-        T.StructField("uid", T.StringType()),
-        T.StructField("message", T.StringType()),
-    ]
-)
-
 
 def _write(path: str, name: str, rows: list[dict]) -> None:
     os.makedirs(path, exist_ok=True)
@@ -44,141 +32,6 @@ def no_data_batches_off(spark):
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     yield
     spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
-
-
-def _run_once(spark, src: str, ckpt: str, ttl: int) -> list[tuple[str, str]]:
-    """One availableNow run over the shared checkpoint; returns the rows
-    this run emitted."""
-    stream = spark.readStream.schema(SCHEMA).json(src)
-    deduped = dedup_ttl_stateful(stream, key="uid", ttl_seconds=ttl)
-    emitted: list[tuple[str, str]] = []
-
-    def collect(batch_df, _batch_id):
-        emitted.extend((r.uid, r.message) for r in batch_df.collect())
-
-    q = (
-        deduped.writeStream.outputMode("update")
-        .foreachBatch(collect)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120), "query did not terminate"
-    return emitted
-
-
-def test_ttl_dedup_drops_within_ttl(spark, tmp_path, no_data_batches_off):
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    ttl = 3600  # long TTL: run 2 is guaranteed inside it
-
-    # Run 1: A twice + B once → A once (first row wins), B once.
-    _write(src, "b1.json", [
-        {"uid": "A", "message": "a1"},
-        {"uid": "A", "message": "a2"},
-        {"uid": "B", "message": "b1"},
-    ])
-    out1 = _run_once(spark, src, ckpt, ttl)
-    assert sorted(out1) == [("A", "a1"), ("B", "b1")]
-
-    # Run 2 (same checkpoint, within TTL): A again → dropped by the mark.
-    _write(src, "b2.json", [{"uid": "A", "message": "a3"}])
-    assert _run_once(spark, src, ckpt, ttl) == []
-
-
-def test_ttl_dedup_readmits_after_expiry(spark, tmp_path, no_data_batches_off):
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    ttl = 1
-
-    _write(src, "b1.json", [{"uid": "A", "message": "a1"}])
-    assert _run_once(spark, src, ckpt, ttl) == [("A", "a1")]
-
-    # Past the deadline: the mark is stale → A re-admitted
-    # (reference semantics: cache GET after expiry misses).
-    time.sleep(ttl + 1)
-    _write(src, "b2.json", [{"uid": "A", "message": "a2"}])
-    assert _run_once(spark, src, ckpt, ttl) == [("A", "a2")]
-
-
-# ---------------------------------------------------------------------------
-# D2 streaming — keep-latest version (handler.go:111 as written)
-# ---------------------------------------------------------------------------
-
-SVC_SCHEMA = T.StructType(
-    [
-        T.StructField("uid", T.StringType()),
-        T.StructField("resource_version", T.StringType()),
-        T.StructField("message", T.StringType()),
-    ]
-)
-
-
-def _run_keep_latest(spark, src: str, ckpt: str) -> list[tuple[str, str]]:
-    from k8stream_spark.streaming.stateful import keep_latest_stateful
-
-    stream = spark.readStream.schema(SVC_SCHEMA).json(src)
-    deduped = keep_latest_stateful(
-        stream, key="uid", version_col="resource_version"
-    )
-    emitted: list[tuple[str, str]] = []
-
-    def collect(batch_df, _batch_id):
-        emitted.extend(
-            (r.uid, r.resource_version) for r in batch_df.collect()
-        )
-
-    q = (
-        deduped.writeStream.outputMode("update")
-        .foreachBatch(collect)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(120), "query did not terminate"
-    return emitted
-
-
-def test_keep_latest_drops_out_of_order_older(
-    spark, tmp_path, no_data_batches_off
-):
-    """An OLDER resource_version arriving after a newer one is dropped
-    (the reference's ``cached >= incoming`` string compare, handler.go:111)
-    — the case dropDuplicatesWithinWatermark on (uid, rv) lets through."""
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-
-    _write(src, "b1.json", [
-        {"uid": "A", "resource_version": "5", "message": "m5"},
-        {"uid": "A", "resource_version": "3", "message": "m3"},  # older, same batch
-        {"uid": "B", "resource_version": "2", "message": "m2"},
-    ])
-    out1 = _run_keep_latest(spark, src, ckpt)
-    assert sorted(out1) == [("A", "5"), ("B", "2")]
-
-    # Run 2 (same checkpoint): exact repeat AND an older rv → both dropped;
-    # a newer rv → emitted.
-    _write(src, "b2.json", [
-        {"uid": "A", "resource_version": "5", "message": "m5-dup"},
-        {"uid": "A", "resource_version": "4", "message": "m4-late"},
-        {"uid": "A", "resource_version": "7", "message": "m7"},
-    ])
-    assert _run_keep_latest(spark, src, ckpt) == [("A", "7")]
-
-
-def test_keep_latest_string_compare_quirk(
-    spark, tmp_path, no_data_batches_off
-):
-    """Lexicographic compare as in Go: '9' >= '10' → rv=10 after rv=9 is
-    DROPPED (the pinned reference quirk; batch twin keep_latest_version)."""
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-
-    _write(src, "b1.json", [{"uid": "A", "resource_version": "9", "message": "m9"}])
-    assert _run_keep_latest(spark, src, ckpt) == [("A", "9")]
-
-    _write(src, "b2.json", [{"uid": "A", "resource_version": "10", "message": "m10"}])
-    assert _run_keep_latest(spark, src, ckpt) == []
 
 
 def test_anomaly_stats_stateful_matches_batch_fold(spark, tmp_path):
@@ -246,10 +99,8 @@ def test_anomaly_batch_stream_null_symmetry(spark):
     """Pins the denominator contract on null-bearing data: batch
     ``anomaly_zscore``'s per-group mean/variance must use n = non-null
     VALUES (what the streaming moment state counts after its null
-    drop), not count(1)-over-rows.  Before r10 the batch operator used
-    count(1) — a mean biased low by the null count — and the
-    divergence was only documented in a comment; this test fails if a
-    future symmetry refactor flips either side."""
+    drop), not count(1)-over-rows, which would bias the mean low by the
+    null count.  Fails if a symmetry refactor flips either side."""
     from k8stream_spark.analytics.events import anomaly_zscore
 
     rows = [
@@ -282,8 +133,8 @@ def test_anomaly_batch_stream_null_symmetry(spark):
     # Single-row group b: zero variance → z pins to 0, no flag.
     assert out[5].z_micro == 0 and out[5].is_anomaly is False
     # Zero-variance group c: non-null rows pin to 0, but the NULL row
-    # must short-circuit to NULL before the variance guard (r10 review:
-    # the otherwise(0.0) arm scored it as a definite non-anomaly).
+    # must short-circuit to NULL before the variance guard (else the
+    # otherwise(0.0) arm scores it as a definite non-anomaly).
     assert out[6].z_micro == 0 and out[6].is_anomaly is False
     assert out[8].z_micro is None and out[8].is_anomaly is None
 
@@ -337,66 +188,6 @@ def test_histogram_bins_stateful_matches_batch_bins(spark, tmp_path):
     for t, v in batch1 + batch2:
         b = math.floor(v / 0.01)
         want[(t, b)] = want.get((t, b), 0) + 1
-    assert latest == want
-
-
-def test_cms_counters_stateful_matches_batch_sketch(spark, tmp_path):
-    """Streaming CMS counter state after draining a document stream
-    equals the batch sketch's counter table over the same corpus — the
-    batch/stream symmetry contract, plus cross-restart accumulation
-    (second run adds to the first run's counters via the checkpoint)."""
-    import hashlib
-    from collections import Counter
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from k8stream_spark.streaming.stateful import cms_counters_stateful
-
-    schema = T.StructType([T.StructField("text", T.StringType())])
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    batch1 = ["a b c a", "b c d"]
-    batch2 = ["a e a"]
-
-    latest: dict[tuple[int, int], int] = {}
-
-    def run(files_written: bool) -> None:
-        stream = spark.readStream.schema(schema).json(src)
-        toks = stream.where(F.col("text").isNotNull()).select(
-            F.explode(F.split("text", " ")).alias("token")
-        )
-        counters = cms_counters_stateful(toks)
-
-        def collect(batch_df, _bid):
-            for r in batch_df.collect():
-                latest[(r.row_id, r.bucket)] = r.bucket_sum
-
-        q = (
-            counters.writeStream.outputMode("update")
-            .foreachBatch(collect)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(120), "query did not terminate"
-
-    _write(src, "b1.json", [{"text": t} for t in batch1])
-    run(True)
-    _write(src, "b2.json", [{"text": t} for t in batch2])
-    run(True)
-
-    # python replica of the batch counter table over batch1+batch2
-    tf = Counter()
-    for t in batch1 + batch2:
-        tf.update(t.split(" "))
-    want: dict[tuple[int, int], int] = {}
-    for tok, n in tf.items():
-        for j in range(4):
-            b = int(
-                hashlib.md5(f"cms-v1:{j}:{tok}".encode()).hexdigest()[:8], 16
-            ) % 64
-            want[(j, b)] = want.get((j, b), 0) + n
     assert latest == want
 
 
@@ -498,8 +289,7 @@ def test_content_gate_ttl_rearms_on_unchanged_receipt(
     unchanged one) re-arms the TTL deadline, so a third unchanged
     crawl arriving past ttl-from-first-sight but within
     ttl-from-last-receipt is still suppressed, never spuriously
-    re-emitted as 'added'.  Regression test for the emit-only re-arm
-    defect (ADVICE r10/r11)."""
+    re-emitted as 'added' (an emit-only re-arm would re-emit it)."""
     src = str(tmp_path / "src")
     ckpt = str(tmp_path / "ckpt")
     ttl = 20

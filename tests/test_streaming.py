@@ -245,22 +245,20 @@ def _write_services(path: str) -> None:
 def test_unified_pipeline_unions_both_streams(
     spark, objects_df, nodes_df, tmp_path
 ):
-    from k8stream_spark.streaming.pipeline import run_unified_pipeline
-
     ev_src = str(tmp_path / "ev_src")
     svc_src = str(tmp_path / "svc_src")
     _write_events(ev_src)
     _write_services(svc_src)
     sink = MemorySink()
-    q = run_unified_pipeline(
+    q = run_pipeline(
         spark,
         ev_src,
-        svc_src,
         objects_df,
         nodes_df,
         sink_fn=sink_foreach_batch(sink, uid="unified-run"),
         checkpoint_dir=str(tmp_path / "ckpt-unified"),
         available_now=True,
+        service_source_dir=svc_src,
     )
     q.awaitTermination(120)
     assert not q.isActive
@@ -321,26 +319,24 @@ def test_streaming_windowed_aggregation_with_watermark(spark, tmp_path):
 def test_unified_pipeline_on_informer_sources(
     spark, objects_df, nodes_df, tmp_path
 ):
-    """Both streams of the unified pipeline read through the custom
+    """Both streams of the pipeline read through the custom
     k8s_informer source (event AND service kinds) — same output as the
     file-source binding."""
-    from k8stream_spark.streaming.pipeline import run_unified_pipeline
-
     ev_src = str(tmp_path / "ev_src")
     svc_src = str(tmp_path / "svc_src")
     _write_events(ev_src)
     _write_services(svc_src)
     sink = MemorySink()
-    q = run_unified_pipeline(
+    q = run_pipeline(
         spark,
         ev_src,
-        svc_src,
         objects_df,
         nodes_df,
         sink_fn=sink_foreach_batch(sink, uid="unified-informer"),
         checkpoint_dir=str(tmp_path / "ckpt-ui"),
         available_now=True,
         source_format="informer",
+        service_source_dir=svc_src,
     )
     q.awaitTermination(120)
     assert not q.isActive
@@ -508,8 +504,8 @@ def test_rag_ingest_streaming_chunking(spark, tmp_path):
     """RAG-ingest in streaming form: hashed-linear quality gate →
     overlapping chunking, both stateless codegen projections, composed
     directly on a streaming frame — and the streamed chunks are
-    IDENTICAL to running the same operators in batch (the symmetry
-    claim, r7 doc-ops edition)."""
+    IDENTICAL to running the same operators in batch (the batch/stream
+    symmetry claim)."""
     import json as _json
 
     from pyspark.sql import functions as F
