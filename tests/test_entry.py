@@ -119,7 +119,7 @@ def test_j5_count_equals_reverse_index_set_size(spark):
 # An oracle output column whose DuckDB type has no Spark twin hashes
 # red even when the values are identical: a bare SUM(BIGINT) is HUGEINT
 # (int128), and DECIMAL survives ROUND/means — both canonicalize
-# differently from Spark's bigint/double in the driver's value hash.
+# differently from Spark's bigint/double in the oracle value hash.
 # Bind every oracle through DuckDB and reject the types at test time,
 # not grading time.
 FORBIDDEN_ORACLE_TYPES = ("HUGEINT", "UHUGEINT", "DECIMAL")

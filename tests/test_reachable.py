@@ -4,7 +4,7 @@ named below with the reason it stays.
 Spark-free: the package and its callers are parsed with ``ast``, never
 imported.  A def is live when its name appears (as a name or an
 attribute) in a root, or in the body of a live def.  The roots are the
-driver contract (``__spark_entry__.py``), ``bench.py``, ``scripts/``,
+entry module (``__spark_entry__.py``), ``bench.py``, ``scripts/``,
 ``perfbench/`` and the package's own module-level code, less its
 imports and ``__all__`` lists: a re-export calls nothing.  Matching by
 bare name over-approximates liveness, so a live def is never reported.
