@@ -2398,7 +2398,8 @@ def _changed_since_grade(reg: dict, graded: dict) -> set[str]:
 
     * its ``_q_`` function's source segment — or any entry-module
       helper it transitively calls — differs, or
-    * any owning ``k8stream_spark`` module file's git blob differs.
+    * the git blob of any ``k8stream_spark`` module file that function
+      or one of those helpers references differs.
 
     Stale queries re-enter the red-first class in ``queries()`` and are
     re-graded the same round the change lands; the flag self-heals once
@@ -2424,14 +2425,22 @@ def _changed_since_grade(reg: dict, graded: dict) -> set[str]:
                 if green and rnd > 0 and n in reg
             }
         )
+        closure_by_name = {
+            name: _entry_fn_closure(fn, cur_fns)
+            for name, fn in reg.items()
+            if getattr(fn, "__name__", "") in cur_fns
+        }
+        # a query owns the modules of every entry helper it reaches
+        # (``_k8s_events`` -> load_table), not just its own ``_q_`` body
+        owned_by_name = {
+            name: set().union(
+                *(_owned_paths(cur_fns[f.__name__], alias_paths) for f in fns)
+            )
+            for name, fns in closure_by_name.items()
+        }
         # every module file any query could own: top-level aliases PLUS
         # in-function import targets (the ls-tree batch must cover both,
         # or an uncovered path reads as 'changed' forever)
-        owned_by_name = {
-            name: _owned_paths(cur_fns[fname], alias_paths)
-            for name, fn in reg.items()
-            if (fname := getattr(fn, "__name__", "")) in cur_fns
-        }
         all_paths = set(alias_paths.values()).union(*owned_by_name.values())
         old: dict[int, tuple[dict[str, str], dict[str, str]] | None] = {}
         blob_now: dict[str, str] = {}
@@ -2450,17 +2459,15 @@ def _changed_since_grade(reg: dict, graded: dict) -> set[str]:
             if not green or rnd == 0 or old.get(rnd) is None:
                 continue  # red/never-graded already re-grades first
             old_fns, old_blobs = old[rnd]
-            fname = getattr(fn, "__name__", "")
-            if fname not in cur_fns:
+            if name not in closure_by_name:
                 continue  # not a top-level def -> cannot track
             changed = False
-            for f in _entry_fn_closure(fn, cur_fns):
-                fnm = getattr(f, "__name__", "")
-                if cur_fns.get(fnm) != old_fns.get(fnm):
+            for f in closure_by_name[name]:
+                if cur_fns.get(f.__name__) != old_fns.get(f.__name__):
                     changed = True
                     break
             if not changed:
-                for p in owned_by_name.get(name, ()):
+                for p in owned_by_name[name]:
                     if p not in blob_now:
                         blob_now[p] = _blob_now(p)
                     if old_blobs.get(p) != blob_now[p]:

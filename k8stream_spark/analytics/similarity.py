@@ -1,24 +1,36 @@
 """Similarity search over the ``embeddings`` table (ARRAY<FLOAT>, dim 64).
 
-Two paths, same contract (top-k cosine neighbors per query vector):
+One cosine formula everywhere: ``_dot(a, b, dim) / (na · nb)`` with
+``na = sqrt(_dot(a, a, dim))`` computed once per row — the left-to-right
+fold DuckDB's ``list_dot_product`` repeats, so every oracle replays the
+same doubles.  ``_dot`` is the sole pair-scoring kernel; the driver-side
+``np.einsum``/matmul calls below work on integer-quantized vectors
+(bucketing, cell assignment, PQ codes) and never score a pair.
 
-  * ``cosine_topk`` — brute-force baseline.  The query set is broadcast
-    (it's tiny); every embedding row computes k dot products via
-    ``zip_with`` + ``aggregate`` (JVM-side fold, no Python), then a
-    per-query ``row_number`` keeps the top k.  Linear scan: correct at any
-    scale, O(n·q) work — the right baseline and the right *verifier*.
+The paths, all with the same top-k / pair contract:
 
-  * ``cosine_topk_lsh`` — the 100 TB path: random-hyperplane LSH.
-    Deterministic pseudo-random hyperplanes (sha256-derived literal
-    weights, so no RNG state and plans are reproducible) map each vector
-    to ``tables`` independent b-bit bucket keys; candidates are generated
-    by equi-join on the bucket key, then exact-cosine reranked and
-    top-k'd.  The join shuffles on the bucket key — never a cartesian
-    product.
+  * exact baselines — ``cosine_topk``, ``cosine_near_dup_pairs``,
+    ``knn_graph_mutual``: broadcast query panel or diagonal self-join,
+    O(n·q) / O(n²); the verifiers the approximate paths are measured
+    against.
+  * LSH — ``cosine_topk_lsh``, ``cosine_near_dup_lsh``,
+    ``knn_graph_mutual_lsh``: deterministic integer hyperplanes
+    (``bucket_keys``) map each vector to ``tables`` b-bit bucket keys;
+    one candidate stage (``_lsh_candidates``) builds them, candidates
+    come from an equi-join on the bucket key (never a cartesian
+    product) and are scored exactly.
+  * IVF — ``cosine_topk_ivf``: an integer-exact sample-trained k-means
+    quantizer; each query probes its nearest cells and exact-reranks
+    their members.
+  * PQ — ``pq_encode``, ``pq_adc_topk``, ``ivf_pq_topk``: product
+    quantization codes scored in the compressed domain (ADC).
+  * graph — ``knn_graph_mutual[_lsh]`` edges feeding
+    ``semantic_clusters_knn[_lsh]`` through the shared
+    connected-components fixpoint.
 
-Floats: all math is done in DOUBLE after an explicit cast; cosine is
-rounded to 6 dp before ranking so Spark and the DuckDB oracle rank
-identically.
+Floats: all math is done in DOUBLE after an explicit cast; thresholds
+test the unrounded cosine, and cosine is rounded to 6 dp before ranking
+and output so Spark and the DuckDB oracle rank identically.
 """
 
 from __future__ import annotations
@@ -41,6 +53,10 @@ def _dot(a: Column, b: Column, dim: int | None = None) -> Column:
     wider embeddings pass; ``_vec_checked`` rejects shorter ones), or
     over all ``size(a)`` elements when ``dim`` is None.  ``_dot(a, a)``
     is the squared L2 norm.
+
+    The module's sole pair-scoring kernel: every cosine here is
+    ``_dot(a, b, dim) / (na · nb)`` with ``na = sqrt(_dot(a, a, dim))``
+    per row, computed in a projection after the candidate equi-joins.
 
     A 64-term unrolled element_at-product chain falls out of
     whole-stage codegen on Spark 4 (hugeMethodLimit) and evaluates
@@ -238,7 +254,7 @@ def _maybe_broadcast(df: DataFrame, n_rows: int) -> DataFrame:
 
 
 #: Auto-tune defaults for the IVF probe count — the nprobe analogue
-#: of the LSH bits/tables law.  With the sample quantizer's
+#: of the LSH bits/tables law.  With the IVF quantizer's
 #: ``nlist ~ sqrt(n)/2`` default, a FIXED nprobe is a shrinking probed
 #: fraction, and on the isotropic fixture recall tracks that fraction
 #: almost exactly (measured, scripts/ivf_nprobe_sweep.py: frac 0.36 →
@@ -420,26 +436,6 @@ def _spread(df: DataFrame, *cols: Column | str) -> DataFrame:
     return df.repartition(n_parts, *cols)
 
 
-def with_unit_vectors(
-    df: DataFrame, vec_col: str = "embedding", dim: int | None = None
-) -> DataFrame:
-    """Pre-normalize to unit length (cast to double) so cosine becomes a
-    plain dot product downstream — normalize once, reuse in every query.
-
-    The norm is computed in its own projection stage so it evaluates once
-    per row (an inline norm inside the division lambda would re-run the
-    whole fold per element); ``dim`` is ``_dot``'s prefix length."""
-    v = F.transform(
-        _vec_checked(F.col(vec_col), dim), lambda x: x.cast("double")
-    )
-    staged = df.withColumn("__vd", v).withColumn(
-        "__n", F.sqrt(_dot(F.col("__vd"), F.col("__vd"), dim))
-    )
-    return staged.withColumn(
-        "__unit", F.transform(F.col("__vd"), lambda x: x / F.col("__n"))
-    ).drop("__vd", "__n")
-
-
 def cosine_topk(
     embeddings: DataFrame,
     query_ids: tuple[int, ...],
@@ -560,6 +556,90 @@ def bucket_keys(
     return keys(vec)
 
 
+def _lsh_candidates(
+    embeddings: DataFrame,
+    vec_col: str,
+    id_col: str,
+    dim: int,
+    tables: int | None,
+    bits: int | None,
+) -> tuple[DataFrame, int, DataFrame]:
+    """The one LSH candidate stage of ``cosine_topk_lsh``,
+    ``cosine_near_dup_lsh`` and ``knn_graph_mutual_lsh``.
+
+    Returns ``(base, n_rows, bucketed)``: ``base`` is the persisted
+    (``__id``, raw double ``__v``, its norm ``__n``) frame, ``n_rows``
+    its count (which also drives the ``_auto_lsh_params`` auto-tune and
+    the rejoin broadcast gate), and ``bucketed`` the persisted
+    (``__id``, ``__bkt``) explode of ``bucket_keys``.  Buckets come from
+    the RAW doubles: they are exactly what the DuckDB oracle quantizes,
+    so candidate generation is bit-identical across engines.  Both
+    frames stay persisted for the caller's lazy result; release them
+    with ``unpersist`` or ``spark.catalog.clearCache()``."""
+    _check_lsh_params(tables, bits)
+    base = embeddings.select(
+        F.col(id_col).alias("__id"),
+        F.transform(
+            _vec_checked(F.col(vec_col), dim), lambda x: x.cast("double")
+        ).alias("__v"),
+    ).withColumn(
+        "__n", F.sqrt(_dot(F.col("__v"), F.col("__v"), dim))
+    ).persist()
+    n_rows = base.count()
+    if tables is None:
+        bits, tables = _auto_lsh_params(n_rows)
+    bucketed = base.select(
+        "__id",
+        F.explode(bucket_keys(F.col("__v"), dim, tables, bits)).alias("__bkt"),
+    ).persist()
+    # Materialize before the self-join: within one action the two join
+    # branches would otherwise race the unpopulated cache and each
+    # compute the bucketing from scratch.
+    bucketed.count()
+    return base, n_rows, bucketed
+
+
+def _lsh_scored_pairs(
+    base: DataFrame, n_rows: int, bucketed: DataFrame, dim: int
+) -> DataFrame:
+    """Candidate pairs (``id_a`` < ``id_b``) sharing a bucket, with their
+    UNROUNDED cosine ``__cos`` — the scored pair frame
+    ``cosine_near_dup_lsh`` thresholds and ``knn_graph_mutual_lsh`` ranks.
+
+    The pair dedup runs on the 16-byte id pairs before any vector is
+    rejoined (deduping with vectors attached would shuffle ~1 KB per
+    candidate).  The rejoin broadcast is size-gated
+    (``_maybe_broadcast``): unhinted, a vector frame just over AQE's
+    10 MB line demotes both rejoins to shuffle joins of the
+    candidate-pair frame.  The cosine is computed after the equi-joins,
+    never in a join condition."""
+    cand = (
+        bucketed.select(F.col("__id").alias("id_a"), "__bkt")
+        .join(bucketed.select(F.col("__id").alias("id_b"), "__bkt"), "__bkt")
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+    )
+    va = base.select(
+        F.col("__id").alias("id_a"),
+        F.col("__v").alias("__va"),
+        F.col("__n").alias("__na"),
+    )
+    vb = base.select(
+        F.col("__id").alias("id_b"),
+        F.col("__v").alias("__vb"),
+        F.col("__n").alias("__nb"),
+    )
+    cos = _dot(F.col("__va"), F.col("__vb"), dim) / (
+        F.col("__na") * F.col("__nb")
+    )
+    return (
+        cand.join(_maybe_broadcast(va, n_rows), "id_a")
+        .join(_maybe_broadcast(vb, n_rows), "id_b")
+        .select("id_a", "id_b", cos.alias("__cos"))
+    )
+
+
 def cosine_topk_lsh(
     embeddings: DataFrame,
     query_ids: tuple[int, ...],
@@ -583,23 +663,9 @@ def cosine_topk_lsh(
     explicitly to pin a regime (the DuckDB oracle replays the same
     auto-tune rule, so the defaults stay hash-checkable at any SF).
     """
-    _check_lsh_params(tables, bits)
-    vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    base = embeddings.select(
-        F.col(id_col).alias("__id"), vec_d.alias("__v")
-    ).persist()
-    # one action on the persisted base — warms the cache the downstream
-    # self-join needs materialized anyway; n also gates the rejoin
-    # broadcast below
-    n_rows = base.count()
-    if tables is None:
-        bits, tables = _auto_lsh_params(n_rows)
-    bucketed = base.select(
-        "__id",
-        F.explode(bucket_keys(F.col("__v"), dim, tables, bits)).alias("__bkt"),
-    ).persist()
-    # materialize before self-join (see cosine_near_dup_lsh)
-    bucketed.count()
+    base, n_rows, bucketed = _lsh_candidates(
+        embeddings, vec_col, id_col, dim, tables, bits
+    )
     q = bucketed.where(F.col("__id").isin(*query_ids)).select(
         F.col("__id").alias("query_id"), "__bkt"
     )
@@ -612,13 +678,16 @@ def cosine_topk_lsh(
         .select("query_id", "__id")
         .distinct()
     )
-    qv = base.select(F.col("__id").alias("query_id"), F.col("__v").alias("__q"))
+    qv = base.select(
+        F.col("__id").alias("query_id"),
+        F.col("__v").alias("__q"),
+        F.col("__n").alias("__nq"),
+    )
     cand = cand.join(
         F.broadcast(qv.where(F.col("query_id").isin(*query_ids))), "query_id"
     ).join(_maybe_broadcast(base, n_rows), "__id")
-    cos = _dot(F.col("__q"), F.col("__v")) / (
-        F.sqrt(_dot(F.col("__q"), F.col("__q")))
-        * F.sqrt(_dot(F.col("__v"), F.col("__v")))
+    cos = _dot(F.col("__q"), F.col("__v"), dim) / (
+        F.col("__nq") * F.col("__n")
     )
     scored = cand.withColumn("cosine", F.round(cos, 6))
     w = Window.partitionBy("query_id").orderBy(
@@ -695,99 +764,18 @@ def cosine_near_dup_lsh(
 
     ``tables``/``bits`` default to the corpus-size auto-tune (see
     ``cosine_topk_lsh`` — same ``_auto_lsh_params`` law, same oracle
-    replay), keyed off one count of the persisted unit-vector base.
-
-    Shuffle discipline for the candidate set (the part that explodes at
-    scale): the pair dedup runs on (id_a, id_b) ONLY — 16 bytes per row —
-    and the vectors are joined back afterwards from the persisted,
-    pre-normalized base.  Deduping with vectors attached would shuffle
-    ~1 KB per candidate; verification is the Arrow-batched ``pair_cos``
-    einsum UDF (see the inline note below for why it beats the unrolled
-    codegen expression here).
+    replay).  Every verified pair carries the exact baseline's cosine:
+    the same ``dot / (na · nb)`` expression, thresholded unrounded and
+    rounded 6 dp only for output (``_lsh_scored_pairs``).
     """
-    _check_lsh_params(tables, bits)
-    norm_d = with_unit_vectors(embeddings, vec_col, dim=dim).select(
-        F.col(id_col).alias("__id"), F.col("__unit").alias("__u")
-    ).persist()
-    n_rows = norm_d.count()
-    if tables is None:
-        bits, tables = _auto_lsh_params(n_rows)
-    # Bucket the RAW vector (hyperplane signs are scale-invariant, so the
-    # buckets are the same as for the unit vector) — the raw doubles are
-    # exactly what the DuckDB oracle quantizes, keeping candidate
-    # generation bit-identical across engines; the normalized copy would
-    # re-introduce float-division noise before quantization.
-    raw = embeddings.select(
-        F.col(id_col).alias("__id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__v"),
+    base, n_rows, bucketed = _lsh_candidates(
+        embeddings, vec_col, id_col, dim, tables, bits
     )
-    bucketed = raw.select(
-        "__id",
-        F.explode(bucket_keys(F.col("__v"), dim, tables, bits)).alias("__bkt"),
-    ).persist()
-    # Materialize before the self-join: within one action the two join
-    # branches would otherwise race the unpopulated cache and each compute
-    # the bucketing (and the normalization under it) from scratch.
-    bucketed.count()
-    a = bucketed.select(F.col("__id").alias("id_a"), "__bkt")
-    b = bucketed.select(F.col("__id").alias("id_b"), "__bkt")
-    cand = (
-        a.join(b, "__bkt")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    va = norm_d.select(F.col("__id").alias("id_a"), F.col("__u").alias("__ua"))
-    vb = norm_d.select(F.col("__id").alias("id_b"), F.col("__u").alias("__ub"))
-
-    # The ids-only distinct before the vector rejoin measured faster than
-    # deduping after verification (the cross-table duplicate factor makes
-    # re-verification cost more than the 16-byte/row shuffle it saves).
-    # The rejoin broadcast is size-gated (_maybe_broadcast): at sf1 the
-    # unit-vector frame is one byte over AQE's 10 MB line, and the
-    # silent demotion to TWO shuffle joins of the ~n^1.625-row pair
-    # frame measured 86 s vs 23 s; past _BCAST_VEC_ROWS the rejoin is
-    # a legitimate shuffle join on the id (the 100 TB case).
     return (
-        cand.join(_maybe_broadcast(va, n_rows), "id_a")
-        .join(_maybe_broadcast(vb, n_rows), "id_b")
-        .withColumn("__cos", _pair_cos(F.col("__ua"), F.col("__ub")))
+        _lsh_scored_pairs(base, n_rows, bucketed, dim)
         .where(F.col("__cos") >= threshold)
         .select("id_a", "id_b", F.round(F.col("__cos"), 6).alias("cosine"))
     )
-
-
-def _pair_cos(a: Column, b: Column) -> Column:
-    """Verification dot as an Arrow-batched einsum over pre-normalized
-    unit vectors: an unrolled expression filter gets pushed into the
-    join as a 128-term condition, which falls out of whole-stage codegen
-    and evaluates interpreted (measured 4× slower end-to-end).  The UDF
-    keeps the joins as plain equi-joins and verifies a whole Arrow batch
-    per numpy call.  Shared by LSH near-dup and the IVF rerank.  (A
-    factory, not a module-level @pandas_udf: decoration needs an active
-    SparkSession, which doesn't exist at import time.)
-
-    Marked ``asNondeterministic``: the consumers all
-    follow the ``withColumn("__cos", …).where(__cos >= t)`` shape, and
-    the optimizer pushes that filter below the projection by DUPLICATING
-    the deterministic UDF — the before-plan for emb_cosine_near_dup_lsh
-    shows two ArrowEvalPython nodes for one ``pair_cos`` call (every
-    candidate pair paid the Arrow round-trip + einsum twice).  The
-    function is pure; the flag is only an optimizer fence, and each call
-    site filters exclusively on columns computed BEFORE this one, so no
-    legitimate pushdown is lost."""
-
-    @pandas_udf("double")
-    def pair_cos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        if va.empty:
-            return pd.Series([], dtype=float)
-        return pd.Series(
-            np.einsum(
-                "ij,ij->i", np.vstack(va.to_numpy()), np.vstack(vb.to_numpy())
-            )
-        )
-
-    return pair_cos.asNondeterministic()(a, b)
 
 
 #: Per-coordinate quantization scale for the integer-exact IVF quantizer:
@@ -1084,7 +1072,6 @@ def cosine_topk_ivf(
     dim: int = 64,
     nlist: int | None = None,
     nprobe: int | None = None,
-    quantizer: str = "sample",
 ) -> DataFrame:
     """Approximate cosine top-k via IVF (inverted-file index): a KMeans
     coarse quantizer partitions the vectors into ``nlist`` cells; each
@@ -1105,144 +1092,84 @@ def cosine_topk_ivf(
     SCALE_CLUSTERED.json).  The DuckDB oracle replays the identical
     integer statistic and law from the training-replay CTEs.
 
-    Quantizer options (both deterministic; candidate generation is an
-    equi-join on the cell id either way, and the centroid matrix is the
-    only driver-side state beyond the query vectors):
+    The quantizer is INTEGER-EXACT spherical-assignment k-means trained
+    on a bounded hash-selected sample (``_sample_kmeans_int``), with
+    assignment via one Arrow-batched integer matmul: the FAISS pattern
+    (training is O(sample) however big the table) with every boundary
+    decision made on exact integers, so the oracle replays the whole
+    pipeline bit-for-bit — cell seeds, Lloyd rounds, final assignment,
+    probe order — the way the hyperplane-LSH queries do
+    (``bucket_keys``).  Candidate generation is an equi-join on the cell
+    id; the centroid matrix is the only driver-side state beyond the
+    query vectors.
 
-    * ``"sample"`` (default) — INTEGER-EXACT spherical-assignment
-      k-means trained on a bounded hash-selected sample
-      (``_sample_kmeans_int``), assignment via one Arrow-batched
-      integer matmul.  The FAISS pattern (training is O(sample) however
-      big the table, no ml-fit jobs) with every boundary decision made
-      on exact integers, so a SQL oracle can replay the whole pipeline
-      bit-for-bit — cell seeds, Lloyd rounds, final assignment, probe
-      order — the way the hyperplane-LSH queries do (bucket_keys).
-    * ``"ml"`` — seeded ``pyspark.ml`` KMeans with distributed Lloyd
-      iterations; the fully-distributed alternative when even the
-      training sample shouldn't touch the driver (float centroids,
-      rows-only determinism).
-
-    Same output columns as ``cosine_topk``; recall measured by pytest.
+    Same output columns and cosine as ``cosine_topk``; recall measured
+    by pytest.
     """
-    raw = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    base = with_unit_vectors(embeddings, vec_col, dim=dim).select(
+    base = embeddings.select(
         F.col(id_col).alias("__id"),
-        raw.alias("__x"),
-        F.col("__unit").alias("__u"),
+        F.transform(
+            _vec_checked(F.col(vec_col), dim), lambda x: x.cast("double")
+        ).alias("__x"),
     )
     n_rows = base.count()
     if nlist is None:
         nlist = max(4, int(n_rows ** 0.5 / 2))
 
-    if quantizer == "sample":
-        # Sample-trained integer-exact k-means + distributed argmax
-        # assignment: no pyspark.ml fit jobs at all.  The centroid matrix
-        # (nlist × dim, int64) broadcasts in the UDF closure; assignment
-        # is one Arrow-batched matmul pass over the table.  Assignment
-        # and probing run on the RAW vector (argmax over cells of
-        # dot(x,c)/|c| is invariant to |x|); the unit vector only feeds
-        # the float rerank.
-        base = base.persist()
-        centers, Xs = _sample_kmeans_int(
-            base, nlist, n_rows, return_sample=True
+    # The centroid matrix (nlist × dim, int64) broadcasts in the UDF
+    # closure.  Assignment and probing run on the RAW vector (argmax
+    # over cells of dot(x,c)/|c| is invariant to |x|).
+    base = base.persist()
+    centers, Xs = _sample_kmeans_int(base, nlist, n_rows, return_sample=True)
+    if nprobe is None:
+        # Structure-aware default — the training sample's top1−top2
+        # margin decides the probed fraction (oracle replays the
+        # identical integer statistic + law).
+        nprobe = _auto_nprobe(
+            nlist, n_rows, _ivf_sample_margin_micro(Xs, centers)
         )
-        if nprobe is None:
-            # Structure-aware default — the training sample's
-            # top1−top2 margin decides the probed fraction (oracle
-            # replays the identical integer statistic + law).
-            nprobe = _auto_nprobe(
-                nlist, n_rows, _ivf_sample_margin_micro(Xs, centers)
-            )
-        assigned = base.withColumn(
-            "__cell", _int_cell_assigner(centers)(F.col("__x"))
-        ).persist()
-        assigned.count()  # materialize before the probe join
-        base.unpersist()
-        qrows = assigned.where(F.col("__id").isin(*query_ids)).collect()
-        # Probe order: exact-integer cosine, ties -> smallest cell
-        # (stable argsort) — the same deterministic order the oracle's
-        # window rank produces.
-        probes = [
-            (int(row["__id"]), int(cell))
-            for row in qrows
-            for cell in np.argsort(
-                -_int_cos_matrix(
-                    _quantize_ivf(
-                        np.asarray([row["__x"]], dtype=np.float64)
-                    ),
-                    centers,
-                )[0],
-                kind="stable",
-            )[: min(nprobe, len(centers))]
-        ]
-        return _ivf_probe_rerank(assigned, probes, query_ids, k)
-    else:
-        if nprobe is None:
-            # "ml" quantizer has no integer-exact sample to measure the
-            # structure statistic on — the isotropic worst-case law is
-            # the safe default here.
-            nprobe = _auto_nprobe(nlist, n_rows)
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        # Cache the feature frame: KMeans re-reads its input once per
-        # iteration, and without the persist each pass would recompute
-        # the normalization chain from the parquet scan up.  Few
-        # iterations + random init: the coarse quantizer only needs
-        # cells that roughly follow the data; recall is governed by
-        # nprobe, not centroid polish.
-        feats = base.withColumn("__feat", array_to_vector("__u")).persist()
-        feats.count()
-        model = KMeans(
-            k=nlist,
-            seed=42,
-            maxIter=5,
-            initMode="random",
-            featuresCol="__feat",
-            predictionCol="__cell",
-        ).fit(feats)
-        assigned = (
-            model.transform(feats).select("__id", "__u", "__cell").persist()
-        )
-        assigned.count()  # materialize before the probe join
-        # feats fed the fit and the (now-materialized) assignment;
-        # release it so repeated invocations don't stack dead caches.
-        feats.unpersist()
-        centers = np.vstack([np.asarray(c) for c in model.clusterCenters()])
-        qrows = assigned.where(F.col("__id").isin(*query_ids)).collect()
-        probes = [
-            (int(row["__id"]), int(cell))
-            for row in qrows
-            for cell in np.argsort(
-                -(centers @ np.asarray(row["__u"], dtype=float)),
-                kind="stable",
-            )[: min(nprobe, len(centers))]
-        ]
-        return _ivf_probe_rerank(assigned, probes, query_ids, k)
-
-
-def _ivf_probe_rerank(
-    assigned: DataFrame,
-    probes: list[tuple[int, int]],
-    query_ids: tuple[int, ...],
-    k: int,
-) -> DataFrame:
-    """Shared IVF tail: broadcast the (query, probed-cell) list, equi-join
-    it against the cell assignment for candidates, exact-rerank on the
-    float cosine of pre-normalized unit vectors (rounded 6 dp, rank
-    tie-broken by neighbor id — same conventions as ``cosine_topk``)."""
-    spark = assigned.sparkSession
-    probe_df = spark.createDataFrame(probes, "query_id bigint, __cell int")
-    members = assigned.select("__cell", "__id", "__u")
+    assigned = (
+        base.withColumn("__cell", _int_cell_assigner(centers)(F.col("__x")))
+        .withColumn("__n", F.sqrt(_dot(F.col("__x"), F.col("__x"), dim)))
+        .persist()
+    )
+    assigned.count()  # materialize before the probe join
+    base.unpersist()
+    qrows = assigned.where(F.col("__id").isin(*query_ids)).collect()
+    # Probe order: exact-integer cosine, ties -> smallest cell (stable
+    # argsort) — the same deterministic order the oracle's window rank
+    # produces.
+    probes = [
+        (int(row["__id"]), int(cell))
+        for row in qrows
+        for cell in np.argsort(
+            -_int_cos_matrix(
+                _quantize_ivf(np.asarray([row["__x"]], dtype=np.float64)),
+                centers,
+            )[0],
+            kind="stable",
+        )[: min(nprobe, len(centers))]
+    ]
+    # Broadcast the (query, probed-cell) list, equi-join it against the
+    # cell assignment for candidates, rerank on the module cosine.
+    probe_df = embeddings.sparkSession.createDataFrame(
+        probes, "query_id bigint, __cell int"
+    )
+    members = assigned.select("__cell", "__id", "__x", "__n")
     qv = members.select(
-        F.col("__id").alias("query_id"), F.col("__u").alias("__q")
+        F.col("__id").alias("query_id"),
+        F.col("__x").alias("__q"),
+        F.col("__n").alias("__nq"),
     ).where(F.col("query_id").isin(*query_ids))
+    cos = _dot(F.col("__q"), F.col("__x"), dim) / (
+        F.col("__nq") * F.col("__n")
+    )
     cand = (
         F.broadcast(probe_df)
         .join(members, "__cell")
         .where(F.col("__id") != F.col("query_id"))
         .join(F.broadcast(qv), "query_id")
-        .withColumn("cosine", F.round(_pair_cos(F.col("__q"), F.col("__u")), 6))
+        .withColumn("cosine", F.round(cos, 6))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("__id").asc()
@@ -2207,67 +2134,24 @@ def knn_graph_mutual_lsh(
     whole pipeline (buckets → candidates → scores → ranks) bit-for-bit,
     so the approximate RESULT is hash-checked, not just bounded.
 
-    Shuffle discipline matches ``cosine_near_dup_lsh``: the candidate
-    dedup runs on 16-byte id pairs before any vector is rejoined.
-    ``tables``/``bits`` default to the same corpus-size auto-tune
-    (``_auto_lsh_params``, oracle-replayed).
+    Candidates and their scores come from the same LSH stage as
+    ``cosine_near_dup_lsh`` (``_lsh_candidates`` + ``_lsh_scored_pairs``:
+    16-byte id-pair dedup before any vector is rejoined, the module
+    cosine); ``tables``/``bits`` default to the same corpus-size
+    auto-tune (``_auto_lsh_params``, oracle-replayed).
     """
-    _check_lsh_params(tables, bits)
-    raw = embeddings.select(
-        F.col(id_col).alias("__id"),
-        F.transform(
-            _vec_checked(F.col(vec_col), dim), lambda x: x.cast("double")
-        ).alias("__v"),
-    ).withColumn(
-        "__n", F.sqrt(_dot(F.col("__v"), F.col("__v"), dim))
-    ).persist()
-    n_rows = raw.count()
-    if tables is None:
-        bits, tables = _auto_lsh_params(n_rows)
-    bucketed = raw.select(
-        "__id",
-        F.explode(bucket_keys(F.col("__v"), dim, tables, bits)).alias("__bkt"),
-    ).persist()
-    # Materialize before the self-join (see cosine_near_dup_lsh: the two
-    # branches would race the unpopulated cache).
-    bucketed.count()
-    cand = (
-        bucketed.select(F.col("__id").alias("id_a"), "__bkt")
-        .join(bucketed.select(F.col("__id").alias("id_b"), "__bkt"), "__bkt")
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+    base, n_rows, bucketed = _lsh_candidates(
+        embeddings, vec_col, id_col, dim, tables, bits
     )
-    va = raw.select(
-        F.col("__id").alias("id_a"),
-        F.col("__v").alias("__va"),
-        F.col("__n").alias("__na"),
-    )
-    vb = raw.select(
-        F.col("__id").alias("id_b"),
-        F.col("__v").alias("__vb"),
-        F.col("__n").alias("__nb"),
-    )
-    # Same scoring expression as the exact baseline (dot / (na·nb), one
-    # dot per pair) — computed in a SELECT after the equi-joins, never
-    # pushed into a join condition (the _pair_cos interpreted-filter
-    # trap).
-    cos = _dot(F.col("__va"), F.col("__vb"), dim) / (
-        F.col("__na") * F.col("__nb")
-    )
-    # size-gated rejoin broadcast — see cosine_near_dup_lsh: unhinted,
-    # a vector frame just over AQE's 10 MB threshold demotes both
-    # rejoins to shuffle joins of the candidate-pair frame
     half = (
-        cand.join(_maybe_broadcast(va, n_rows), "id_a")
-        .join(_maybe_broadcast(vb, n_rows), "id_b")
-        .select("id_a", "id_b", F.round(cos, 6).alias("cosine"))
+        _lsh_scored_pairs(base, n_rows, bucketed, dim)
+        .select("id_a", "id_b", F.round(F.col("__cos"), 6).alias("cosine"))
         .persist()
     )
-    # _mutual_topk materializes eagerly and releases half; raw/bucketed
+    # _mutual_topk materializes eagerly and releases half; base/bucketed
     # are only needed while half computes, so release them here too.
     out = _mutual_topk(half, k)
-    raw.unpersist()
+    base.unpersist()
     bucketed.unpersist()
     return out
 

@@ -97,31 +97,20 @@ def main() -> None:
     )
     spark.catalog.clearCache()
 
-    # cosine LSH: bucket-join candidate pairs
-    norm_d = sim.with_unit_vectors(emb, "embedding", dim=64).select(
-        F.col("vec_id").alias("id"), F.col("__unit").alias("u")
-    ).persist()
-    # same auto-tuned (bits, tables) the production LSH operators pick
-    # at this corpus size (r13), so the audited candidate volume is the
-    # volume the registry queries actually generate
-    bits, tables = sim._auto_lsh_params(norm_d.count())
-    bucketed = norm_d.select(
-        "id",
-        F.explode(sim.bucket_keys(F.col("u"), 64, tables, bits)).alias("bkt"),
-    ).persist()
-    bucketed.count()
-    aa, bb = bucketed.alias("a"), bucketed.alias("b")
-    candp = (
-        aa.join(bb, "bkt")
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id"), F.col("b.id"))
-        .distinct()
-        .count()
+    # cosine LSH: the production candidate stage (raw-vector buckets at
+    # the auto-tuned (bits, tables) for this corpus size), so the audited
+    # volume is the volume the registry queries generate
+    base, n_rows, bucketed = sim._lsh_candidates(
+        emb, "embedding", "vec_id", 64, None, None
     )
+    bits, tables = sim._auto_lsh_params(n_rows)
+    candp = sim._lsh_scored_pairs(base, n_rows, bucketed, 64).count()
+    spark.catalog.clearCache()
     t0 = time.time()
     nl = sim.cosine_near_dup_lsh(emb).count()
     print(
-        f"cosine_lsh: candidates={candp} verified={nl} "
+        f"cosine_lsh ({tables} tables x {bits} bits): candidates={candp} "
+        f"verified={nl} "
         f"time={time.time() - t0:.1f}s"
     )
     spark.catalog.clearCache()
@@ -131,7 +120,7 @@ def main() -> None:
     print(f"ivf: topk_rows={ni} time={time.time() - t0:.1f}s")
     spark.catalog.clearCache()
 
-    # r7 surface: expansion / balance / compression accounting
+    # expansion / balance / compression accounting
     from k8stream_spark.analytics import splits as sp
     from k8stream_spark.analytics import text as ta
 
@@ -151,7 +140,7 @@ def main() -> None:
         f"balance={hi / max(1, lo):.2f} time={time.time() - t0:.1f}s"
     )
 
-    # r7 retrieval layer: how hard the isin prune cuts the exploded token
+    # retrieval layer: how hard the isin prune cuts the exploded token
     # stream before BM25's first shuffle (the whole 100 TB cost model —
     # only docs containing >=1 query term ever reach an exchange).
     from k8stream_spark.analytics import retrieval as rt
@@ -187,7 +176,7 @@ def main() -> None:
     )
     spark.catalog.clearCache()
 
-    # r8 surface: containment fingerprints — how hard mod-p sampling +
+    # containment fingerprints — how hard mod-p sampling +
     # the df-prune cut the inverted index before the pair join.
     t0 = time.time()
     t = F.coalesce(F.col("text"), F.lit(""))

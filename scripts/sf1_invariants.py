@@ -304,10 +304,8 @@ def check_near_dup(ctx: Ctx) -> tuple[bool, str]:
         .join(b, "id_b")
         .where(
             (F.round(exact_cos, 6) != F.col("cosine"))
-            # 1e-9 slack: the operator thresholds the unit-vector
-            # einsum; this recomputes raw-dot/(na*nb) — same value up
-            # to one rounding step (A/B at sf1: identical pair sets)
-            | (exact_cos < F.lit(0.45) - F.lit(1e-9))
+            # the operator thresholds this same raw-dot/(na*nb) double
+            | (exact_cos < F.lit(0.45))
         )
         .count()
     )

@@ -50,7 +50,6 @@ NOT_OPERATORS = {
     "dedup.simhash",  # signature stage of simhash_pairs
     "dedup.word_shingles",  # shingling helper for minhash/jaccard
     "similarity.bucket_keys",  # LSH hyperplane bucketing helper
-    "similarity.with_unit_vectors",  # normalization pre-pass
     "splits.hash_bucket",  # hash-split primitive
     "text.tokens",  # tokenizer expression helper
 }
@@ -181,7 +180,8 @@ def test_staleness_flags_exactly_the_changed_modules(monkeypatch):
     """On a controlled graded tree that differs from HEAD in exactly one
     ``_q_`` source and one owned module blob, the stale set is exactly
     the green names owning either; an unchanged green query and a red
-    owner stay unflagged."""
+    owner stay unflagged.  A second changed blob owned only through an
+    entry helper flags the queries built on that helper."""
     import re
 
     reg = dict(entrymod.queries())
@@ -203,9 +203,11 @@ def test_staleness_flags_exactly_the_changed_modules(monkeypatch):
         assert args == ["show", "GRADED:__spark_entry__.py"], args
         return graded_text
 
+    changed_mods = {changed_mod}
+
     def blobs_at(treeish, paths):
         assert treeish == "GRADED"
-        return {p: ("old" if p == changed_mod else "now") + p for p in paths}
+        return {p: ("old" if p in changed_mods else "now") + p for p in paths}
 
     monkeypatch.setattr(entrymod, "_grade_treeish", lambda rnd: "GRADED")
     monkeypatch.setattr(entrymod, "_git_out", git_out)
@@ -229,6 +231,16 @@ def test_staleness_flags_exactly_the_changed_modules(monkeypatch):
     assert stale == (fn_owners | mod_owners) - {red}
     assert "q1_pricing_summary" in reg
     assert "q1_pricing_summary" not in stale
+
+    # A module reached only through an entry helper is owned too:
+    # p1's ``_q_`` body never names load_table, its ``_k8s_events``
+    # helper does.
+    changed_mods.add("k8stream_spark/sources/fixtures.py")
+    assert "load_table" not in cur_fns[fname("p1_namespace_blacklist")]
+    monkeypatch.setattr(entrymod, "_STALE_CACHE", None)
+    stale2 = entrymod._changed_since_grade(reg, graded)
+    assert "p1_namespace_blacklist" in stale2
+    assert stale <= stale2 and red not in stale2
 
 
 def test_staleness_degrades_to_empty_on_git_failure(monkeypatch):

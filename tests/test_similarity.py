@@ -61,11 +61,13 @@ def test_cosine_near_dup_exact(spark):
 
 def test_cosine_near_dup_lsh_recall(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
-    exact = {(r.id_a, r.id_b) for r in
+    exact = {(r.id_a, r.id_b, r.cosine) for r in
              similarity.cosine_near_dup_pairs(emb, threshold=0.45).collect()}
-    approx = {(r.id_a, r.id_b) for r in
+    approx = {(r.id_a, r.id_b, r.cosine) for r in
               similarity.cosine_near_dup_lsh(emb, threshold=0.45).collect()}
-    assert approx <= exact  # verification makes precision exact
+    # verification makes precision exact, and every verified pair
+    # carries the exact baseline's cosine (one scoring formula)
+    assert approx <= exact
     if exact:
         recall = len(exact & approx) / len(exact)
         assert recall >= 0.5, f"near-dup LSH recall {recall} too low"
@@ -74,11 +76,14 @@ def test_cosine_near_dup_lsh_recall(spark):
 def test_ivf_recall_against_bruteforce(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
     qids = (0, 1, 2, 3, 4)
-    exact = {(r.query_id, r.neighbor_id)
+    exact = {(r.query_id, r.neighbor_id): r.cosine
              for r in similarity.cosine_topk(emb, qids, k=10).collect()}
-    ivf = {(r.query_id, r.neighbor_id)
+    ivf = {(r.query_id, r.neighbor_id): r.cosine
            for r in similarity.cosine_topk_ivf(emb, qids, k=10).collect()}
-    recall = len(exact & ivf) / len(exact)
+    shared = exact.keys() & ivf.keys()
+    # one scoring formula: a shared neighbor carries the same cosine
+    assert {p: ivf[p] for p in shared} == {p: exact[p] for p in shared}
+    recall = len(shared) / len(exact)
     assert recall >= 0.6, f"IVF recall {recall} too low"  # 0.98 measured
 
 
