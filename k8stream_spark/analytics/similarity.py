@@ -546,9 +546,9 @@ def bucket_keys(
             keys_mat[:, t] = k
         return pd.Series(list(keys_mat))
 
-    # NOT marked asNondeterministic (audited): every
-    # caller explodes the key array inline in a single select, and that
-    # shape evaluates the UDF once — verified by executing the bucketed
+    # NOT marked asNondeterministic (audited): the one caller
+    # (``_lsh_candidates``) explodes the key array inline in a single
+    # select, and that shape evaluates the UDF once — verified by executing the bucketed
     # plan pre/post fence (1 ArrowEvalPython both ways; the duplication
     # only bites random_projection's two-select posexplode shape, fenced
     # there).  Leaving the UDF deterministic keeps filter pushdown past
